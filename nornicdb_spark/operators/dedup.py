@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from nornicdb_spark.operators.localframe import literal_df
 
-from nornicdb_spark.operators.scope import CkptScope
+from nornicdb_spark.operators.scope import CkptScope, escape_frame
 
 MERSENNE_P = 2147483647  # 2^31 - 1
 N_PERMS = 32
@@ -600,6 +600,9 @@ def embedding_near_duplicates(
         # unchanged: the planes are seed-fixed and the signature is
         # deterministic, so checkpoint vs recompute is row-identical.
         buckets = lsh.bucketize(e).localCheckpoint(eager=False)
+        # the lazy result plan reads these blocks: deferred release via
+        # the session registry, like every other operator checkpoint
+        escape_frame(buckets)
         cand = (
             buckets.select(F.col("vec_id").alias("a"), "band", "bucket")
             .join(

@@ -20,12 +20,16 @@ so the result schema is exactly the requested one; floats round-trip
 through ``CAST('repr' AS DOUBLE)`` (repr is exact, a bare SQL numeric
 literal would parse as DECIMAL and re-round). Anything the renderer does
 not recognise (datetimes, Decimals, maps, mixed-type columns under
-inference) raises :class:`Unrenderable` so callers can fall back to
+inference, strings needing escapes while
+``spark.sql.parser.escapedStringLiterals`` turns escape processing off)
+raises :class:`Unrenderable` so callers can fall back to
 ``createDataFrame`` — same rows either way, only the execution path
 differs.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame
 
@@ -55,7 +59,10 @@ def _sql_type(dt) -> str:
     raise Unrenderable(s)
 
 
-def _render(v) -> str:
+def _render(v, escapes_off) -> str:
+    """SQL literal for ``v``. ``escapes_off()`` is asked only for strings
+    that need an escape (backslash or quote), so the common path makes no
+    conf round trip."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
@@ -76,9 +83,11 @@ def _render(v) -> str:
             return "CAST('-Infinity' AS DOUBLE)"
         return f"CAST('{f!r}' AS DOUBLE)"
     if isinstance(v, str):
+        if ("\\" in v or "'" in v) and escapes_off():
+            raise Unrenderable("escapedStringLiterals=true")
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     if isinstance(v, (list, tuple)):
-        return "array(" + ", ".join(_render(x) for x in v) + ")"
+        return "array(" + ", ".join(_render(x, escapes_off) for x in v) + ")"
     raise Unrenderable(type(v).__name__)
 
 
@@ -143,8 +152,9 @@ def local_df(spark, data, schema=None) -> DataFrame:
             raise
         except Exception as e:  # not a StructType (e.g. atomic type)
             raise Unrenderable(str(e))
+        # dict rows: a key the row lacks is NULL (createDataFrame's fill)
         rows = [
-            tuple(r[n] for n in names) if isinstance(r, dict) else tuple(r)
+            tuple(r.get(n) for n in names) if isinstance(r, dict) else tuple(r)
             for r in data
         ]
     else:
@@ -185,8 +195,15 @@ def local_df(spark, data, schema=None) -> DataFrame:
     for r in rows:
         if len(r) != len(names):
             raise Unrenderable("ragged row")
+    # read at most once per call, and only if a string needs an escape
+    escapes_off = functools.cache(
+        lambda: spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
+        .strip()
+        .lower()
+        == "true"
+    )
     values = ", ".join(
-        "(" + ", ".join(_render(v) for v in r) + ")" for r in rows
+        "(" + ", ".join(_render(v, escapes_off) for v in r) + ")" for r in rows
     )
     aliases = ", ".join(f"c{i}" for i in range(len(names)))
     return spark.sql(f"SELECT {cols} FROM (VALUES {values}) AS _v({aliases})")

@@ -14,23 +14,24 @@ Layout:
 
 - ``<path>/postings``: (term, doc_id, dl, tf) —
   partitionBy(src_batch, tk), ``tk = pmod(xxhash64(term), n_pk)``.
-  Two partition levels buy two properties at once: a replayed batch_id
-  dynamic-OVERWRITES exactly its own ``src_batch=N/...`` directories
-  (foreachBatch is at-least-once → ingest is idempotent), and an
-  exact-term search pushes a literal ``tk isin`` that prunes to the
+  ``src_batch`` is the replay unit of the shared protocol; ``tk`` lets
+  an exact-term search push a literal ``tk isin`` that prunes to the
   query terms' hash buckets (``PartitionFilters`` — the IVF-PQ /
-  maintained-near-dup probe pattern, plan-tested). Long-running streams
-  accumulate src_batch directories; :meth:`MaintainedBM25Index.compact`
-  folds them back to a bounded ``tk`` set.
-- ``<path>/stats``: (n_docs, n_indexed, sum_dl) partitionBy(batch_id),
-  dynamic overwrite — one row per batch; query-time N = Σ n_docs and
+  maintained-near-dup probe pattern, plan-tested).
+  :meth:`MaintainedBM25Index.compact` folds the src_batch directories
+  back to a bounded ``tk`` set.
+- ``<path>/stats``: (n_docs, n_indexed, sum_dl) partitionBy(batch_id)
+  — one row per batch; query-time N = Σ n_docs and
   avgdl = Σ sum_dl / Σ n_indexed, so corpus stats stay exact as the
   corpus grows (a tiny scan: one row per batch). Removal batches write
   NEGATIVE rows here, so stats stay a pure sum under deletion.
 - ``<path>/docs``: (doc_id, dl) partitionBy(src_batch, dk) — the
   doc-keyed lookup removals need (dk-bucket PartitionFilters).
-- ``<path>/tombstones``: removed docs; every term-pruned probe
-  anti-joins it; compaction drops the docs physically and clears it.
+- ``<path>/tombstones``: removed docs.
+
+Guarded commits, the tombstone side table and the fenced compaction are
+the shared maintained-table protocol, described once on
+``sources/layout.BatchTable``.
 
 Search cost at 100 TB: an exact-term query touches |query terms| hash
 buckets of the postings (≈ q/n_pk of the files) + the row filter on
@@ -47,8 +48,6 @@ job (or a dedicated prefix-key layout).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from nornicdb_spark.operators.localframe import literal_df
@@ -60,6 +59,11 @@ from nornicdb_spark.search.bm25 import (
     tokenize_query,
     tokens_col,
 )
+from nornicdb_spark.sources.layout import (
+    BatchTable,
+    MaintainedIndex,
+    hash_bucket,
+)
 
 __all__ = ["MaintainedBM25Index"]
 
@@ -67,8 +71,11 @@ __all__ = ["MaintainedBM25Index"]
 # (sizing story + cluster retune point live in sources/layout.py)
 from nornicdb_spark.sources.layout import DEFAULT_N_PK as N_PK
 
+def _compacted_era(df: DataFrame, _it: str) -> DataFrame:
+    return df.withColumn("src_batch", F.lit(-2).cast("bigint"))
 
-class MaintainedBM25Index:
+
+class MaintainedBM25Index(MaintainedIndex):
     """Parquet-backed incremental BM25 postings with term-pruned search."""
 
     def __init__(
@@ -79,157 +86,103 @@ class MaintainedBM25Index:
         text_col: str = "text",
         n_pk: int = N_PK,
     ):
-        self.spark = spark
-        self.path = path.rstrip("/")
+        super().__init__(spark, path)
         self.id_col = id_col
         self.text_col = text_col
         self.n_pk = int(n_pk)
-
-    @property
-    def postings_path(self) -> str:
-        return f"{self.path}/postings"
-
-    @property
-    def stats_path(self) -> str:
-        return f"{self.path}/stats"
-
-    @property
-    def docs_path(self) -> str:
+        self.postings = BatchTable(
+            spark, self.path, f"{self.path}/postings",
+            "term string, doc_id {it}, dl int, tf bigint,"
+            " src_batch bigint, tk int",
+            "src_batch", "tk",
+            id_col="doc_id", tombstones="doc_id {it}, dl int, src_batch bigint",
+            by_batch=True,
+        )
         # per-doc (doc_id, dl) side table, partitionBy(src_batch, dk) —
         # the doc-keyed lookup removals need without scanning the
         # term-partitioned postings (dk = doc-id hash bucket, so a
         # removal batch probes only its ids' buckets: PartitionFilters)
-        return f"{self.path}/docs"
+        self.docs = BatchTable(
+            spark, self.path, f"{self.path}/docs",
+            "doc_id {it}, dl int, src_batch bigint, dk int",
+            "src_batch", "dk", by_batch=True,
+        )
+        self.stats = BatchTable(
+            spark, self.path, f"{self.path}/stats",
+            "n_docs bigint, n_indexed bigint, sum_dl bigint, batch_id bigint",
+            "batch_id", by_batch=True,
+        )
+
+    @property
+    def postings_path(self) -> str:
+        return self.postings.path
+
+    @property
+    def stats_path(self) -> str:
+        return self.stats.path
+
+    @property
+    def docs_path(self) -> str:
+        return self.docs.path
 
     @property
     def tombstones_path(self) -> str:
-        return f"{self.path}/tombstones"
-
-    def _read(self, path: str, schema: str) -> DataFrame:
-        from nornicdb_spark.sources.layout import read_or_empty
-
-        return read_or_empty(self.spark, path, schema)
+        return self.postings.tombstones.path
 
     def _tk_col(self):
-        return F.pmod(F.xxhash64("term"), F.lit(self.n_pk)).cast("int")
+        return hash_bucket(self.n_pk, "term")
 
     def _dk_col(self, col):
-        return F.pmod(F.xxhash64(col), F.lit(self.n_pk)).cast("int")
-
-    def _doc_id_type(self) -> str:
-        from nornicdb_spark.sources.layout import stored_col_type
-
-        return (
-            stored_col_type(self.spark, self.postings_path, "doc_id")
-            or "bigint"
-        )
-
-    def _tombstone_ids(self, id_type: str) -> DataFrame:
-        return self._read(
-            self.tombstones_path, f"doc_id {id_type}, dl int, src_batch bigint"
-        ).select("doc_id")
-
-    def _anti_tombstones(self, df: DataFrame, id_type: str) -> DataFrame:
-        """Drop tombstoned doc_ids from a probe slice. No-removals
-        indexes (no tombstone directory) skip the join entirely — the
-        common case keeps the all-broadcast probe plan; with removals
-        pending the tombstone side is broadcast-HINTED (bounded by
-        removals since the last compact — the reference keeps its
-        tombstones in RAM, hnsw_index.go — and compact() clears them)."""
-        import os as _os
-
-        if not _os.path.exists(self.tombstones_path):
-            return df
-        return df.join(
-            F.broadcast(self._tombstone_ids(id_type)), "doc_id", "left_anti"
-        )
+        return hash_bucket(self.n_pk, col)
 
     # -- ingest -------------------------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch body: tokenize → postings append (idempotent via
-        dynamic overwrite of this batch's partitions) → stats row.
-        Out-of-order batch ids (reset checkpoint over an existing index —
-        the dynamic overwrite would silently REPLACE the original
-        batches' postings) are refused via the shared high-water guard."""
-        import os as _os
-
-        from nornicdb_spark.streaming import guard
-
-        guard.check_batch(self.path, batch_id)
-        toks = batch_df.select(
-            F.col(self.id_col).alias("doc_id"),
-            tokens_col(F.col(self.text_col)).alias("tokens"),
-        )
-        # Re-using a REMOVED id before compaction would be silently
-        # eaten: the tombstone anti-join hides the new postings and the
-        # next compact() drops them physically. Refuse loudly — after a
-        # compaction the id is gone everywhere and may be re-used as a
-        # fresh document. (No tombstone directory → free.)
-        if _os.path.exists(self.tombstones_path):
-            id_type = self._doc_id_type()
-            clash = (
-                toks.select("doc_id")
-                .join(F.broadcast(self._tombstone_ids(id_type)), "doc_id",
-                      "left_semi")
-                .limit(1)
-                .count()
+        """foreachBatch body: tokenize → postings + per-doc rows + stats
+        row, a guarded commit of this batch's partitions."""
+        b = F.lit(int(batch_id)).cast("bigint")
+        with self.postings.guarded(batch_id):
+            toks = batch_df.select(
+                F.col(self.id_col).alias("doc_id"),
+                tokens_col(F.col(self.text_col)).alias("tokens"),
             )
-            if clash:
-                raise ValueError(
-                    "ingest batch re-uses a REMOVED doc_id while its "
-                    "tombstone is still pending — the new document would "
-                    "be silently hidden and dropped at the next "
-                    "compaction. Run compact() first; a compacted id may "
-                    "be re-used as a fresh document."
+            self.postings.refuse_removed(
+                toks.select("doc_id"),
+                "ingest batch re-uses a REMOVED doc_id while its "
+                "tombstone is still pending — the new document would "
+                "be silently hidden and dropped at the next "
+                "compaction. Run compact() first; a compacted id may "
+                "be re-used as a fresh document.",
+            )
+            self.postings.write(
+                toks.select(
+                    "doc_id",
+                    F.size("tokens").alias("dl"),
+                    F.explode("tokens").alias("term"),
                 )
-        postings = (
-            toks.select(
-                "doc_id",
-                F.size("tokens").alias("dl"),
-                F.explode("tokens").alias("term"),
+                .groupBy("term", "doc_id", "dl")
+                .agg(F.count(F.lit(1)).alias("tf"))
+                .withColumn("src_batch", b)
+                .withColumn("tk", self._tk_col())
             )
-            .groupBy("term", "doc_id", "dl")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .withColumn("src_batch", F.lit(int(batch_id)).cast("bigint"))
-            .withColumn("tk", self._tk_col())
-        )
-        (
-            postings.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("src_batch", "tk")
-            .parquet(self.postings_path)
-        )
-        # per-doc side table: the doc-keyed (doc_id, dl) lookup
-        # remove_batch probes (dk-bucket PartitionFilters), idempotent
-        # the same way as the postings
-        (
-            toks.select(
-                "doc_id",
-                F.size("tokens").alias("dl"),
-                F.lit(int(batch_id)).cast("bigint").alias("src_batch"),
-                self._dk_col(F.col("doc_id")).alias("dk"),
+            self.docs.write(
+                toks.select(
+                    "doc_id",
+                    F.size("tokens").alias("dl"),
+                    b.alias("src_batch"),
+                    self._dk_col(F.col("doc_id")).alias("dk"),
+                )
             )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("src_batch", "dk")
-            .parquet(self.docs_path)
-        )
-        # corpus stats: N counts EVERY doc (static-index semantics);
-        # avgdl averages docs with ≥1 indexed token
-        stats = toks.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum((F.size("tokens") > 0).cast("long")).alias("n_indexed"),
-            F.sum(
-                F.when(F.size("tokens") > 0, F.size("tokens")).otherwise(0)
-            ).cast("bigint").alias("sum_dl"),
-        ).withColumn("batch_id", F.lit(int(batch_id)).cast("bigint"))
-        (
-            stats.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.stats_path)
-        )
-        guard.record_batch(self.path, batch_id)
+            # corpus stats: N counts EVERY doc (static-index semantics);
+            # avgdl averages docs with ≥1 indexed token
+            self.stats.write(
+                toks.agg(
+                    F.count(F.lit(1)).alias("n_docs"),
+                    F.sum((F.size("tokens") > 0).cast("long")).alias("n_indexed"),
+                    F.sum(
+                        F.when(F.size("tokens") > 0, F.size("tokens")).otherwise(0)
+                    ).cast("bigint").alias("sum_dl"),
+                ).withColumn("batch_id", b)
+            )
 
     def remove_batch(self, ids_df: DataFrame, batch_id: int,
                      id_col: str | None = None) -> None:
@@ -237,206 +190,79 @@ class MaintainedBM25Index:
         fulltext_index.go:85-121 Remove: drop from the inverted index,
         docCount--, avgdl recomputed; unknown ids are a no-op). The
         distributed re-expression is tombstones + NEGATIVE stats rows:
-
-        - ``tombstones``: (doc_id, dl) per removed doc — searches
-          anti-join it; compaction physically drops the docs and clears
-          it (safe in any crash order because stats never read it).
-        - a negative stats row (−n_docs, −n_indexed, −sum_dl) under
-          this batch_id — ``corpus_stats`` stays a PURE sum, so there
-          is no subtract-then-clear crash window anywhere.
-
-        Replay-idempotent like ingest (dynamic overwrite of this
-        batch's partitions; the victims are recomputed identically on
-        re-delivery because same-batch tombstones are not excluded).
-        A doc already removed by an EARLIER batch — or never ingested —
-        contributes nothing (docs-table semi-join + cross-batch
-        tombstone anti-join), so double-removes cannot double-subtract.
-        Shares the ingest guard sequence: removal batches advance the
-        same high-water mark."""
-        from nornicdb_spark.streaming import guard
-
-        guard.check_batch(self.path, batch_id)
-        id_col = id_col or self.id_col
-        id_type = self._doc_id_type()
-        ids = ids_df.select(F.col(id_col).alias("doc_id")).distinct()
-        # bounded collect: the ids' hash buckets (≤ n_pk) → the docs
-        # scan prunes to those dk directories
-        dks = [
-            r.dk
-            for r in ids.select(self._dk_col(F.col("doc_id")).alias("dk"))
-            .distinct()
-            .collect()
-        ]
-        docs = (
-            self._read(
-                self.docs_path,
-                f"doc_id {id_type}, dl int, src_batch bigint, dk int",
+        searches anti-join the tombstoned (doc_id, dl) rows, compaction
+        drops the docs physically, and a negative stats row (−n_docs,
+        −n_indexed, −sum_dl) under this batch_id keeps ``corpus_stats``
+        a PURE sum — no subtract-then-clear crash window anywhere, and
+        a double remove cannot double-subtract."""
+        with self.postings.guarded(batch_id):
+            it = self.postings.id_type()
+            ids = ids_df.select(F.col(id_col or self.id_col).alias("doc_id")).distinct()
+            # bounded collect: the ids' hash buckets (≤ n_pk) → the docs
+            # scan prunes to those dk directories
+            dks = [
+                r.dk
+                for r in ids.select(self._dk_col(F.col("doc_id")).alias("dk"))
+                .distinct()
+                .collect()
+            ]
+            docs = (
+                self.docs.read(it)
+                .filter(F.col("dk").isin(dks))
+                .join(ids, "doc_id", "left_semi")
             )
-            .filter(F.col("dk").isin(dks))
-            .join(ids, "doc_id", "left_semi")
-        )
-        prior = (
-            self._read(
-                self.tombstones_path,
-                f"doc_id {id_type}, dl int, src_batch bigint",
+            victims = self.postings.tombstone(docs, batch_id, it)
+            self.stats.write(
+                victims.agg(
+                    (-F.count(F.lit(1))).cast("bigint").alias("n_docs"),
+                    F.coalesce(-F.sum((F.col("dl") > 0).cast("long")), F.lit(0))
+                    .cast("bigint")
+                    .alias("n_indexed"),
+                    F.coalesce(-F.sum("dl"), F.lit(0)).cast("bigint").alias("sum_dl"),
+                ).withColumn("batch_id", F.lit(int(batch_id)).cast("bigint"))
             )
-            .filter(F.col("src_batch") != int(batch_id))
-            .select("doc_id")
-        )
-        victims = docs.join(prior, "doc_id", "left_anti").select(
-            "doc_id", "dl"
-        )
-        (
-            victims.withColumn(
-                "src_batch", F.lit(int(batch_id)).cast("bigint")
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("src_batch")
-            .parquet(self.tombstones_path)
-        )
-        neg = victims.agg(
-            (-F.count(F.lit(1))).cast("bigint").alias("n_docs"),
-            F.coalesce(-F.sum((F.col("dl") > 0).cast("long")), F.lit(0))
-            .cast("bigint")
-            .alias("n_indexed"),
-            F.coalesce(-F.sum("dl"), F.lit(0)).cast("bigint").alias("sum_dl"),
-        ).withColumn("batch_id", F.lit(int(batch_id)).cast("bigint"))
-        (
-            neg.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.stats_path)
-        )
-        guard.record_batch(self.path, batch_id)
 
     # -- tombstone monitoring (reference hnsw_index.go:399-418) --------------
     def tombstone_ratio(self) -> float:
         """removed / (live + removed) — 0.0 on an empty index (the
         reference's TombstoneRatio contract)."""
-        id_type = self._doc_id_type()
-        removed = self._tombstone_ids(id_type).count()
-        live = self.corpus_stats()[0]
-        total = live + removed
-        return float(removed) / float(total) if total else 0.0
+        return self.postings.tombstone_ratio(lambda _it: self.corpus_stats()[0])
 
     def should_rebuild(self, threshold: float = 0.5) -> bool:
         """True when tombstones exceed ``threshold`` of the index — the
-        reference's 50% rebuild heuristic (hnsw_index.go:415-418); here
-        'rebuild' is :meth:`compact`, which drops the tombstoned docs
-        physically."""
-        return self.tombstone_ratio() > float(threshold)
+        reference's 50% rebuild heuristic; 'rebuild' is :meth:`compact`."""
+        return self.postings.should_rebuild(
+            lambda _it: self.corpus_stats()[0], threshold
+        )
 
     def compact(self, id_type: str | None = None) -> None:
-        """Fold every ingested batch's postings into the compacted era
-        (``src_batch = -2``) — the maintenance job the two-level layout
-        calls for: a long-running stream accumulates one ``src_batch=N``
-        directory per batch; compaction rewrites them into a single
-        bounded set of ``tk`` partitions (searches are src_batch-
-        agnostic, so results are unchanged — tested). MUST run in a
-        maintenance window (stream stopped, checkpoint committed, no
-        replay pending) — and that contract is ENFORCED, not just
-        documented: the guard high-water is advanced past the latest
-        ingested batch BEFORE the fold, so a replay of even that batch
-        (which would re-append its folded postings as a fresh
-        ``src_batch=N`` partition — double-counted df/tf) is refused
-        instead of silently blessed. An interrupted prior compaction is
-        recovered first, so a default-argument re-run performs the
-        restore the crash-recovery error messages promise. The doc-id
-        type is recovered from the stored table when not supplied.
-
-        Tombstoned documents are dropped PHYSICALLY here (postings and
-        docs folds exclude them) and the tombstone table is cleared
-        last — safe in any crash order: corpus stats never read
-        tombstones (removals wrote negative stats rows), so a crash
-        between the folds and the clear leaves only a redundant
-        anti-join against already-absent ids."""
-        from nornicdb_spark.sources.layout import (
-            recover_interrupted_swap,
-            rewrite_partitioned,
-            stored_col_type,
-        )
-        from nornicdb_spark.streaming import guard
-
-        recover_interrupted_swap(self.postings_path)
-        if id_type is None:
-            id_type = stored_col_type(self.spark, self.postings_path, "doc_id")
-            if id_type is None:
-                return  # nothing ingested yet — nothing to compact
-        # Fence BEFORE the folds: a crash after the postings fold but
-        # before the epoch bump would otherwise leave exactly the
-        # latest-batch-replay double-count window the bump exists to
-        # close. A refused replay under the quiesce contract is
-        # harmless; crash-injection-tested.
-        guard.advance_epoch(self.path)
-        tomb = self._tombstone_ids(id_type)
-        rewrite_partitioned(
-            self.spark,
-            self.postings_path,
-            f"term string, doc_id {id_type}, dl int, tf bigint,"
-            " src_batch bigint, tk int",
-            lambda df: df.join(tomb, "doc_id", "left_anti").withColumn(
-                "src_batch", F.lit(-2).cast("bigint")
-            ),
-            "src_batch",
-            "tk",
-        )
-        # fold the per-doc side table the same way (minus tombstoned)
-        import os as _os
-
-        if _os.path.exists(self.docs_path):
-            recover_interrupted_swap(self.docs_path)
-            rewrite_partitioned(
-                self.spark,
-                self.docs_path,
-                f"doc_id {id_type}, dl int, src_batch bigint, dk int",
-                lambda df: df.join(tomb, "doc_id", "left_anti").withColumn(
-                    "src_batch", F.lit(-2).cast("bigint")
+        """Fold every ingested batch's postings and per-doc rows into the
+        compacted era (``src_batch = -2``) minus the tombstoned docs, and
+        the per-batch stats rows into one (removals' negative rows fold
+        in with plain addition) — a fenced fold over all three tables.
+        Searches are src_batch-agnostic, so results are unchanged. The
+        doc-id type is recovered from the stored table when not
+        supplied."""
+        self.postings.fold(
+            _compacted_era,
+            id_type,
+            also=[
+                (self.docs, _compacted_era),
+                (
+                    self.stats,
+                    lambda df, _it: df.agg(
+                        F.sum("n_docs").alias("n_docs"),
+                        F.sum("n_indexed").alias("n_indexed"),
+                        F.sum("sum_dl").alias("sum_dl"),
+                    ).withColumn("batch_id", F.lit(-2).cast("bigint")),
                 ),
-                "src_batch",
-                "dk",
-            )
-        # fold the per-batch stats rows too — a long-running stream
-        # otherwise accumulates one batch_id directory per batch forever
-        # (the sums are what queries read, so one folded row is exact;
-        # removal batches' NEGATIVE rows fold in with plain addition)
-        recover_interrupted_swap(self.stats_path)
-        rewrite_partitioned(
-            self.spark,
-            self.stats_path,
-            "n_docs bigint, n_indexed bigint, sum_dl bigint, batch_id bigint",
-            lambda df: df.agg(
-                F.sum("n_docs").alias("n_docs"),
-                F.sum("n_indexed").alias("n_indexed"),
-                F.sum("sum_dl").alias("sum_dl"),
-            ).withColumn("batch_id", F.lit(-2).cast("bigint")),
-            "batch_id",
-        )
-        # clear tombstones LAST: their docs are physically gone from
-        # the folded postings, and nothing else reads them — a crash
-        # before this line leaves only a harmless no-op anti-join
-        import shutil as _shutil
-
-        _shutil.rmtree(self.tombstones_path, ignore_errors=True)
-
-    def ingest(self, stream_df: DataFrame, query_name: str):
-        """Attach the ingest loop to a document stream; returns the
-        StreamingQuery (caller drives/stops it)."""
-        os.makedirs(self.path, exist_ok=True)
-        return (
-            stream_df.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .queryName(query_name)
-            .start()
+            ],
         )
 
     # -- search --------------------------------------------------------------
     def corpus_stats(self) -> tuple[int, float]:
         """(N, avgdl) aggregated over the per-batch stats rows."""
-        row = self._read(
-            self.stats_path,
-            "n_docs bigint, n_indexed bigint, sum_dl bigint, batch_id bigint",
-        ).agg(
+        row = self.stats.read().agg(
             F.sum("n_docs").alias("n"),
             F.sum("sum_dl").alias("s"),
             F.sum("n_indexed").alias("i"),
@@ -453,18 +279,12 @@ class MaintainedBM25Index:
         tdf = literal_df(self.spark, [(t,) for t in terms], "term string")
         tks = [r.tk for r in tdf.select(self._tk_col().alias("tk")).distinct().collect()]
         pruned = (
-            self._read(
-                self.postings_path,
-                f"term string, doc_id {id_type}, dl int, tf bigint,"
-                " src_batch bigint, tk int",
-            )
+            self.postings.read(id_type)
             .filter(F.col("tk").isin(tks))
             .filter(F.col("term").isin(*terms))
         )
-        # removed docs stop matching immediately (compaction drops them
-        # physically and deletes the tombstone table, restoring the
-        # join-free probe)
-        return self._anti_tombstones(pruned, id_type)
+        # removed docs stop matching immediately
+        return self.postings.drop_tombstoned(pruned, id_type)
 
     def search(
         self, query: str, k: int = 10, id_type: str | None = None
@@ -474,13 +294,7 @@ class MaintainedBM25Index:
         corpus; the scan touches only the query terms' partitions. The
         doc-id type is recovered from the stored table when not given
         (falls back to bigint on a never-ingested index)."""
-        if id_type is None:
-            from nornicdb_spark.sources.layout import stored_col_type
-
-            id_type = (
-                stored_col_type(self.spark, self.postings_path, "doc_id")
-                or "bigint"
-            )
+        id_type = self.postings.id_type(id_type)
         terms = tokenize_query(query)
         if not terms:
             return literal_df(self.spark, [], f"doc_id {id_type}, score double")
@@ -507,13 +321,7 @@ class MaintainedBM25Index:
         the same corpus, which itself equals per-query ``search()`` —
         so the registry twin shares ``bm25_multi_query``'s oracle
         verbatim."""
-        if id_type is None:
-            from nornicdb_spark.sources.layout import stored_col_type
-
-            id_type = (
-                stored_col_type(self.spark, self.postings_path, "doc_id")
-                or "bigint"
-            )
+        id_type = self.postings.id_type(id_type)
         empty = (
             f"query_id bigint, doc_id {id_type}, score double"
         )

@@ -53,9 +53,8 @@ root it points at, so depth is bounded by the number of cross-batch
 merge generations (adversarial edge orderings can chain it — the
 union-by-rank bound is deliberately traded for the min-label
 invariant). :meth:`compact` is the antidote: a maintenance-window
-flatten of the log to depth 1 (same quiesce contract as the other
-maintained indexes' compaction — stream stopped, checkpoint committed,
-no replay pending; compacted rows land in the src_batch=-1 era).
+flatten of the log to depth 1 (the family's fenced fold; compacted rows
+land in the src_batch=-1 era).
 
 Failure model (foreachBatch is at-least-once): resolution EXCLUDES
 merge rows the replayed batch itself wrote (``src_batch`` column), so
@@ -63,19 +62,22 @@ the recomputed merges/nodes are byte-identical to the first run's, and
 both appends are anti-joined against the already-present rows — a
 fully-processed batch replays as a no-op, and a batch torn between the
 merges append and the nodes append self-heals (the missing rows are
-re-derived and appended; present rows are skipped).
+re-derived and appended; present rows are skipped). Guarded commits,
+appends and the fold are the shared maintained-table protocol, described
+once on ``sources/layout.BatchTable``.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nornicdb_spark.operators import scope
-from nornicdb_spark.sources.layout import read_or_empty, write_partitioned
-from nornicdb_spark.streaming import guard
+from nornicdb_spark.sources.layout import (
+    BatchTable,
+    MaintainedIndex,
+    hash_bucket,
+)
 
 __all__ = ["MaintainedGraphIndex"]
 
@@ -84,10 +86,12 @@ __all__ = ["MaintainedGraphIndex"]
 from nornicdb_spark.sources.layout import DEFAULT_N_PK as N_PK
 
 
-class MaintainedGraphIndex:
+class MaintainedGraphIndex(MaintainedIndex):
     """Streaming union-find over an edge stream: per-batch contracted
     merges into a parent-pointer log, component labels resolved on read.
-    Edge direction is ignored (weak connectivity)."""
+    Edge direction is ignored (weak connectivity). A fresh path needs no
+    bootstrap — every node is its own component until a merge says
+    otherwise."""
 
     def __init__(
         self,
@@ -98,8 +102,7 @@ class MaintainedGraphIndex:
         n_pk: int = N_PK,
         max_depth: int = 64,
     ):
-        self.spark = spark
-        self.path = path.rstrip("/")
+        super().__init__(spark, path)
         self.src_col = src_col
         self.dst_col = dst_col
         self.n_pk = int(n_pk)
@@ -109,47 +112,41 @@ class MaintainedGraphIndex:
         # chase depth of the most recent _resolve on THIS instance —
         # the per-batch observable that drives the compaction cadence
         self.last_resolve_depth = 0
+        self.nodes = BatchTable(
+            spark, self.path, f"{self.path}/nodes",
+            "node {it}, src_batch bigint, hk int", "hk", id_col="node",
+        )
+        self.merges = BatchTable(
+            spark, self.path, f"{self.path}/merges",
+            "old {it}, new {it}, src_batch bigint, mk int", "mk", id_col="old",
+        )
 
     # -- paths / schemas ----------------------------------------------------
     @property
     def nodes_path(self) -> str:
-        return f"{self.path}/nodes"
+        return self.nodes.path
 
     @property
     def merges_path(self) -> str:
-        return f"{self.path}/merges"
+        return self.merges.path
 
     def _id_type(self, df: DataFrame, col: str) -> str:
         return df.schema[col].dataType.simpleString()
 
     def _nodes(self, it: str) -> DataFrame:
-        return read_or_empty(
-            self.spark, self.nodes_path, f"node {it}, src_batch bigint, hk int"
-        )
+        return self.nodes.read(it)
 
     def _merges(self, it: str, exclude_batch: int | None = None) -> DataFrame:
-        df = read_or_empty(
-            self.spark,
-            self.merges_path,
-            f"old {it}, new {it}, src_batch bigint, mk int",
-        )
+        df = self.merges.read(it)
         if exclude_batch is not None:
             df = df.filter(F.col("src_batch") != int(exclude_batch))
         return df
 
-    def _stored_id_type(self, path: str, col: str) -> str | None:
-        """Node-id type of a stored table (the caller supplied it at
-        write time; reads without a reference frame recover it here).
-        ``None`` when the table does not exist yet (fresh index)."""
-        from nornicdb_spark.sources.layout import stored_col_type
-
-        return stored_col_type(self.spark, path, col)
-
     def _hk(self, col: str = "node"):
-        return F.pmod(F.xxhash64(col), F.lit(self.n_pk)).cast("int")
+        return hash_bucket(self.n_pk, col)
 
     def _mk(self, col: str = "old"):
-        return F.pmod(F.xxhash64(col), F.lit(self.n_pk)).cast("int")
+        return hash_bucket(self.n_pk, col)
 
     # -- depth metric ---------------------------------------------------------
     # Per-batch resolve cost is O(n_b · depth) pruned joins and each
@@ -162,39 +159,17 @@ class MaintainedGraphIndex:
     # compaction itself costs only O(log depth) self-joins of the LOG).
     _DEPTH_MARKER = "_chase_depth"
 
-    def _record_depth(self, depth: int) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        with open(os.path.join(self.path, self._DEPTH_MARKER), "w") as f:
-            f.write(str(int(depth)))
-
     def chase_depth(self) -> int | None:
         """Parent-pointer chase depth measured by the LATEST batch's
         resolution (None before any batch has resolved). Decreases only
         via :meth:`compact`."""
-        try:
-            with open(os.path.join(self.path, self._DEPTH_MARKER)) as f:
-                return int(f.read().strip())
-        except (FileNotFoundError, ValueError):
-            return None
+        return self.merges.marker(self._DEPTH_MARKER)
 
     def needs_compact(self, d0: int = 8) -> bool:
         """The compaction cadence rule: True once the latest batch's
         chase depth exceeds ``d0``."""
         d = self.chase_depth()
         return d is not None and d > int(d0)
-
-    # -- ingest guard (streaming/guard.py) ----------------------------------
-    # The replay anti-joins assume a batch_id identifies ONE batch for
-    # the life of the index: a reset stream checkpoint pointed at an
-    # existing index path would replay ids whose src_batch rows already
-    # exist with DIFFERENT content, and the anti-join would silently
-    # drop the new merges (permanent connectivity corruption). The
-    # shared high-water marker makes that operator mistake loud instead.
-    def _check_batch(self, batch_id: int) -> None:
-        guard.check_batch(self.path, batch_id)
-
-    def _record_batch(self, batch_id: int, reset: bool = False) -> None:
-        guard.record_batch(self.path, batch_id, reset=reset)
 
     # -- resolution ---------------------------------------------------------
     def _resolve(
@@ -315,83 +290,55 @@ class MaintainedGraphIndex:
     # -- ingest ---------------------------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch body: resolve endpoints → contract → mini-WCC →
-        append merges + new nodes. Replay-idempotent (see module note);
-        out-of-order batch ids (checkpoint/index mismatch) are refused
-        rather than silently corrupting the merge log."""
-        self._check_batch(batch_id)
-        it = self._id_type(batch_df, self.src_col)
-        # lazy checkpoints throughout the batch body: each frame is
-        # materialized by the FIRST action that needs it (resolution's
-        # first stats job pins edges+endpoints, the mini-WCC's first
-        # round pins roots, the mk collect pins merges) — the eager
-        # variants added one materialization-only job per frame for
-        # byte-identical results
-        edges = batch_df.select(
-            F.col(self.src_col).alias("src"), F.col(self.dst_col).alias("dst")
-        ).localCheckpoint(eager=False)
-        endpoints = (
-            edges.select(F.col("src").alias("node"))
-            .unionByName(edges.select(F.col("dst").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        roots = self._resolve(
-            endpoints, it, exclude_batch=int(batch_id)
-        ).localCheckpoint(eager=False)
-        self._record_depth(self.last_resolve_depth)
-        contracted = (
-            edges.join(roots.withColumnRenamed("node", "src"), "src")
-            .withColumnRenamed("root", "ra")
-            .join(
-                roots.select(F.col("node").alias("dst"), F.col("root").alias("rb")),
-                "dst",
+        append merges + new nodes, a guarded commit (a stale batch id
+        would make the replay anti-join silently drop new merges —
+        permanent connectivity corruption — so it is refused)."""
+        with self.merges.guarded(batch_id):
+            it = self._id_type(batch_df, self.src_col)
+            # lazy checkpoints throughout the batch body: each frame is
+            # materialized by the FIRST action that needs it (resolution's
+            # first stats job pins edges+endpoints, the mini-WCC's first
+            # round pins roots, the mk collect pins merges) — the eager
+            # variants added one materialization-only job per frame for
+            # byte-identical results
+            edges = batch_df.select(
+                F.col(self.src_col).alias("src"), F.col(self.dst_col).alias("dst")
+            ).localCheckpoint(eager=False)
+            endpoints = (
+                edges.select(F.col("src").alias("node"))
+                .unionByName(edges.select(F.col("dst").alias("node")))
+                .distinct()
+                .localCheckpoint(eager=False)
             )
-            .filter(F.col("ra") != F.col("rb"))
-            .select("ra", "rb")
-        )
-        merges = (
-            self._mini_wcc(contracted)
-            .withColumn("src_batch", F.lit(int(batch_id)).cast("bigint"))
-            .withColumn("mk", self._mk())
-            .localCheckpoint(eager=False)
-        )
-        # replay idempotency: merges this batch already wrote are
-        # recomputed byte-identically (resolution excluded them) and
-        # skipped here; the mk-pruned anti-join reads only their buckets
-        mks = [r.mk for r in merges.select("mk").distinct().collect()]
-        if mks:
-            existing = (
-                self._merges(it)
-                .filter(
-                    (F.col("src_batch") == int(batch_id)) & F.col("mk").isin(mks)
+            roots = self._resolve(
+                endpoints, it, exclude_batch=int(batch_id)
+            ).localCheckpoint(eager=False)
+            self.merges.marker(self._DEPTH_MARKER, self.last_resolve_depth)
+            contracted = (
+                edges.join(roots.withColumnRenamed("node", "src"), "src")
+                .withColumnRenamed("root", "ra")
+                .join(
+                    roots.select(F.col("node").alias("dst"), F.col("root").alias("rb")),
+                    "dst",
                 )
-                .select("old")
+                .filter(F.col("ra") != F.col("rb"))
+                .select("ra", "rb")
             )
-            new_merges = merges.join(existing, "old", "left_anti")
-            write_partitioned(
-                new_merges.select("old", "new", "src_batch", "mk"),
-                self.merges_path,
-                "mk",
-                mode="append",
+            merges = (
+                self._mini_wcc(contracted)
+                .withColumn("src_batch", F.lit(int(batch_id)).cast("bigint"))
+                .withColumn("mk", self._mk())
+                .localCheckpoint(eager=False)
             )
-        # node membership: hk-pruned anti-join (already-seen endpoints —
-        # including this batch's own on replay — are never re-appended)
-        tagged = endpoints.withColumn("hk", self._hk())
-        hks = [r.hk for r in tagged.select("hk").distinct().collect()]
-        if hks:
-            seen = (
-                self._nodes(it).filter(F.col("hk").isin(hks)).select("node")
+            # replay idempotency: merges this batch already wrote are
+            # recomputed byte-identically (resolution excluded them) and
+            # skipped; node membership skips every already-seen endpoint
+            # (including this batch's own on replay)
+            self.merges.append_unseen(merges, batch_id, ["old"], it)
+            self.nodes.append_unseen(
+                endpoints.withColumn("hk", self._hk()), batch_id, ["node"], it,
+                own_batch=False,
             )
-            new_nodes = tagged.join(seen, "node", "left_anti").withColumn(
-                "src_batch", F.lit(int(batch_id)).cast("bigint")
-            )
-            write_partitioned(
-                new_nodes.select("node", "src_batch", "hk"),
-                self.nodes_path,
-                "hk",
-                mode="append",
-            )
-        self._record_batch(batch_id)
         for frame in (edges, endpoints, roots, merges):
             scope.escape_frame(frame)
 
@@ -411,11 +358,7 @@ class MaintainedGraphIndex:
             .withColumn("src_batch", F.lit(-1).cast("bigint"))
             .withColumn("mk", self._mk())
         )
-        write_partitioned(
-            merges.select("old", "new", "src_batch", "mk"),
-            self.merges_path,
-            "mk",
-        )
+        self.merges.write(merges.select(*self.merges.columns), "overwrite")
         nodes = (
             edges.select(F.col("ra").alias("node"))
             .unionByName(edges.select(F.col("rb").alias("node")))
@@ -423,23 +366,8 @@ class MaintainedGraphIndex:
             .withColumn("src_batch", F.lit(-1).cast("bigint"))
             .withColumn("hk", self._hk())
         )
-        write_partitioned(
-            nodes.select("node", "src_batch", "hk"), self.nodes_path, "hk"
-        )
-        # a (re)bootstrap starts a fresh stream era — reset the guard
-        self._record_batch(-1, reset=True)
-
-    def ingest(self, stream_df: DataFrame, query_name: str):
-        """Attach the maintained loop to an edge stream; returns the
-        StreamingQuery. A fresh path needs no bootstrap — every node is
-        its own component until a merge says otherwise."""
-        os.makedirs(self.path, exist_ok=True)
-        return (
-            stream_df.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .queryName(query_name)
-            .start()
-        )
+        self.nodes.write(nodes.select(*self.nodes.columns), "overwrite")
+        self.merges.restart_era()
 
     # -- reads ----------------------------------------------------------------
     def flat_roots(self, it: str) -> DataFrame:
@@ -491,7 +419,7 @@ class MaintainedGraphIndex:
             ).distinct()
         else:
             # infer the id type from the stored table's schema on disk
-            it = self._stored_id_type(self.nodes_path, "node")
+            it = self.nodes.stored_id_type()
             if it is None:
                 raise ValueError(
                     "components(): the index has no stored nodes yet — "
@@ -507,43 +435,25 @@ class MaintainedGraphIndex:
     def compact(self) -> None:
         """Maintenance-window flatten: rewrite the merge log as direct
         (old → current root) rows, depth 1 (resolution chases become a
-        single pruned join). Same quiesce contract as the other
-        maintained indexes' compaction — stream stopped, all batches
-        committed, no replay pending; compacted rows land in the
-        src_batch=-1 era so no future replay can exclude them. Unlike
-        the BM25/IVF compactions this one needs no guard-epoch bump: a
-        post-compaction replay resolves its endpoints to already-merged
-        roots, contracts to zero edges, and no-ops. An interrupted
-        prior compaction is recovered first, so a re-run performs the
-        restore the crash-recovery error messages promise."""
-        from nornicdb_spark.sources.layout import recover_interrupted_swap
-
-        recover_interrupted_swap(self.merges_path)
-        it = self._stored_id_type(self.merges_path, "old")
-        if it is None:
-            return  # nothing merged yet — nothing to compact
-        flat = (
-            self.flat_roots(it)
-            .select(
-                "old",
-                F.col("root").alias("new"),
-                F.lit(-1).cast("bigint").alias("src_batch"),
-            )
-            .withColumn("mk", self._mk())
-        )
-        from nornicdb_spark.sources.layout import rewrite_partitioned
-
-        flat = flat.localCheckpoint(eager=True)  # read before overwrite
+        single pruned join) — the family's fenced fold; compacted rows
+        land in the src_batch=-1 era so no future replay can exclude
+        them."""
+        cs = scope.CkptScope()
         try:
-            rewrite_partitioned(
-                self.spark,
-                self.merges_path,
-                f"old {it}, new {it}, src_batch bigint, mk int",
-                lambda _df: flat,
-                "mk",
+            folded = self.merges.fold(
+                lambda _df, it: cs.ckpt(  # read before overwrite
+                    self.flat_roots(it)
+                    .select(
+                        "old",
+                        F.col("root").alias("new"),
+                        F.lit(-1).cast("bigint").alias("src_batch"),
+                    )
+                    .withColumn("mk", self._mk())
+                )
             )
         finally:
-            scope.unpersist_frame(flat)
-        # the forest is depth 1 now — reset the cadence metric so
-        # needs_compact() stops firing until chains regrow
-        self._record_depth(1)
+            cs.finish()
+        if folded:
+            # the forest is depth 1 now — reset the cadence metric so
+            # needs_compact() stops firing until chains regrow
+            self.merges.marker(self._DEPTH_MARKER, 1)

@@ -16,8 +16,6 @@ three with the maintained-ingest machinery of this package:
 - **ingest** (``foreachBatch``): assign each arriving vector to its
   nearest FROZEN centroid with a codegen'd argmin over the broadcast
   centroid literals (no Python in the row path), quantize, append.
-  Replay-idempotent the proven way: a replayed batch_id
-  dynamic-OVERWRITES exactly its own ``src_batch=N/...`` partitions.
 - **search**: pick the n_probe nearest centroids driver-side (the
   centroid table is tiny and index-resident), scan ONLY those lists —
   the ``list_id isin`` literal prunes directories
@@ -29,21 +27,26 @@ three with the maintained-ingest machinery of this package:
 
 Search cost: n_probe/n_lists of the code FILES × a 4×-smaller column,
 independent of how many batches have been ingested.
+
+Guarded commits, tombstoned removals and the fenced compaction are the
+shared maintained-table protocol, described once on
+``sources/layout.BatchTable``.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from nornicdb_spark.operators.localframe import literal_df
+from nornicdb_spark.sources.layout import BatchTable, MaintainedIndex
 
 __all__ = ["MaintainedIVFIndex"]
 
 
-class MaintainedIVFIndex:
-    """Parquet-backed IVF-pruned int8 serving index with streaming ingest."""
+class MaintainedIVFIndex(MaintainedIndex):
+    """Parquet-backed IVF-pruned int8 serving index with streaming ingest.
+    :meth:`ingest` requires a prior :meth:`bootstrap` (the centroids are
+    the index's learned state)."""
 
     def __init__(
         self,
@@ -52,15 +55,22 @@ class MaintainedIVFIndex:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ):
-        self.spark = spark
-        self.path = path.rstrip("/")
+        super().__init__(spark, path)
         self.id_col = id_col
         self.vec_col = vec_col
         self._centers: list | None = None  # lazy-loaded from parquet
+        self.codes = BatchTable(
+            spark, self.path, f"{self.path}/codes",
+            "vec_id {it}, codes array<int>, code_norm double,"
+            " src_batch bigint, list_id int",
+            "src_batch", "list_id",
+            id_col="vec_id", tombstones="vec_id {it}, src_batch bigint",
+            by_batch=True,
+        )
 
     @property
     def codes_path(self) -> str:
-        return f"{self.path}/codes"
+        return self.codes.path
 
     @property
     def centroids_path(self) -> str:
@@ -68,16 +78,7 @@ class MaintainedIVFIndex:
 
     @property
     def tombstones_path(self) -> str:
-        return f"{self.path}/tombstones"
-
-    def _tombstone_ids(self, id_type: str) -> DataFrame:
-        from nornicdb_spark.sources.layout import read_or_empty
-
-        return read_or_empty(
-            self.spark,
-            self.tombstones_path,
-            f"vec_id {id_type}, src_batch bigint",
-        ).select("vec_id")
+        return self.codes.tombstones.path
 
     # -- learned state ------------------------------------------------------
     def centers(self) -> list:
@@ -162,55 +163,21 @@ class MaintainedIVFIndex:
             "list_id int, center array<double>",
         ).coalesce(1).write.mode("overwrite").parquet(self.centroids_path)
         self._centers = None  # reload from the persisted truth
-        # a (re)bootstrap starts a fresh stream era — reset the guard
-        from nornicdb_spark.streaming import guard
-
-        guard.record_batch(self.path, -1, reset=True)
+        self.codes.restart_era()
         self.process_batch(vectors, batch_id=-1)
 
     # -- ingest ---------------------------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """foreachBatch body: assign → quantize → append (idempotent via
-        dynamic overwrite of this batch's partitions). Out-of-order
-        batch ids (reset checkpoint over an existing index — the dynamic
-        overwrite would silently REPLACE the original batches' codes)
-        are refused via the shared high-water guard."""
-        import os as _os
-
-        from nornicdb_spark.streaming import guard
-
-        guard.check_batch(self.path, batch_id)
-        # same pending-tombstone id-reuse refusal as the BM25 twin:
-        # the anti-join would hide the new codes and compact() would
-        # drop them — loud beats silent (free with no tombstone dir)
-        if _os.path.exists(self.tombstones_path):
-            from nornicdb_spark.sources.layout import stored_col_type
-
-            id_type = (
-                stored_col_type(self.spark, self.codes_path, "vec_id")
-                or "bigint"
+        """foreachBatch body: assign → quantize → append, a guarded
+        commit of this batch's codes partitions."""
+        with self.codes.guarded(batch_id):
+            self.codes.refuse_removed(
+                batch_df.select(F.col(self.id_col).alias("vec_id")),
+                "ingest batch re-uses a REMOVED vec_id while its "
+                "tombstone is still pending — run compact() first; "
+                "a compacted id may be re-used as a fresh vector.",
             )
-            clash = (
-                batch_df.select(F.col(self.id_col).alias("vec_id"))
-                .join(F.broadcast(self._tombstone_ids(id_type)), "vec_id",
-                      "left_semi")
-                .limit(1)
-                .count()
-            )
-            if clash:
-                raise ValueError(
-                    "ingest batch re-uses a REMOVED vec_id while its "
-                    "tombstone is still pending — run compact() first; "
-                    "a compacted id may be re-used as a fresh vector."
-                )
-        (
-            self._rows(batch_df, batch_id)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("src_batch", "list_id")
-            .parquet(self.codes_path)
-        )
-        guard.record_batch(self.path, batch_id)
+            self.codes.write(self._rows(batch_df, batch_id))
 
     def remove_batch(self, ids_df: DataFrame, batch_id: int,
                      id_col: str | None = None) -> None:
@@ -220,139 +187,43 @@ class MaintainedIVFIndex:
         tombstoned ids stop matching immediately (the pruned codes scan
         anti-joins them, so both ``search`` and ``search_many``
         inherit the filter), and :meth:`compact` drops their codes
-        physically and clears the table. Unknown or already-removed
-        ids contribute nothing (codes semi-join + cross-batch
-        tombstone anti-join); re-delivery of the same batch is
-        idempotent (dynamic overwrite of its own partition). Shares
-        the ingest guard sequence."""
-        from nornicdb_spark.sources.layout import stored_col_type
-        from nornicdb_spark.streaming import guard
-
-        guard.check_batch(self.path, batch_id)
-        id_col = id_col or self.id_col
-        id_type = (
-            stored_col_type(self.spark, self.codes_path, "vec_id")
-            or "bigint"
-        )
-        ids = ids_df.select(F.col(id_col).alias("vec_id")).distinct()
-        from nornicdb_spark.sources.layout import read_or_empty
-
-        codes = read_or_empty(
-            self.spark,
-            self.codes_path,
-            f"vec_id {id_type}, codes array<int>, code_norm double,"
-            " src_batch bigint, list_id int",
-        ).select("vec_id")
-        prior = read_or_empty(
-            self.spark,
-            self.tombstones_path,
-            f"vec_id {id_type}, src_batch bigint",
-        ).filter(F.col("src_batch") != int(batch_id)).select("vec_id")
-        victims = (
-            ids.join(codes, "vec_id", "left_semi")
-            .join(prior, "vec_id", "left_anti")
-        )
-        (
-            victims.withColumn(
-                "src_batch", F.lit(int(batch_id)).cast("bigint")
+        physically and clears the table. Unknown ids contribute
+        nothing (codes semi-join)."""
+        with self.codes.guarded(batch_id):
+            it = self.codes.id_type()
+            ids = ids_df.select(F.col(id_col or self.id_col).alias("vec_id"))
+            hits = ids.distinct().join(
+                self.codes.read(it).select("vec_id"), "vec_id", "left_semi"
             )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("src_batch")
-            .parquet(self.tombstones_path)
-        )
-        guard.record_batch(self.path, batch_id)
+            self.codes.tombstone(hits, batch_id, it)
 
     # -- tombstone monitoring (reference hnsw_index.go:399-418) --------------
-    def tombstone_ratio(self, id_type: str | None = None) -> float:
-        """removed / (live + removed); 0.0 on an empty index."""
-        from nornicdb_spark.sources.layout import (
-            read_or_empty,
-            stored_col_type,
-        )
-
-        if id_type is None:
-            id_type = (
-                stored_col_type(self.spark, self.codes_path, "vec_id")
-                or "bigint"
-            )
-        removed = self._tombstone_ids(id_type).count()
-        live = (
-            read_or_empty(
-                self.spark,
-                self.codes_path,
-                f"vec_id {id_type}, codes array<int>, code_norm double,"
-                " src_batch bigint, list_id int",
-            )
-            .join(self._tombstone_ids(id_type), "vec_id", "left_anti")
+    def _live(self, it: str) -> int:
+        return (
+            self.codes.read(it)
+            .join(self.codes.tombstoned(it), "vec_id", "left_anti")
             .count()
         )
-        total = live + removed
-        return float(removed) / float(total) if total else 0.0
+
+    def tombstone_ratio(self, id_type: str | None = None) -> float:
+        """removed / (live + removed); 0.0 on an empty index."""
+        return self.codes.tombstone_ratio(self._live, id_type)
 
     def should_rebuild(self, threshold: float = 0.5) -> bool:
-        """The reference's 50% tombstone rebuild heuristic
-        (hnsw_index.go:415-418); 'rebuild' here is :meth:`compact`."""
-        return self.tombstone_ratio() > float(threshold)
+        """The reference's 50% tombstone rebuild heuristic; 'rebuild'
+        here is :meth:`compact`."""
+        return self.codes.should_rebuild(self._live, threshold)
 
     def compact(self, id_type: str | None = None) -> None:
         """Fold every ingested batch's codes into the compacted era
-        (``src_batch = -2``) — bounds the directory count of a
-        long-running ingest to n_lists partitions. MUST run in a
-        maintenance window (stream stopped, checkpoint committed, no
-        replay pending) — ENFORCED: the guard high-water advances past
-        the latest ingested batch BEFORE the fold, so a replay of even that
-        batch (re-appending its folded codes → double-counted vectors)
-        is refused instead of silently blessed. An interrupted prior
-        compaction is recovered first, so a default-argument re-run
-        performs the restore the crash-recovery error messages promise.
-        The vec-id type is recovered from the stored table when not
-        supplied."""
-        from nornicdb_spark.sources.layout import (
-            recover_interrupted_swap,
-            rewrite_partitioned,
-            stored_col_type,
-        )
-        from nornicdb_spark.streaming import guard
-
-        recover_interrupted_swap(self.codes_path)
-        if id_type is None:
-            id_type = stored_col_type(self.spark, self.codes_path, "vec_id")
-            if id_type is None:
-                return  # nothing ingested yet — nothing to compact
-        # Fence BEFORE the fold: a crash mid-rewrite must leave the
-        # latest batch's replay already REFUSED (a refused replay under
-        # the quiesce contract is harmless; a blessed replay of a folded
-        # batch double-counts its codes). Advancing first removes the
-        # crash window entirely — crash-injection-tested.
-        guard.advance_epoch(self.path)
-        tomb = self._tombstone_ids(id_type)
-        rewrite_partitioned(
-            self.spark,
-            self.codes_path,
-            f"vec_id {id_type}, codes array<int>, code_norm double,"
-            " src_batch bigint, list_id int",
-            lambda df: df.join(tomb, "vec_id", "left_anti").withColumn(
-                "src_batch", F.lit(-2).cast("bigint")
-            ),
-            "src_batch",
-            "list_id",
-        )
-        # clear tombstones LAST (their codes are physically gone; a
-        # crash before this line leaves only a no-op anti-join)
-        import shutil as _shutil
-
-        _shutil.rmtree(self.tombstones_path, ignore_errors=True)
-
-    def ingest(self, stream_df: DataFrame, query_name: str):
-        """Attach the ingest loop to a vector stream; requires a prior
-        :meth:`bootstrap` (the centroids are the index's learned state)."""
-        os.makedirs(self.path, exist_ok=True)
-        return (
-            stream_df.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .queryName(query_name)
-            .start()
+        (``src_batch = -2``) minus the tombstoned vectors — bounds the
+        directory count of a long-running ingest to n_lists partitions.
+        A fenced fold: maintenance window only, a replay of the latest
+        batch is refused afterwards. The vec-id type is recovered from
+        the stored table when not supplied."""
+        self.codes.fold(
+            lambda df, _it: df.withColumn("src_batch", F.lit(-2).cast("bigint")),
+            id_type,
         )
 
     def search_many(
@@ -382,13 +253,7 @@ class MaintainedIVFIndex:
 
         from nornicdb_spark.search.vector import cosine_sim
 
-        if id_type is None:
-            from nornicdb_spark.sources.layout import stored_col_type
-
-            id_type = (
-                stored_col_type(self.spark, self.codes_path, "vec_id")
-                or "bigint"
-            )
+        id_type = self.codes.id_type(id_type)
         out_schema = f"query_id bigint, vec_id {id_type}, score double"
         centers = self.centers()
         # Probe assignment is SPARK-SIDE — the ingest path's codegen-
@@ -526,22 +391,9 @@ class MaintainedIVFIndex:
         (a sentinel that reports healthy on nothing would hide a dead
         ingest path)."""
         from nornicdb_spark.search.vector import cosine_topk
-        from nornicdb_spark.sources.layout import (
-            read_or_empty,
-            stored_col_type,
-        )
 
-        if id_type is None:
-            id_type = (
-                stored_col_type(self.spark, self.codes_path, "vec_id")
-                or "bigint"
-            )
-        codes = read_or_empty(
-            self.spark,
-            self.codes_path,
-            f"vec_id {id_type}, codes array<int>, code_norm double,"
-            " src_batch bigint, list_id int",
-        )
+        id_type = self.codes.id_type(id_type)
+        codes = self.codes.read(id_type)
         latest = codes.agg(F.max("src_batch")).collect()[0][0]
         if latest is None:
             raise ValueError(
@@ -580,28 +432,12 @@ class MaintainedIVFIndex:
     # -- search ---------------------------------------------------------------
     def _codes_pruned(self, list_ids: list[int], id_type: str) -> DataFrame:
         """The probe scan: literal ``list_id isin`` → PartitionFilters
-        (only the probed lists' directories are read)."""
-        from nornicdb_spark.sources.layout import read_or_empty
-
-        import os as _os
-
-        df = read_or_empty(
-            self.spark,
-            self.codes_path,
-            f"vec_id {id_type}, codes array<int>, code_norm double,"
-            " src_batch bigint, list_id int",
-        )
-        pruned = df.filter(F.col("list_id").isin(list_ids))
-        # removed vectors stop matching immediately — both search and
-        # search_many inherit this. No-removals indexes (no tombstone
-        # directory, the common case) skip the join and keep the
-        # join-free probe plan; pending tombstones broadcast (bounded
-        # by removals since the last compact, which clears them — the
-        # reference keeps its tombstones in RAM, hnsw_index.go).
-        if not _os.path.exists(self.tombstones_path):
-            return pruned
-        return pruned.join(
-            F.broadcast(self._tombstone_ids(id_type)), "vec_id", "left_anti"
+        (only the probed lists' directories are read); removed vectors
+        stop matching immediately — both search and search_many inherit
+        the tombstone anti-join."""
+        return self.codes.drop_tombstoned(
+            self.codes.read(id_type).filter(F.col("list_id").isin(list_ids)),
+            id_type,
         )
 
     def search(
@@ -619,13 +455,7 @@ class MaintainedIVFIndex:
         are fetched). Returns (vec_id, score) descending, ties by id."""
         from nornicdb_spark.search.vector import _lit_vec, cosine_topk
 
-        if id_type is None:
-            from nornicdb_spark.sources.layout import stored_col_type
-
-            id_type = (
-                stored_col_type(self.spark, self.codes_path, "vec_id")
-                or "bigint"
-            )
+        id_type = self.codes.id_type(id_type)
         qn = float(sum(float(x) * float(x) for x in query_vec)) ** 0.5
         if qn == 0.0:
             # a zero-norm query has no direction: same contract as

@@ -57,18 +57,22 @@ de-duplicated), at the cost of a bounded occupancy over-count for that
 batch. Exactly-once multi-table upserts need a transactional table
 format (Delta/Iceberg) — out of scope here; the torn-state behavior is
 deliberately biased so no failure mode silently loses matchability.
+The guarded commit and the replay-safe appends are the shared
+maintained-table protocol, described once on ``sources/layout.BatchTable``.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from nornicdb_spark.operators.localframe import literal_df
 
 from nornicdb_spark.operators import scope
-from nornicdb_spark.sources.layout import write_partitioned
+from nornicdb_spark.sources.layout import (
+    BatchTable,
+    MaintainedIndex,
+    hash_bucket,
+)
 from nornicdb_spark.operators.dedup import (
     N_BANDS,
     N_PERMS,
@@ -84,7 +88,7 @@ __all__ = ["MaintainedBandIndex", "MaintainedVecIndex", "MaintainedHashIndex"]
 from nornicdb_spark.sources.layout import DEFAULT_N_PK as N_PK
 
 
-class _MaintainedIndexBase:
+class _MaintainedIndexBase(MaintainedIndex):
     """Shared probe/maintain/replay machinery. A subclass supplies the
     modality: :meth:`_rows` derives (doc, <payload>, band, band_key, pk)
     per document, ``payload_cols``/``payload_types`` name the verify-side
@@ -95,7 +99,9 @@ class _MaintainedIndexBase:
     includes docs accepted in earlier batches); matches are recorded and
     rejected, novel docs are appended to the index. Intra-batch pairs are
     deliberately not compared — each doc is judged against the accepted
-    corpus as of its batch, the reference's ingest-time semantics.
+    corpus as of its batch, the reference's ingest-time semantics. A
+    fresh path with no prior :meth:`bootstrap` is valid — the index
+    seeds itself from the first batch (missing tables read as empty).
     """
 
     payload_cols: tuple[str, ...]
@@ -111,8 +117,7 @@ class _MaintainedIndexBase:
         max_per_bucket: int | None = 128,
         n_pk: int = N_PK,
     ):
-        self.spark = spark
-        self.path = path.rstrip("/")
+        super().__init__(spark, path)
         self.threshold = float(threshold)
         self.id_col = id_col
         # Hot-bucket ceiling (the hub-cap discipline of
@@ -128,6 +133,24 @@ class _MaintainedIndexBase:
         # ``None`` disables the cap.
         self.max_per_bucket = max_per_bucket
         self.n_pk = int(n_pk)
+        cols = ", ".join(
+            f"{c} {t}" for c, t in zip(self.payload_cols, self.payload_types)
+        )
+        self.bands = BatchTable(
+            spark, self.path, f"{self.path}/bands",
+            "doc {it}, band_key string, band int, src_batch bigint, pk int",
+            "pk",
+        )
+        self.payload = BatchTable(
+            spark, self.path, self.payload_path,
+            f"doc {{it}}, {cols}, src_batch bigint, hk int", "hk", id_col="doc",
+        )
+        self._matches = BatchTable(
+            spark, self.path, f"{self.path}/matches",
+            f"stream_doc {{it}}, corpus_doc {{it}}, {self.score_col} double,"
+            " batch_id bigint",
+            "batch_id", by_batch=True,
+        )
 
     # -- subclass contract -------------------------------------------------
     def _rows(self, docs: DataFrame) -> DataFrame:
@@ -149,7 +172,7 @@ class _MaintainedIndexBase:
     # -- paths ------------------------------------------------------------
     @property
     def bands_path(self) -> str:
-        return f"{self.path}/bands"
+        return self.bands.path
 
     @property
     def payload_path(self) -> str:
@@ -157,36 +180,17 @@ class _MaintainedIndexBase:
 
     @property
     def matches_path(self) -> str:
-        return f"{self.path}/matches"
+        return self._matches.path
 
-    # -- schemas (explicit on every read-back: an appended empty batch
-    #    leaves a fileless dir Spark cannot infer a schema from) ----------
     def _id_type(self, docs: DataFrame) -> str:
         return docs.schema[self.id_col].dataType.simpleString()
 
-    def _payload_schema(self, it: str) -> str:
-        cols = ", ".join(
-            f"{c} {t}" for c, t in zip(self.payload_cols, self.payload_types)
-        )
-        return f"doc {it}, {cols}, src_batch bigint, hk int"
-
-    def _read(self, path: str, schema: str) -> DataFrame:
-        """Read an index table; a missing path (ingest started on a fresh
-        directory with no bootstrap) reads as an empty table — the first
-        batch then accepts everything and seeds the index."""
-        from nornicdb_spark.sources.layout import read_or_empty
-
-        return read_or_empty(self.spark, path, schema)
-
-    # -- partition-bucket expressions (MUST be identical at write and
-    #    probe time — xxhash64 is deterministic across sessions) ----------
+    # -- partition-bucket expressions ---------------------------------------
     def _pk_col(self):
-        return F.pmod(F.xxhash64("band", "band_key"), F.lit(self.n_pk)).cast(
-            "int"
-        )
+        return hash_bucket(self.n_pk, "band", "band_key")
 
     def _hk_col(self, col: str = "doc"):
-        return F.pmod(F.xxhash64(col), F.lit(self.n_pk)).cast("int")
+        return hash_bucket(self.n_pk, col)
 
     def _bands_pruned(
         self, it: str, pks: list[int], exclude_batch: int | None = None
@@ -196,10 +200,7 @@ class _MaintainedIndexBase:
         pruning (plan-tested) — the scan reads ≤ len(pks)/n_pk of the
         index files, never all of them. ``exclude_batch`` hides rows the
         given batch itself appended (replay idempotency)."""
-        df = self._read(
-            self.bands_path,
-            f"doc {it}, band_key string, band int, src_batch bigint, pk int",
-        ).filter(F.col("pk").isin(pks))
+        df = self.bands.read(it).filter(F.col("pk").isin(pks))
         if exclude_batch is not None:
             df = df.filter(F.col("src_batch") != int(exclude_batch))
         return df
@@ -210,9 +211,7 @@ class _MaintainedIndexBase:
         """The payload-table scan a verify performs — same pruning story;
         this is the table with the fat verify columns, so an unpruned
         scan here would dominate probe cost at scale."""
-        df = self._read(self.payload_path, self._payload_schema(it)).filter(
-            F.col("hk").isin(hks)
-        )
+        df = self.payload.read(it).filter(F.col("hk").isin(hks))
         if exclude_batch is not None:
             df = df.filter(F.col("src_batch") != int(exclude_batch))
         return df
@@ -256,18 +255,14 @@ class _MaintainedIndexBase:
         rows = self._bucket_cap(self._rows_batch(docs)).withColumn(
             "src_batch", F.lit(-1).cast("bigint")  # pre-stream era
         )
-        write_partitioned(
+        self.bands.write(
             rows.select("doc", "band", "band_key", "src_batch", "pk"),
-            self.bands_path,
-            "pk",
+            "overwrite",
         )
         # a doc whose every bucket was full keeps no band rows and can
         # never be a candidate — its payload row would be dead weight
-        write_partitioned(self._payload_row(rows), self.payload_path, "hk")
-        # a (re)bootstrap starts a fresh stream era — reset the guard
-        from nornicdb_spark.streaming import guard
-
-        guard.record_batch(self.path, -1, reset=True)
+        self.payload.write(self._payload_row(rows), "overwrite")
+        self.bands.restart_era()
 
     # -- probe ------------------------------------------------------------
     def probe(self, docs: DataFrame) -> DataFrame:
@@ -350,84 +345,57 @@ class _MaintainedIndexBase:
         overwrite would silently REPLACE the original batch's recorded
         matches, and the probe's src_batch exclusion would hide live
         index rows."""
-        from nornicdb_spark.streaming import guard
-
-        guard.check_batch(self.path, batch_id)
-        it = self._id_type(batch_df)
-        rows = self._rows(batch_df).localCheckpoint(eager=True)
-        matches = self._probe_rows(
-            rows, it, exclude_batch=int(batch_id)
-        ).localCheckpoint(eager=True)
-        (
-            matches.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(self.matches_path)
-        )
-        rejected = matches.select(F.col("stream_doc").alias("doc")).distinct()
-        accepted = rows.join(rejected, "doc", "left_anti")
-        # replay idempotency: docs already indexed are never re-appended.
-        # The existence check reads only the accepted docs' hk buckets
-        # (≤ min(n_b, n_pk) partitions), doc column only.
-        hks = [
-            r.hk
-            for r in accepted.select(self._hk_col().alias("hk"))
-            .distinct()
-            .collect()
-        ]
-        if hks:
-            accepted = accepted.join(
-                self._payload_pruned(it, hks).select("doc"), "doc", "left_anti"
+        with self.bands.guarded(batch_id):
+            it = self._id_type(batch_df)
+            rows = self._rows(batch_df).localCheckpoint(eager=True)
+            matches = self._probe_rows(
+                rows, it, exclude_batch=int(batch_id)
+            ).localCheckpoint(eager=True)
+            self._matches.write(matches.withColumn("batch_id", F.lit(int(batch_id))))
+            rejected = matches.select(F.col("stream_doc").alias("doc")).distinct()
+            accepted = rows.join(rejected, "doc", "left_anti")
+            # replay idempotency: docs already indexed are never re-appended.
+            # The existence check reads only the accepted docs' hk buckets
+            # (≤ min(n_b, n_pk) partitions), doc column only.
+            hks = [
+                r.hk
+                for r in accepted.select(self._hk_col().alias("hk"))
+                .distinct()
+                .collect()
+            ]
+            if hks:
+                accepted = accepted.join(
+                    self._payload_pruned(it, hks).select("doc"), "doc", "left_anti"
+                )
+            if self.max_per_bucket is not None:
+                # occupancy of ONLY the buckets this batch touches: the pk
+                # isin prunes the scan to the batch's partitions, the
+                # semi-join prunes rows to touched buckets
+                pks = [r.pk for r in accepted.select("pk").distinct().collect()]
+                touched = accepted.select("band", "band_key").distinct()
+                occ = (
+                    self._bands_pruned(it, pks)
+                    .join(touched, ["band", "band_key"], "left_semi")
+                    .groupBy("band", "band_key")
+                    .agg(F.count(F.lit(1)).alias("_occ"))
+                )
+                accepted = self._bucket_cap(accepted, headroom=occ)
+            # pin accepted before the writes: the bands append below changes
+            # the very table the occupancy join reads, so the payload write
+            # must NOT recompute the plan against post-append state
+            accepted = accepted.withColumn(
+                "src_batch", F.lit(int(batch_id)).cast("bigint")
+            ).localCheckpoint(eager=True)
+            # bands BEFORE payload: a batch torn between the two self-heals on
+            # replay (doc absent from payload → re-appended) — see module note
+            self.bands.write(
+                accepted.select("doc", "band", "band_key", "src_batch", "pk")
             )
-        if self.max_per_bucket is not None:
-            # occupancy of ONLY the buckets this batch touches: the pk
-            # isin prunes the scan to the batch's partitions, the
-            # semi-join prunes rows to touched buckets
-            pks = [r.pk for r in accepted.select("pk").distinct().collect()]
-            touched = accepted.select("band", "band_key").distinct()
-            occ = (
-                self._bands_pruned(it, pks)
-                .join(touched, ["band", "band_key"], "left_semi")
-                .groupBy("band", "band_key")
-                .agg(F.count(F.lit(1)).alias("_occ"))
-            )
-            accepted = self._bucket_cap(accepted, headroom=occ)
-        # pin accepted before the writes: the bands append below changes
-        # the very table the occupancy join reads, so the payload write
-        # must NOT recompute the plan against post-append state
-        accepted = accepted.withColumn(
-            "src_batch", F.lit(int(batch_id)).cast("bigint")
-        ).localCheckpoint(eager=True)
-        # bands BEFORE payload: a batch torn between the two self-heals on
-        # replay (doc absent from payload → re-appended) — see module note
-        write_partitioned(
-            accepted.select("doc", "band", "band_key", "src_batch", "pk"),
-            self.bands_path,
-            "pk",
-            mode="append",
-        )
-        write_partitioned(
-            self._payload_row(accepted), self.payload_path, "hk", mode="append"
-        )
-        guard.record_batch(self.path, batch_id)
+            self.payload.write(self._payload_row(accepted))
         # per-batch blocks: deferred release via the session registry
         scope.escape_frame(rows)
         scope.escape_frame(matches)
         scope.escape_frame(accepted)
-
-    def ingest(self, stream_df: DataFrame, query_name: str):
-        """Attach the maintained-ingest loop to a document stream; returns
-        the StreamingQuery (caller drives/stops it). A fresh path with no
-        prior :meth:`bootstrap` is valid — the index seeds itself from
-        the first batch (missing tables read as empty)."""
-        os.makedirs(self.path, exist_ok=True)
-        return (
-            stream_df.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .queryName(query_name)
-            .start()
-        )
 
     def matches(self, id_type: str | None = None) -> DataFrame:
         """All recorded near-dup matches. The doc-id type is recovered
@@ -435,18 +403,7 @@ class _MaintainedIndexBase:
         run leaves a file-less matches dir that Spark cannot infer
         from; fresh indexes fall back to bigint). batch_id is the
         partition column, so per-batch read-backs prune to one dir."""
-        if id_type is None:
-            from nornicdb_spark.sources.layout import stored_col_type
-
-            id_type = (
-                stored_col_type(self.spark, self.payload_path, "doc")
-                or "bigint"
-            )
-        return self._read(
-            self.matches_path,
-            f"stream_doc {id_type}, corpus_doc {id_type},"
-            f" {self.score_col} double, batch_id bigint",
-        )
+        return self._matches.read(self.payload.id_type(id_type))
 
 
 class MaintainedBandIndex(_MaintainedIndexBase):
@@ -659,7 +616,7 @@ class MaintainedVecIndex(_MaintainedIndexBase):
         return dot / (F.col("s_code_norm") * F.col("c_code_norm"))
 
 
-class MaintainedHashIndex:
+class MaintainedHashIndex(MaintainedIndex):
     """Maintained EXACT content-hash dedup — the first gate of the 100 TB
     ingest loop (cheaper than banding: one md5 per doc, one pruned
     membership probe), and the streaming form of
@@ -690,33 +647,25 @@ class MaintainedHashIndex:
         text_col: str = "text",
         n_pk: int = N_PK,
     ):
-        self.spark = spark
-        self.path = path.rstrip("/")
+        super().__init__(spark, path)
         self.id_col = id_col
         self.text_col = text_col
         self.n_pk = int(n_pk)
+        self.seen = BatchTable(
+            spark, self.path, f"{self.path}/seen",
+            "content_hash string, doc {it}, src_batch bigint, hk int", "hk",
+            id_col="doc",
+        )
 
     @property
     def seen_path(self) -> str:
-        return f"{self.path}/seen"
+        return self.seen.path
 
     def _hk(self, col: str = "content_hash"):
-        return F.pmod(F.xxhash64(col), F.lit(self.n_pk)).cast("int")
+        return hash_bucket(self.n_pk, col)
 
     def _seen(self, it: str) -> DataFrame:
-        from nornicdb_spark.sources.layout import read_or_empty
-
-        return read_or_empty(
-            self.spark,
-            self.seen_path,
-            f"content_hash string, doc {it}, src_batch bigint, hk int",
-        )
-
-    def _stored_id_type(self) -> str | None:
-        """Doc-id type recovered from the stored table (None = fresh)."""
-        from nornicdb_spark.sources.layout import stored_col_type
-
-        return stored_col_type(self.spark, self.seen_path, "doc")
+        return self.seen.read(it)
 
     def _rows(self, docs: DataFrame) -> DataFrame:
         return docs.select(
@@ -760,41 +709,11 @@ class MaintainedHashIndex:
         """Append this batch's observation rows (hash membership probe is
         the caller's gate via :meth:`probe`; the log keeps EVERY
         observation so copy counts stay exact). Replay-idempotent."""
-        from nornicdb_spark.streaming import guard
-
-        guard.check_batch(self.path, batch_id)
-        it = batch_df.schema[self.id_col].dataType.simpleString()
-        rows = self._rows(batch_df).localCheckpoint(eager=True)
-        hks = [r.hk for r in rows.select("hk").distinct().collect()]
-        if hks:
-            mine = (
-                self._seen(it)
-                .filter(
-                    (F.col("hk").isin(hks))
-                    & (F.col("src_batch") == int(batch_id))
-                )
-                .select("content_hash", "doc")
-            )
-            fresh = rows.join(mine, ["content_hash", "doc"], "left_anti")
-            write_partitioned(
-                fresh.withColumn(
-                    "src_batch", F.lit(int(batch_id)).cast("bigint")
-                ).select("content_hash", "doc", "src_batch", "hk"),
-                self.seen_path,
-                "hk",
-                mode="append",
-            )
-        guard.record_batch(self.path, batch_id)
+        with self.seen.guarded(batch_id):
+            it = batch_df.schema[self.id_col].dataType.simpleString()
+            rows = self._rows(batch_df).localCheckpoint(eager=True)
+            self.seen.append_unseen(rows, batch_id, ["content_hash", "doc"], it)
         scope.escape_frame(rows)
-
-    def ingest(self, stream_df: DataFrame, query_name: str):
-        os.makedirs(self.path, exist_ok=True)
-        return (
-            stream_df.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .queryName(query_name)
-            .start()
-        )
 
     def duplicates(self, id_type: str | None = None) -> DataFrame:
         """(content_hash, n_copies, keep_id) for hashes observed more
@@ -802,10 +721,8 @@ class MaintainedHashIndex:
         ingested corpus (order-invariant aggregates). The doc-id type is
         recovered from the stored table; pass ``id_type`` only for a
         fresh (never-ingested) index whose type has no stored record."""
-        if id_type is None:
-            id_type = self._stored_id_type() or "bigint"
         return (
-            self._seen(id_type)
+            self._seen(self.seen.id_type(id_type))
             .groupBy("content_hash")
             .agg(
                 F.count(F.lit(1)).alias("n_copies"),

@@ -15,27 +15,28 @@ Reference scope: the reference has no approximate or incremental
 distinct counting (exact Cypher aggregates only) — beyond-reference
 capability for the interactive-at-scale north star, same posture as
 operators/sketches.py.
+
+All three are append-only logs of per-batch rows kept replay-idempotent
+by anti-join, compacted by a fenced fold — the shared maintained-table
+protocol, described once on ``sources/layout.BatchTable``.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from nornicdb_spark.operators.localframe import literal_df
 
 from nornicdb_spark.operators import scope
+from nornicdb_spark.sources.layout import DEFAULT_N_PK as N_PK
 from nornicdb_spark.sources.layout import (
-    DEFAULT_N_PK as N_PK,
-)
-from nornicdb_spark.sources.layout import (
-    read_or_empty,
-    write_partitioned,
+    BatchTable,
+    MaintainedIndex,
+    hash_bucket,
 )
 
 
-class MaintainedDistinctIndex:
+class MaintainedDistinctIndex(MaintainedIndex):
     """Live distinct-count-per-group over an append-only stream.
 
     Layout: ``<path>/sketches`` — one row per (grp, src_batch),
@@ -60,24 +61,25 @@ class MaintainedDistinctIndex:
         lg_k: int = 12,
         n_pk: int = N_PK,
     ):
-        self.spark = spark
-        self.path = path.rstrip("/")
+        super().__init__(spark, path)
         self.group_col = group_col
         self.value_col = value_col
         self.lg_k = int(lg_k)
         self.n_pk = int(n_pk)
+        self.sketches = BatchTable(
+            spark, self.path, f"{self.path}/sketches",
+            "grp string, sketch binary, src_batch bigint, gk int", "gk",
+        )
 
     @property
     def sketches_path(self) -> str:
-        return f"{self.path}/sketches"
-
-    _SCHEMA = "grp string, sketch binary, src_batch bigint, gk int"
+        return self.sketches.path
 
     def _gk(self):
-        return F.pmod(F.xxhash64("grp"), F.lit(self.n_pk)).cast("int")
+        return hash_bucket(self.n_pk, "grp")
 
     def _stored(self) -> DataFrame:
-        return read_or_empty(self.spark, self.sketches_path, self._SCHEMA)
+        return self.sketches.read()
 
     def _rows(self, batch_df: DataFrame) -> DataFrame:
         return (
@@ -95,40 +97,10 @@ class MaintainedDistinctIndex:
         twice over: the anti-join drops rows a torn first run already
         landed, and a duplicate that slipped through would union to the
         identical registers anyway."""
-        from nornicdb_spark.streaming import guard
-
-        guard.check_batch(self.path, batch_id)
-        rows = self._rows(batch_df).localCheckpoint(eager=True)
-        gks = [r.gk for r in rows.select("gk").distinct().collect()]
-        if gks:
-            mine = (
-                self._stored()
-                .filter(
-                    F.col("gk").isin(gks)
-                    & (F.col("src_batch") == int(batch_id))
-                )
-                .select("grp")
-            )
-            fresh = rows.join(mine, "grp", "left_anti")
-            write_partitioned(
-                fresh.withColumn(
-                    "src_batch", F.lit(int(batch_id)).cast("bigint")
-                ).select("grp", "sketch", "src_batch", "gk"),
-                self.sketches_path,
-                "gk",
-                mode="append",
-            )
-        guard.record_batch(self.path, batch_id)
+        with self.sketches.guarded(batch_id):
+            rows = self._rows(batch_df).localCheckpoint(eager=True)
+            self.sketches.append_unseen(rows, batch_id, ["grp"])
         scope.escape_frame(rows)
-
-    def ingest(self, stream_df: DataFrame, query_name: str):
-        os.makedirs(self.path, exist_ok=True)
-        return (
-            stream_df.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .queryName(query_name)
-            .start()
-        )
 
     def counts(self) -> DataFrame:
         """(grp, approx_distinct) over everything ingested — union of
@@ -190,32 +162,17 @@ class MaintainedDistinctIndex:
     def compact(self) -> None:
         """Fold the per-batch sketch rows to ONE row per group
         (src_batch=-2) — bounded file count after any number of
-        batches. MUST run in a maintenance window (stream stopped,
-        checkpoint committed); the guard epoch advances BEFORE the fold
-        so a crash mid-rewrite leaves the latest batch's replay refused,
-        not double-counted (double-union is semantically harmless here,
-        but the family contract is uniform)."""
-        from nornicdb_spark.sources.layout import (
-            recover_interrupted_swap,
-            rewrite_partitioned,
-        )
-        from nornicdb_spark.streaming import guard
-
-        recover_interrupted_swap(self.sketches_path)
-        guard.advance_epoch(self.path)
-        rewrite_partitioned(
-            self.spark,
-            self.sketches_path,
-            self._SCHEMA,
-            lambda df: df.groupBy("grp", "gk")
+        batches. A fenced fold (double-union is semantically harmless
+        here, but the family contract is uniform)."""
+        self.sketches.fold(
+            lambda df, _it: df.groupBy("grp", "gk")
             .agg(F.hll_union_agg("sketch", F.lit(False)).alias("sketch"))
             .withColumn("src_batch", F.lit(-2).cast("bigint"))
-            .select("grp", "sketch", "src_batch", "gk"),
-            "gk",
+            .select(*self.sketches.columns)
         )
 
 
-class MaintainedHistogramIndex:
+class MaintainedHistogramIndex(MaintainedIndex):
     """Live fixed-width histogram per group — the quantile twin of
     :class:`MaintainedDistinctIndex`, and its structural contrast: bucket
     COUNTS subtract, so this index SUPPORTS removal (negative count
@@ -249,24 +206,26 @@ class MaintainedHistogramIndex:
         width: float = 1.0,
         n_pk: int = N_PK,
     ):
-        self.spark = spark
-        self.path = path.rstrip("/")
+        super().__init__(spark, path)
         self.group_col = group_col
         self.value_col = value_col
         self.width = float(width)
         self.n_pk = int(n_pk)
+        self.hist = BatchTable(
+            spark, self.path, f"{self.path}/hist",
+            "grp string, bucket bigint, n bigint, src_batch bigint, gk int",
+            "gk",
+        )
 
     @property
     def hist_path(self) -> str:
-        return f"{self.path}/hist"
-
-    _SCHEMA = "grp string, bucket bigint, n bigint, src_batch bigint, gk int"
+        return self.hist.path
 
     def _gk(self):
-        return F.pmod(F.xxhash64("grp"), F.lit(self.n_pk)).cast("int")
+        return hash_bucket(self.n_pk, "grp")
 
     def _stored(self) -> DataFrame:
-        return read_or_empty(self.spark, self.hist_path, self._SCHEMA)
+        return self.hist.read()
 
     def _rows(self, batch_df: DataFrame, sign: int) -> DataFrame:
         return (
@@ -282,54 +241,14 @@ class MaintainedHistogramIndex:
         )
 
     def _append(self, batch_df: DataFrame, batch_id: int, sign: int) -> None:
-        from nornicdb_spark.streaming import guard
-
-        guard.check_batch(self.path, batch_id)
         # a batch_id is EITHER ingest or removal: the replay anti-join
         # keys on (grp, bucket, src_batch), so a removal reusing an
         # ingest's id would be silently eaten as a "replay" and the
-        # histogram would over-count forever. Record each id's kind and
-        # refuse a mismatch loudly (driver-local marker, the guard's
-        # filesystem discipline; rewriting the same kind is the normal
-        # replay path and stays allowed).
-        op = "ingest" if sign > 0 else "remove"
-        os.makedirs(self.path, exist_ok=True)
-        marker = os.path.join(self.path, f"_op_{int(batch_id)}")
-        if os.path.exists(marker):
-            with open(marker) as f:
-                prev = f.read().strip()
-            if prev != op:
-                raise ValueError(
-                    f"batch_id {batch_id} was already used for a '{prev}' "
-                    f"batch on this index and cannot be reused for "
-                    f"'{op}': ingest and removal streams must not share "
-                    "batch ids (the replay anti-join would silently drop "
-                    "this batch's rows). Use a fresh batch id."
-                )
-        else:
-            with open(marker, "w") as f:
-                f.write(op)
-        rows = self._rows(batch_df, sign).localCheckpoint(eager=True)
-        gks = [r.gk for r in rows.select("gk").distinct().collect()]
-        if gks:
-            mine = (
-                self._stored()
-                .filter(
-                    F.col("gk").isin(gks)
-                    & (F.col("src_batch") == int(batch_id))
-                )
-                .select("grp", "bucket")
-            )
-            fresh = rows.join(mine, ["grp", "bucket"], "left_anti")
-            write_partitioned(
-                fresh.withColumn(
-                    "src_batch", F.lit(int(batch_id)).cast("bigint")
-                ).select("grp", "bucket", "n", "src_batch", "gk"),
-                self.hist_path,
-                "gk",
-                mode="append",
-            )
-        guard.record_batch(self.path, batch_id)
+        # histogram would over-count forever — the guarded commit
+        # records each id's kind and refuses a mismatch loudly
+        with self.hist.guarded(batch_id, "ingest" if sign > 0 else "remove"):
+            rows = self._rows(batch_df, sign).localCheckpoint(eager=True)
+            self.hist.append_unseen(rows, batch_id, ["grp", "bucket"])
         scope.escape_frame(rows)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -346,15 +265,6 @@ class MaintainedHistogramIndex:
         identities to verify against (use the fulltext/IVF indexes'
         tombstones when identity-level removal is needed)."""
         self._append(values_df, batch_id, sign=-1)
-
-    def ingest(self, stream_df: DataFrame, query_name: str):
-        os.makedirs(self.path, exist_ok=True)
-        return (
-            stream_df.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .queryName(query_name)
-            .start()
-        )
 
     def totals(self) -> DataFrame:
         """(grp, bucket, n) net histogram — the serving primitive."""
@@ -403,31 +313,18 @@ class MaintainedHistogramIndex:
 
     def compact(self) -> None:
         """Fold per-batch rows to net (grp, bucket) rows (zero nets
-        dropped, src_batch=-2). Epoch fence BEFORE the fold — family
-        contract (a replayed batch after its rows folded would
-        re-append them; refused instead)."""
-        from nornicdb_spark.sources.layout import (
-            recover_interrupted_swap,
-            rewrite_partitioned,
-        )
-        from nornicdb_spark.streaming import guard
-
-        recover_interrupted_swap(self.hist_path)
-        guard.advance_epoch(self.path)
-        rewrite_partitioned(
-            self.spark,
-            self.hist_path,
-            self._SCHEMA,
-            lambda df: df.groupBy("grp", "bucket", "gk")
+        dropped, src_batch=-2) — a fenced fold (a replayed batch after
+        its rows folded would re-append them; refused instead)."""
+        self.hist.fold(
+            lambda df, _it: df.groupBy("grp", "bucket", "gk")
             .agg(F.sum("n").cast("long").alias("n"))
             .filter(F.col("n") != 0)
             .withColumn("src_batch", F.lit(-2).cast("bigint"))
-            .select("grp", "bucket", "n", "src_batch", "gk"),
-            "gk",
+            .select(*self.hist.columns)
         )
 
 
-class MaintainedSampleIndex:
+class MaintainedSampleIndex(MaintainedIndex):
     """Live weighted reservoir WITHOUT replacement over an append-only
     stream — the streaming form of ``operators/textops.weighted_sample``
     and the family's third sketch member. Because the A-Res key
@@ -451,18 +348,16 @@ class MaintainedSampleIndex:
     dropped — rebuild from the surviving corpus instead."""
 
     def __init__(self, spark: SparkSession, path: str, n: int):
-        self.spark = spark
-        self.path = path.rstrip("/")
+        super().__init__(spark, path)
         self.n = int(n)
+        self.cands = BatchTable(
+            spark, self.path, f"{self.path}/cands",
+            "doc_id bigint, weight double, key double, src_batch bigint",
+        )
 
     @property
     def cands_path(self) -> str:
-        return f"{self.path}/cands"
-
-    _SCHEMA = "doc_id bigint, weight double, key double, src_batch bigint"
-
-    def _stored(self) -> DataFrame:
-        return read_or_empty(self.spark, self.cands_path, self._SCHEMA)
+        return self.cands.path
 
     def process_batch(
         self,
@@ -472,44 +367,24 @@ class MaintainedSampleIndex:
         id_col: str = "doc_id",
     ) -> None:
         from nornicdb_spark.operators.textops import weighted_sample
-        from nornicdb_spark.streaming import guard
 
-        guard.check_batch(self.path, batch_id)
-        rows = weighted_sample(
-            batch_df, n=self.n, weight_col=weight_col, id_col=id_col
-        ).localCheckpoint(eager=True)
-        mine = (
-            self._stored()
-            .filter(F.col("src_batch") == int(batch_id))
-            .select("doc_id")
-        )
-        fresh = rows.join(mine, "doc_id", "left_anti").withColumn(
-            "src_batch", F.lit(int(batch_id)).cast("bigint")
-        )
-        os.makedirs(self.cands_path, exist_ok=True)
-        fresh.select("doc_id", "weight", "key", "src_batch").write.mode(
-            "append"
-        ).parquet(self.cands_path)
-        guard.record_batch(self.path, batch_id)
+        with self.cands.guarded(batch_id):
+            rows = weighted_sample(
+                batch_df, n=self.n, weight_col=weight_col, id_col=id_col
+            ).localCheckpoint(eager=True)
+            self.cands.append_unseen(rows, batch_id, ["doc_id"])
         scope.escape_frame(rows)
-
-    def ingest(self, stream_df: DataFrame, query_name: str):
-        os.makedirs(self.path, exist_ok=True)
-        return (
-            stream_df.writeStream.outputMode("append")
-            .foreachBatch(self.process_batch)
-            .queryName(query_name)
-            .start()
-        )
 
     def sample(self) -> DataFrame:
         """(doc_id, weight, key): the n winners over everything ingested
         — identical to the batch weighted_sample over the same corpus.
         Candidates de-duplicate by doc_id first (replay hygiene), then
         the rounded-key/id tie-break ranks."""
+        return self._top(self.cands.read())
+
+    def _top(self, cands: DataFrame) -> DataFrame:
         return (
-            self._stored()
-            .groupBy("doc_id")
+            cands.groupBy("doc_id")
             .agg(F.first("weight").alias("weight"), F.max("key").alias("key"))
             .orderBy(F.desc("key"), F.asc("doc_id"))
             .limit(self.n)
@@ -527,23 +402,10 @@ class MaintainedSampleIndex:
 
     def compact(self) -> None:
         """Fold all candidate rows to the current global top-n
-        (src_batch=-2). Epoch fence BEFORE the fold (family contract)."""
-        from nornicdb_spark.sources.layout import recover_interrupted_swap
-        from nornicdb_spark.streaming import guard
-
-        recover_interrupted_swap(self.cands_path)
-        guard.advance_epoch(self.path)
-        import shutil
-
-        top = (
-            self.sample()
+        (src_batch=-2) — a fenced fold."""
+        self.cands.fold(
+            lambda df, _it: self._top(df)
             .withColumn("src_batch", F.lit(-2).cast("bigint"))
-            .select("doc_id", "weight", "key", "src_batch")
+            .select(*self.cands.columns)
+            .coalesce(1)
         )
-        stage = f"{self.cands_path}.stage"
-        top.coalesce(1).write.mode("overwrite").parquet(stage)
-        old = f"{self.cands_path}.old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(self.cands_path, old)
-        os.rename(stage, self.cands_path)
-        shutil.rmtree(old, ignore_errors=True)

@@ -35,6 +35,8 @@ CASES = [
     ([(10**15 + 7,)], "k long"),
     ([("it's\na\\multi\nline",)], "plan string"),
     ([(float("inf"), float("-inf"))], "a double, b double"),
+    # dict rows with an explicit schema: a missing key is NULL-filled
+    ([{"a": 1}, {"b": 2}], "a bigint, b bigint"),
 ]
 
 
@@ -76,3 +78,23 @@ def test_mixed_inference_falls_back(spark):
     # rules must decide, not the renderer
     with pytest.raises(Unrenderable):
         local_df(spark, [{"x": 1}, {"x": "s"}], None)
+
+
+def test_escaped_string_literals_conf_falls_back(spark):
+    # with escape processing off in the SQL parser, the renderer's
+    # backslash/quote escapes would corrupt the values — the literal
+    # path must step aside for createDataFrame
+    key = "spark.sql.parser.escapedStringLiterals"
+    data, schema = [("it's a \\path",), ("plain",)], "s string"
+    spark.conf.set(key, "true")
+    try:
+        with pytest.raises(Unrenderable):
+            local_df(spark, data, schema)
+        assert local_df(spark, [("plain",)], schema).collect() == (
+            spark.createDataFrame([("plain",)], schema).collect()
+        )
+        got = literal_df(spark, data, schema)
+        assert got.schema == spark.createDataFrame(data, schema).schema
+        assert got.collect() == spark.createDataFrame(data, schema).collect()
+    finally:
+        spark.conf.unset(key)

@@ -229,3 +229,28 @@ def test_escape_scoping_is_thread_local(spark):
     assert captured["lst"] == []
     assert scope.escaped_count() == 1
     scope.release_escaped()
+
+
+def test_lsh_near_duplicates_storage_flat(spark, catalog):
+    # the LSH path's lazily checkpointed band table is read by the lazy
+    # result plan, so it must enter the escape registry like every other
+    # operator checkpoint — repeated calls in one long session must not
+    # pin one more block-manager RDD each
+    from nornicdb_spark.operators.dedup import embedding_near_duplicates
+
+    emb = catalog.embeddings.select("vec_id", "embedding")
+
+    def run():
+        _materialize(embedding_near_duplicates(emb, threshold=0.9, exact=False))
+
+    run()
+    scope.release_escaped()
+    resident = scope.storage_rdd_count(spark)
+    for _ in range(3):
+        run()
+    scope.release_escaped()
+    after = scope.storage_rdd_count(spark)
+    assert after <= resident, (
+        f"block-manager RDD count grew across LSH near-dup calls: "
+        f"{resident} -> {after}"
+    )

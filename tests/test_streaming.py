@@ -1283,8 +1283,101 @@ def test_maintained_ivf_search_many_equals_single(spark, sf_dir, tmp_path):
         assert got.get(qid, []) == want, f"query {qid} diverges"
 
 
+def _compacting_index(kind, spark, sf_dir, path):
+    """(index, replay of its latest batch, reader) for each of the six
+    compacting maintained indexes, two batches ingested."""
+    from nornicdb_spark.catalog import Catalog
+    from nornicdb_spark.streaming.fulltext import MaintainedBM25Index
+    from nornicdb_spark.streaming.graphindex import MaintainedGraphIndex
+    from nornicdb_spark.streaming.ivf import MaintainedIVFIndex
+    from nornicdb_spark.streaming.sketches import (
+        MaintainedDistinctIndex,
+        MaintainedHistogramIndex,
+        MaintainedSampleIndex,
+    )
+
+    if kind == "bm25":
+        docs = Catalog(spark, sf_dir).documents
+        idx = MaintainedBM25Index(spark, path)
+        batches = [docs.filter(F.col("doc_id") % 2 == b) for b in range(2)]
+        q = "spark join query performance"
+
+        def read():
+            return [
+                (r.doc_id, round(r.score, 9))
+                for r in idx.search(q, k=10).collect()
+            ]
+    elif kind == "ivf":
+        emb = Catalog(spark, sf_dir).embeddings.select("vec_id", "embedding")
+        idx = MaintainedIVFIndex(spark, path)
+        idx.bootstrap(emb.filter(F.col("vec_id") % 3 == 0), n_lists=4)
+        batches = [emb.filter(F.col("vec_id") % 3 == b) for b in (1, 2)]
+        qv = [float(x) for x in emb.orderBy("vec_id").first().embedding]
+
+        def read():
+            return [
+                (r.vec_id, round(r.score, 9))
+                for r in idx.search(qv, refine_src=emb, k=5, n_probe=4).collect()
+            ]
+    elif kind == "graph":
+        idx = MaintainedGraphIndex(spark, path, n_pk=8)
+        batches = [
+            _edge_df(spark, [(40, 30), (7, 8)]),
+            _edge_df(spark, [(30, 20), (8, 9)]),
+        ]
+
+        def read():
+            return sorted(
+                (r.node, r.component) for r in idx.components().collect()
+            )
+    elif kind in ("distinct", "histogram"):
+        ev = spark.createDataFrame(
+            [(i, "a" if i % 3 else "b", i % 37) for i in range(200)],
+            "event_id long, grp_col string, v long",
+        )
+        batches = [ev.filter(F.col("event_id") % 2 == b) for b in range(2)]
+        if kind == "distinct":
+            idx = MaintainedDistinctIndex(spark, path, "grp_col", "v")
+
+            def read():
+                return sorted(tuple(r) for r in idx.counts().collect())
+        else:
+            idx = MaintainedHistogramIndex(spark, path, "grp_col", "v", width=5.0)
+
+            def read():
+                return sorted(tuple(r) for r in idx.totals().collect())
+    else:
+        docs = spark.createDataFrame(
+            [(i, float(1 + i % 7)) for i in range(300)],
+            "doc_id long, weight double",
+        )
+        idx = MaintainedSampleIndex(spark, path, n=20)
+        batches = [docs.filter(F.col("doc_id") % 2 == b) for b in range(2)]
+
+        def read():
+            return [(r.doc_id, r.key) for r in idx.sample().collect()]
+
+    for b, df in enumerate(batches):
+        idx.process_batch(df, batch_id=b)
+    return idx, lambda: idx.process_batch(batches[-1], batch_id=1), read
+
+
+# each index's full result size over the two batches: a read that
+# degenerates to a handful of rows both before and after compaction
+# must not pass the invariance check
+_COMPACTING = {
+    "bm25": 10,
+    "ivf": 5,
+    "graph": 6,
+    "distinct": 2,
+    "histogram": 16,
+    "sample": 20,
+}
+
+
+@pytest.mark.parametrize("kind", _COMPACTING)
 def test_compact_epoch_fence_survives_mid_fold_crash(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, sf_dir, tmp_path, monkeypatch, kind
 ):
     # The fence must hold even when compact() CRASHES mid-fold: the
     # epoch advances BEFORE the rewrites, so a replay of the latest
@@ -1293,19 +1386,11 @@ def test_compact_epoch_fence_survives_mid_fold_crash(
     # fence exists to refuse still blessed until a re-run). A refused
     # replay under the quiesce contract is harmless; a blessed one
     # double-counts folded postings/codes.
-    from nornicdb_spark.catalog import Catalog
     from nornicdb_spark.sources import layout
-    from nornicdb_spark.streaming.fulltext import MaintainedBM25Index
-    from nornicdb_spark.streaming.ivf import MaintainedIVFIndex
 
-    docs = Catalog(spark, sf_dir).documents
-    ft = MaintainedBM25Index(spark, str(tmp_path / "ftfence"))
-    for b in range(2):
-        ft.process_batch(docs.filter(F.col("doc_id") % 2 == b), batch_id=b)
-    q = "spark join query performance"
-    before = [
-        (r.doc_id, round(r.score, 9)) for r in ft.search(q, k=10).collect()
-    ]
+    idx, replay, read = _compacting_index(kind, spark, sf_dir, str(tmp_path / kind))
+    before = read()
+    assert len(before) == _COMPACTING[kind]
 
     real_rewrite = layout.rewrite_partitioned
 
@@ -1314,29 +1399,43 @@ def test_compact_epoch_fence_survives_mid_fold_crash(
 
     monkeypatch.setattr(layout, "rewrite_partitioned", crash)
     with pytest.raises(RuntimeError, match="injected"):
-        ft.compact()
-    # crash window: fold never ran, but the latest batch's replay is
-    # ALREADY refused
+        idx.compact()
+    # crash window: readers still see the pre-compaction snapshot, and
+    # the latest batch's replay is ALREADY refused
+    assert read() == before
     with pytest.raises(ValueError, match="high-water"):
-        ft.process_batch(docs.filter(F.col("doc_id") % 2 == 1), batch_id=1)
+        replay()
     monkeypatch.setattr(layout, "rewrite_partitioned", real_rewrite)
-    ft.compact()  # re-run completes the fold; search invariant
-    after = [
-        (r.doc_id, round(r.score, 9)) for r in ft.search(q, k=10).collect()
-    ]
-    assert after == before and len(after) == 10
+    idx.compact()  # re-run completes the fold; results invariant
+    assert read() == before
 
-    emb = Catalog(spark, sf_dir).embeddings.select("vec_id", "embedding")
-    ivf = MaintainedIVFIndex(spark, str(tmp_path / "ivffence"))
-    ivf.bootstrap(emb.filter(F.col("vec_id") % 2 == 0), n_lists=4)
-    ivf.process_batch(emb.filter(F.col("vec_id") % 2 == 1), batch_id=0)
-    monkeypatch.setattr(layout, "rewrite_partitioned", crash)
-    with pytest.raises(RuntimeError, match="injected"):
-        ivf.compact()
-    with pytest.raises(ValueError, match="high-water"):
-        ivf.process_batch(emb.filter(F.col("vec_id") % 2 == 1), batch_id=0)
-    monkeypatch.setattr(layout, "rewrite_partitioned", real_rewrite)
-    ivf.compact()
+
+@pytest.mark.parametrize("kind", _COMPACTING)
+def test_compact_on_never_ingested_index_is_noop(spark, tmp_path, kind):
+    # compact() on a fresh index must write nothing and raise nothing —
+    # the same no-op for every compacting index
+    import os
+
+    from nornicdb_spark.streaming.fulltext import MaintainedBM25Index
+    from nornicdb_spark.streaming.graphindex import MaintainedGraphIndex
+    from nornicdb_spark.streaming.ivf import MaintainedIVFIndex
+    from nornicdb_spark.streaming.sketches import (
+        MaintainedDistinctIndex,
+        MaintainedHistogramIndex,
+        MaintainedSampleIndex,
+    )
+
+    path = str(tmp_path / f"fresh_{kind}")
+    idx = {
+        "bm25": lambda: MaintainedBM25Index(spark, path),
+        "ivf": lambda: MaintainedIVFIndex(spark, path),
+        "graph": lambda: MaintainedGraphIndex(spark, path),
+        "distinct": lambda: MaintainedDistinctIndex(spark, path, "g", "v"),
+        "histogram": lambda: MaintainedHistogramIndex(spark, path, "g", "v"),
+        "sample": lambda: MaintainedSampleIndex(spark, path, n=5),
+    }[kind]()
+    idx.compact()
+    assert not os.path.exists(path)
 
 
 def test_maintained_ivf_search_zero_norm_returns_empty(
