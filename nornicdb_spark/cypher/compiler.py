@@ -30,6 +30,7 @@ from nornicdb_spark.cypher import ast as A
 from nornicdb_spark.cypher.parser import parse
 from nornicdb_spark.cypher.store import lit1_df
 from nornicdb_spark.operators.expand import cartesian
+from nornicdb_spark.operators.localframe import lit_expr
 
 LABEL_TABLES = {label: (table, key) for label, table, key in NODE_SPECS}
 
@@ -1622,7 +1623,7 @@ class Compiler:
             raise NotImplementedError(
                 "cypher: setNodeVectorProperty needs a labeled node"
             )
-        vec_col = F.array(*[F.lit(float(x)) for x in vec])
+        vec_col = lit_expr([float(x) for x in vec])
         n = self.store.set_props(label, self._target_ids(var), {key: vec_col})
         self.stats.add(properties_set=n)
         return None

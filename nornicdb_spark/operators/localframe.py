@@ -1,4 +1,28 @@
-"""JVM-native literal DataFrames.
+"""Driver values as Spark literals: the one renderer, and JVM-native
+literal DataFrames built with it.
+
+The literal rule (:func:`sql_literal`; every driver-side vector, lookup
+table, float constant and ``VALUES`` row enters a plan through it):
+
+- ``None`` is ``NULL``; booleans are ``TRUE``/``FALSE``; ints print as
+  themselves.
+- Floats are ``CAST('<repr>' AS DOUBLE)``. Python's repr round-trips the
+  IEEE value and the string-to-double cast parses it back to the same
+  bits; a bare SQL numeric would parse as DECIMAL and re-round. The
+  specials are spelled the way the cast parses them: ``'NaN'``,
+  ``'Infinity'``, ``'-Infinity'``.
+- Strings are single-quoted with backslash escapes. Escapes only mean
+  something while ``spark.sql.parser.escapedStringLiterals`` is off, so
+  a string that needs one raises :class:`Unrenderable` when it is on;
+  the conf is read only for such strings.
+- Lists and tuples are ``array(...)`` of their rendered items, to any
+  depth.
+
+:func:`lit_expr` parses the rendered text in one JVM call. A Column
+chain (``F.lit(list)`` is ``array(lit(x), ...)`` in PySpark 4) costs one
+py4j round trip per element instead. After constant folding both are
+the same array Literal with the same doubles; the element type of the
+parsed form is nullable, because the string-to-double cast is.
 
 ``spark.createDataFrame(<local rows>)`` in classic PySpark always builds
 a *Python-RDD-backed* frame (``Scan ExistingRDD`` over pickled rows):
@@ -15,23 +39,19 @@ Python-worker handshakes).
 :func:`local_df` renders simple local rows into a ``VALUES`` query that
 Spark parses into a LocalTableScan — pure JVM at execution, zero Python
 tasks, and constant-folded into broadcasts without worker round-trips.
-Values are emitted as SQL literals with an explicit ``CAST`` per column,
-so the result schema is exactly the requested one; floats round-trip
-through ``CAST('repr' AS DOUBLE)`` (repr is exact, a bare SQL numeric
-literal would parse as DECIMAL and re-round). Anything the renderer does
-not recognise (datetimes, Decimals, maps, mixed-type columns under
-inference, strings needing escapes while
-``spark.sql.parser.escapedStringLiterals`` turns escape processing off)
-raises :class:`Unrenderable` so callers can fall back to
-``createDataFrame`` — same rows either way, only the execution path
-differs.
+Each column gets an explicit ``CAST``, so the result schema is exactly
+the requested one. Anything outside the rule above (datetimes,
+Decimals, maps, mixed-type columns under inference) raises
+:class:`Unrenderable` so callers can fall back to ``createDataFrame`` —
+same rows either way, only the execution path differs.
 """
 
 from __future__ import annotations
 
 import functools
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _SQL_TYPE = {
     "string": "STRING", "bigint": "BIGINT", "long": "BIGINT",
@@ -59,10 +79,18 @@ def _sql_type(dt) -> str:
     raise Unrenderable(s)
 
 
-def _render(v, escapes_off) -> str:
-    """SQL literal for ``v``. ``escapes_off()`` is asked only for strings
-    that need an escape (backslash or quote), so the common path makes no
-    conf round trip."""
+def _escapes_off(spark) -> bool:
+    conf = spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
+    return conf.strip().lower() == "true"
+
+
+def sql_literal(v, escapes_off=None) -> str:
+    """SQL literal text for ``v`` under the module's literal rule.
+    ``escapes_off()`` is asked only for strings that need an escape
+    (backslash or quote), so the common path makes no conf round trip;
+    by default it reads the active session's parser mode."""
+    if escapes_off is None:
+        escapes_off = functools.cache(lambda: _escapes_off(SparkSession.active()))
     if v is None:
         return "NULL"
     if isinstance(v, bool):
@@ -70,10 +98,7 @@ def _render(v, escapes_off) -> str:
     if isinstance(v, int):
         return str(v)
     if isinstance(v, float):
-        # repr round-trips the IEEE value; string→double cast is exact.
-        # float(v) first: numpy float subclasses repr as 'np.float64(x)'.
-        # Specials spelled the way Spark's cast parses them (python repr
-        # 'inf'/'nan' would not).
+        # float(v) first: numpy float subclasses repr as 'np.float64(x)'
         f = float(v)
         if f != f:
             return "CAST('NaN' AS DOUBLE)"
@@ -87,8 +112,14 @@ def _render(v, escapes_off) -> str:
             raise Unrenderable("escapedStringLiterals=true")
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     if isinstance(v, (list, tuple)):
-        return "array(" + ", ".join(_render(x, escapes_off) for x in v) + ")"
+        return "array(" + ", ".join(sql_literal(x, escapes_off) for x in v) + ")"
     raise Unrenderable(type(v).__name__)
+
+
+def lit_expr(value) -> F.Column:
+    """Column literal for an array or matrix ``value``, parsed JVM-side
+    from :func:`sql_literal` text in one call. Scalars stay ``F.lit``."""
+    return F.expr(sql_literal(value))
 
 
 def _infer_type(values) -> str:
@@ -196,14 +227,10 @@ def local_df(spark, data, schema=None) -> DataFrame:
         if len(r) != len(names):
             raise Unrenderable("ragged row")
     # read at most once per call, and only if a string needs an escape
-    escapes_off = functools.cache(
-        lambda: spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-        .strip()
-        .lower()
-        == "true"
-    )
+    escapes_off = functools.cache(lambda: _escapes_off(spark))
     values = ", ".join(
-        "(" + ", ".join(_render(v, escapes_off) for v in r) + ")" for r in rows
+        "(" + ", ".join(sql_literal(v, escapes_off) for v in r) + ")"
+        for r in rows
     )
     aliases = ", ".join(f"c{i}" for i in range(len(names)))
     return spark.sql(f"SELECT {cols} FROM (VALUES {values}) AS _v({aliases})")

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nornicdb_spark.operators.localframe import sql_literal
+
 
 def _vec(col: str) -> F.Column:
     return F.col(col).cast("array<double>")
@@ -160,10 +162,8 @@ def rp_project_array(vec_name: str, signs, inv: float) -> F.Column:
     serving gate builds), while the SQL string parses JVM-side in one
     call. ``a + b + c`` parses left-associative and ``-v[i]`` is the
     same UnaryMinus node, so the expression tree — and therefore every
-    double — is identical to the unrolled form. The scale constant goes
-    through CAST('<repr>' AS DOUBLE): Python repr round-trips the IEEE
-    value exactly and Java parseDouble reconstructs the same bits
-    (a bare SQL numeric literal would parse as DECIMAL and re-round).
+    double — is identical to the unrolled form. The scale constant is
+    ``localframe.sql_literal`` text, the exact double.
     """
     comps = []
     for row in signs:
@@ -171,5 +171,5 @@ def rp_project_array(vec_name: str, signs, inv: float) -> F.Column:
             ("-" if s <= 0 else "") + f"`{vec_name}`[{i}]"
             for i, s in enumerate(row)
         )
-        comps.append(f"({chain}) * CAST('{inv!r}' AS DOUBLE)")
+        comps.append(f"({chain}) * {sql_literal(inv)}")
     return F.expr("array(" + ", ".join(comps) + ")")

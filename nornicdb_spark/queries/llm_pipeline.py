@@ -11,7 +11,7 @@ and hash-compared against DuckDB.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from nornicdb_spark.operators.localframe import literal_df
+from nornicdb_spark.operators.localframe import lit_expr, literal_df
 
 from nornicdb_spark.catalog import Catalog
 from nornicdb_spark.operators import dedup, multimodal, textops
@@ -1689,7 +1689,7 @@ def text_similar_docs_tfidf(spark, sf_dir):
     # zero-norm docs excluded; docs sharing no dim with the query drop
     # via the dot-product join on both engines).
     from nornicdb_spark.operators.scope import CkptScope
-    from nornicdb_spark.search.vector import _lit_vec, dot, norm
+    from nornicdb_spark.search.vector import dot, norm
 
     docs = Catalog(spark, sf_dir).documents
     # checkpoint the vectors ONCE: the query-row collect below otherwise
@@ -1718,7 +1718,7 @@ def text_similar_docs_tfidf(spark, sf_dir):
         v.filter(F.col("doc_id") != 0)
         .select(
             "doc_id",
-            dot(F.col("vec"), _lit_vec(qv)).alias("_d"),
+            dot(F.col("vec"), lit_expr(qv)).alias("_d"),
             norm(F.col("vec")).alias("_n"),
         )
         .filter(F.col("_n") > 0)

@@ -20,16 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from nornicdb_spark.operators.localframe import literal_df
-
-
-def _lit_vec(vec) -> F.Column:
-    # one array Literal node, NOT array(lit, lit, …): an unrolled
-    # 128-plane × 64-dim LSH signature built the per-element way carries
-    # ~8k expression nodes through analysis/optimization (measured ≥10 s
-    # of driver time per plan build at n_bits=128 — guide §7.3); a list
-    # literal is a single node with identical value and codegen
-    return F.lit([float(x) for x in vec])
+from nornicdb_spark.operators.localframe import lit_expr, literal_df, sql_literal
 
 
 def dot(a: F.Column, b: F.Column) -> F.Column:
@@ -78,7 +69,7 @@ def cosine_topk(
     emb = F.col(vec_col).cast("array<double>")
     scored = embeddings.select(
         F.col(id_col).alias("vec_id"),
-        cosine_sim(emb, _lit_vec(query_vec)).alias("score"),
+        cosine_sim(emb, lit_expr([float(x) for x in query_vec])).alias("score"),
     )
     if min_similarity is not None:
         scored = scored.where(
@@ -147,7 +138,7 @@ def euclidean_topk(
     return (
         embeddings.select(
             F.col(id_col).alias("vec_id"),
-            euclidean_dist(emb, _lit_vec(query_vec)).alias("dist"),
+            euclidean_dist(emb, lit_expr([float(x) for x in query_vec])).alias("dist"),
         )
         .orderBy(F.asc(F.round(F.col("dist"), 9)), F.asc("vec_id"))
         .limit(k)
@@ -284,20 +275,16 @@ class RandomHyperplaneLSH:
         string parses JVM-side in one call. The parsed tree is the same
         expression the Column chain built — same aggregate/zip_with
         lambdas, same CASE WHEN bits, same left-associative
-        ``acc * 2 + bit`` band fold — except the per-plane constant
-        arrives as ``array(CAST('<repr>' AS DOUBLE), …)``, which
-        constant-folds to the identical double-array Literal (repr
-        round-trips IEEE bits exactly; a bare SQL numeric would parse
-        as DECIMAL and re-round)."""
+        ``acc * 2 + bit`` band fold; the per-plane constants are
+        ``localframe.sql_literal`` text, which constant-folds to the
+        same double-array Literal."""
         vec = f"CAST(`{self.vec_col}` AS ARRAY<DOUBLE>)"
         bits = []
         for row in self.planes:
-            arr = "array(" + ", ".join(
-                f"CAST('{float(x)!r}' AS DOUBLE)" for x in row
-            ) + ")"
+            arr = sql_literal([float(x) for x in row])
             d = (
                 f"aggregate(zip_with({vec}, {arr}, (x, y) -> x * y), "
-                f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+                f"{sql_literal(0.0)}, (acc, v) -> acc + v)"
             )
             bits.append(f"(CASE WHEN {d} >= 0 THEN 1 ELSE 0 END)")
         per_band = len(bits) // self.n_bands
@@ -443,14 +430,11 @@ class ProductQuantizerIndex:
         qv = np.asarray(query_vec, dtype="float64")
         m = len(self.codebooks)
         sub = len(qv) // m
-        lut_rows = []
-        for j, cb in enumerate(self.codebooks):
-            qj = qv[j * sub : (j + 1) * sub]
-            lut_rows.append(
-                F.array(*[F.lit(float(((cb[c] - qj) ** 2).sum()))
-                          for c in range(cb.shape[0])])
-            )
-        lut = F.array(*lut_rows)
+        lut = lit_expr([
+            [float(((cb[c] - qv[j * sub : (j + 1) * sub]) ** 2).sum())
+             for c in range(cb.shape[0])]
+            for j, cb in enumerate(self.codebooks)
+        ])
         return F.aggregate(
             F.sequence(F.lit(0), F.lit(m - 1)),
             F.lit(0.0),
@@ -530,7 +514,7 @@ class IVFPQIndex:
         feat = embeddings.withColumn("_features", array_to_vector(v))
         coarse = KMeans(k=n_lists, seed=seed, featuresCol="_features").fit(feat)
         centers = [np.asarray(c, dtype="float64") for c in coarse.clusterCenters()]
-        centers_lit = F.array(*[_lit_vec(c) for c in centers])
+        centers_lit = lit_expr([c.tolist() for c in centers])
         assigned = (
             coarse.transform(feat)
             .withColumn("list_id", F.col("prediction").cast("int"))
@@ -598,18 +582,14 @@ class IVFPQIndex:
 
         # one (probe, m, k_codes) literal LUT block: LUT[p][j][c] =
         # ||(q − c_p)_j − codebook_j[c]||² — ADC against list p's residuals
-        luts = []
-        for l in probe:
-            rq = qv - self.coarse_centers[l]
-            rows = []
-            for j, cb in enumerate(self.codebooks):
-                qj = rq[j * sub : (j + 1) * sub]
-                rows.append(
-                    F.array(*[F.lit(float(((cb[c] - qj) ** 2).sum()))
-                              for c in range(cb.shape[0])])
-                )
-            luts.append(F.array(*rows))
-        lut3 = F.array(*luts)
+        lut3 = lit_expr([
+            [
+                [float(((cb[c] - rq[j * sub : (j + 1) * sub]) ** 2).sum())
+                 for c in range(cb.shape[0])]
+                for j, cb in enumerate(self.codebooks)
+            ]
+            for rq in (qv - self.coarse_centers[l] for l in probe)
+        ])
         pos = None
         for i, l in enumerate(probe):
             cond = F.col("list_id") == int(l)
@@ -687,7 +667,7 @@ class Int8Index:
         qn = float(sum(float(x) * float(x) for x in query_vec)) ** 0.5
         code_dot = F.aggregate(
             F.zip_with(
-                F.col("codes"), _lit_vec(query_vec),
+                F.col("codes"), lit_expr([float(x) for x in query_vec]),
                 lambda c, qx: c.cast("double") * qx,
             ),
             F.lit(0.0),
@@ -755,7 +735,7 @@ def rp_refine_topk(
     )
     cand = (
         random_projection(emb, in_dim, out_dim)
-        .select("vec_id", cosine_sim(F.col("rp"), _lit_vec(qrp)).alias("cs"))
+        .select("vec_id", cosine_sim(F.col("rp"), lit_expr(qrp)).alias("cs"))
         .orderBy(F.desc(F.round(F.col("cs"), 9)), F.asc("vec_id"))
         .limit(int(coarse))
         .select("vec_id")

@@ -17,6 +17,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEM`` is unset: about
+    40% of physical RAM, capped at 16g. In local mode the driver JVM is
+    the whole engine, and its heap plus off-heap and Python workers must
+    fit beside everything else on the host; a fixed 16g on a 16 GB
+    host gets the JVM killed by the kernel."""
+    if total_bytes is None:
+        try:
+            total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, ValueError, OSError):  # no sysconf: old cap
+            return "16g"
+    return f"{min(16, max(1, int(total_bytes * 0.4 / 2**30)))}g"
+
+
 def get_spark(
     app_name: str = "nornicdb-spark",
     master: str | None = None,
@@ -43,7 +57,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from nornicdb_spark.operators.localframe import literal_df
+from nornicdb_spark.operators.localframe import lit_expr, literal_df
 from nornicdb_spark.sources.layout import BatchTable, MaintainedIndex
 
 __all__ = ["MaintainedIVFIndex"]
@@ -108,14 +108,14 @@ class MaintainedIVFIndex(MaintainedIndex):
         centroid literals (‖v−c‖² = ‖v‖² − 2v·c + ‖c‖²; ‖v‖² is common
         to all lists, so argmin(‖c‖² − 2v·c) suffices — one fused
         aggregate per centroid, no Python)."""
-        from nornicdb_spark.search.vector import _lit_vec, dot
+        from nornicdb_spark.search.vector import dot
 
         centers = self.centers()
         base = vectors.select(*self._code_cols())
         scores = F.array(
             *[
                 F.lit(float(sum(x * x for x in c)))
-                - 2.0 * dot(F.col("_v"), _lit_vec(c))
+                - 2.0 * dot(F.col("_v"), lit_expr(c))
                 for c in centers
             ]
         )
@@ -266,7 +266,7 @@ class MaintainedIVFIndex(MaintainedIndex):
         # matching :meth:`search`), comparator-sorted sim-desc /
         # list_id-asc (the stable argsort ``search`` computes), sliced
         # to n_probe, exploded to (query_id, list_id) probe pairs.
-        from nornicdb_spark.search.vector import _lit_vec, dot
+        from nornicdb_spark.search.vector import dot
 
         qbase = (
             queries.select(
@@ -287,7 +287,7 @@ class MaintainedIVFIndex(MaintainedIndex):
             *[
                 F.struct(
                     (
-                        (dot(F.col("qv"), _lit_vec(c))
+                        (dot(F.col("qv"), lit_expr(c))
                          / (F.lit(cn) * F.col("qn"))).alias("sim")
                         if cn > 0.0
                         else F.lit(-1.0).alias("sim")
@@ -453,7 +453,7 @@ class MaintainedIVFIndex(MaintainedIndex):
         their codes, exact-refine the top k·refine against ``refine_src``
         (the fp32 corpus — cold storage at scale; only ≤ k·refine rows
         are fetched). Returns (vec_id, score) descending, ties by id."""
-        from nornicdb_spark.search.vector import _lit_vec, cosine_topk
+        from nornicdb_spark.search.vector import cosine_topk
 
         id_type = self.codes.id_type(id_type)
         qn = float(sum(float(x) * float(x) for x in query_vec)) ** 0.5
@@ -474,7 +474,7 @@ class MaintainedIVFIndex(MaintainedIndex):
         probe = sorted(range(len(centers)), key=lambda i: -cos(centers[i]))[:n_probe]
         code_dot = F.aggregate(
             F.zip_with(
-                F.col("codes"), _lit_vec(query_vec),
+                F.col("codes"), lit_expr([float(x) for x in query_vec]),
                 lambda c, qx: c.cast("double") * qx,
             ),
             F.lit(0.0),

@@ -21,26 +21,7 @@ sys.path.insert(0, str(ROOT))
 from nornicdb_spark import get_spark  # noqa: E402
 from nornicdb_spark.queries import QUERIES  # noqa: E402
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_top_unshipped_revenue",
-    "q5_revenue_by_nation",
-    "topk_orders_per_priority",
-    "window_lag_running_sum",
-    "graph_orders_per_customer",
-    "graph_customer_parts_2hop",
-    "graph_link_prediction_suppliers",
-    "graph_var_length_reach",
-    "graph_pagerank",
-    "graph_dijkstra_customer_parts",
-    "cypher_orders_pipeline",
-    "bm25_topk",
-    "vector_knn_join",
-    "hybrid_rrf",
-    "dedup_minhash_lsh",
-    "text_quality_scores",
-    "mutation_merge_order_counts",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def main():

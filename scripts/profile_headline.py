@@ -27,7 +27,7 @@ sys.path.insert(0, str(ROOT))
 from nornicdb_spark import get_spark  # noqa: E402
 from nornicdb_spark.queries import QUERIES  # noqa: E402
 
-from capture_plans import HEADLINE  # noqa: E402
+from bench import HEADLINE  # noqa: E402
 
 
 def rest(app_url: str, path: str):

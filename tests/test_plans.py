@@ -850,11 +850,7 @@ def test_lsh_signature_sql_equals_column_chain(spark, sf_dir):
     # 128/8 near-dup config and the 24/8 ann config.
     from pyspark.sql import functions as F
 
-    from nornicdb_spark.search.vector import (
-        RandomHyperplaneLSH,
-        _lit_vec,
-        dot,
-    )
+    from nornicdb_spark.search.vector import RandomHyperplaneLSH, dot
 
     def chain_signature(lsh):
         bits = []
@@ -863,7 +859,7 @@ def test_lsh_signature_sql_equals_column_chain(spark, sf_dir):
                 F.when(
                     dot(
                         F.col(lsh.vec_col).cast("array<double>"),
-                        _lit_vec(row),
+                        F.lit([float(x) for x in row]),
                     )
                     >= 0,
                     1,
