@@ -20,6 +20,7 @@ test.go), not by copying its routing.
 
 from __future__ import annotations
 
+import dataclasses
 import itertools
 
 from pyspark.sql import Column, DataFrame
@@ -33,6 +34,9 @@ from nornicdb_spark.operators.expand import cartesian
 from nornicdb_spark.operators.localframe import lit_expr
 
 LABEL_TABLES = {label: (table, key) for label, table, key in NODE_SPECS}
+
+# entries an Engine's pattern memo keeps (see Compiler._memo_match)
+PATTERN_MEMO_CAP = 128
 
 AGG_FUNCS = {
     "count", "sum", "avg", "min", "max", "collect", "stdev", "stdevp",
@@ -171,7 +175,8 @@ class Binding:
 
 class Compiler:
     def __init__(self, catalog: Catalog, params: dict | None = None, store=None,
-                 ckpt_sink: list | None = None):
+                 ckpt_sink: list | None = None, pattern_memo: dict | None = None,
+                 snapshot=None):
         self.cat = catalog
         # row-tag / export checkpoints created while compiling — the
         # caller (Engine) ties their release to the compiled plan's
@@ -193,6 +198,10 @@ class Compiler:
         self._scalar_vars: dict[str, object] = {}  # FOREACH loop bindings
         self._paths: dict[str, dict] = {}  # named-path accessors
         self._anon = itertools.count()
+        # the Engine's pattern memo and the store snapshot it is keyed
+        # on; only read-only queries get one (_memo_match)
+        self._pattern_memo = pattern_memo
+        self._snapshot = snapshot
 
     def _sink_ckpt(self, df: DataFrame, eager: bool = True) -> DataFrame:
         """localCheckpoint whose blocks are tied to the compiled plan's
@@ -209,7 +218,10 @@ class Compiler:
     def compile(self, q: A.Query) -> DataFrame:
         df = self._compile_single(q)
         for is_all, rhs in q.unions:
-            rdf = Compiler(self.cat, self.params, store=self.store, ckpt_sink=self.ckpts)._compile_single(rhs)
+            rdf = Compiler(
+                self.cat, self.params, store=self.store, ckpt_sink=self.ckpts,
+                pattern_memo=self._pattern_memo, snapshot=self._snapshot,
+            )._compile_single(rhs)
             df = df.unionByName(rdf)
             if not is_all:
                 df = df.distinct()
@@ -468,10 +480,64 @@ class Compiler:
             saved.update(self.bindings)
             self.bindings = saved
             return
-        for path in m.paths:
-            self._compile_path(path)
+        if self._memoizable(m):
+            self._memo_match(m)
+        else:
+            for path in m.paths:
+                self._compile_path(path)
         if m.where is not None:
             self._apply_where(m.where)
+
+    def _memoizable(self, m: A.MatchClause) -> bool:
+        """A leading, non-OPTIONAL MATCH of a read-only query whose paths
+        are all fixed-length, unnamed and not shortestPath. Var-length
+        expands need the filtered start set; named paths carry _paths
+        state."""
+        return (
+            self._pattern_memo is not None and self.frame is None
+            and not self.bindings and not m.optional
+            and all(
+                p.name is None and p.func is None
+                and all(r.min_hops == 1 and r.max_hops == 1 for r in p.elements[1::2])
+                for p in m.paths
+            )
+        )
+
+    def _memo_match(self, m: A.MatchClause) -> None:
+        """Take the pattern frame from the Engine's memo, keyed on the
+        clause with its inline {k: v} maps stripped plus the store
+        snapshot; the maps become filters on the reused frame, so a read
+        with new parameters rebuilds only its filters, WHERE and
+        projection. Catalyst pushes those filters to the same scans as
+        interleaved ones. Anonymous elements are named first, in the order
+        _compile_path draws names (first node, then each hop's node before
+        its relationship), so the fresh counter moves past every name the
+        frame binds; a miss runs the same code as a hit."""
+        paths, filters = [], []
+        for path in m.paths:
+            elems = list(path.elements)
+            for i in [0] + [j for h in range(1, len(elems), 2) for j in (h + 1, h)]:
+                el = elems[i]
+                var = el.var or self._fresh("_r" if i % 2 else "_anon")
+                elems[i] = dataclasses.replace(el, var=var, props=())
+            paths.append(A.Path(tuple(elems)))
+            filters += [
+                (named.var, key, expr)
+                for el, named in zip(path.elements, elems)
+                for key, expr in el.props
+            ]
+        key = (tuple(paths), self._snapshot)
+        hit = self._pattern_memo.get(key)
+        if hit is None:
+            for path in paths:
+                self._compile_path(path)
+            hit = (self.frame, self.bindings)
+            if len(self._pattern_memo) >= PATTERN_MEMO_CAP:
+                self._pattern_memo.pop(next(iter(self._pattern_memo)))
+            self._pattern_memo[key] = hit
+        self.frame, self.bindings = hit[0], dict(hit[1])
+        for var, prop, expr in filters:
+            self.frame = self.frame.filter(F.col(f"{var}_{prop}") == self._expr(expr))
 
     def _apply_where(self, where) -> None:
         """Split top-level AND conjuncts; EXISTS{}/NOT EXISTS{} become

@@ -9,7 +9,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from nornicdb_spark.catalog import Catalog
-from nornicdb_spark.cypher.compiler import compile_cypher
 from nornicdb_spark.cypher.parser import parse
 from nornicdb_spark.operators import scope
 from nornicdb_spark.operators.localframe import literal_df
@@ -95,6 +94,12 @@ class Engine:
         # coarser than the reference's per-label invalidation, never
         # stale.
         self._result_cache: dict = {}
+        # pattern memo: the frame of each leading fixed-length MATCH
+        # pattern, keyed on the clause with its inline property maps
+        # stripped plus the store snapshot (Compiler._memo_match). A read
+        # with new parameters filters a reused frame instead of rebuilding
+        # its scans and joins over py4j. Plans only, no blocks.
+        self._pattern_memo: dict = {}
         # unique token tagging this engine's FIFO-escaped frames so
         # close() frees only ours (not frames other live Engines'
         # consumers still read)
@@ -116,8 +121,6 @@ class Engine:
         (lazy — Catalyst plans it with the rest of the job). Write
         queries (CREATE/MERGE/SET/REMOVE/DELETE) mutate this Engine's
         store eagerly and return a one-row stats summary."""
-        from nornicdb_spark.cypher.compiler import Compiler
-
         stripped = query.lstrip()
         head = stripped.split(None, 1)[0].upper() if stripped else ""
         if head in ("USE", ":USE"):
@@ -144,26 +147,34 @@ class Engine:
             # Neo4j EXPLAIN: plan only, nothing executes (reference
             # explain.go:37-63) — one row with the formatted Spark plan
             body = stripped.split(None, 1)[1]
-            return literal_df(self.spark, 
-                [(self.explain(body),)], "plan string"
-            )
+            return literal_df(self.spark, [(self.explain(body, params),)], "plan string")
         if head == "PROFILE":
             # PROFILE runs the query; per-operator runtime rows are a
             # server-side concern — results come back like a plain run
             query = stripped.split(None, 1)[1]
+        return self._compile(query, _cached_parse(query), params)
 
-        ast = _cached_parse(query)
-        cache_key = None
+    def _compile(self, query: str, ast, params: dict | None) -> DataFrame:
+        from nornicdb_spark.cypher.compiler import Compiler
+
+        cache_key = snapshot = None
         if _is_read_only(ast):
             # repr-encode params: values may be unhashable (list-valued
             # vector parameters), and repr is deterministic for the
             # literal types Cypher parameters allow
             pkey = repr(sorted((params or {}).items(), key=lambda kv: kv[0]))
-            cache_key = (query, pkey, self._store_snapshot())
+            snapshot = self._store_snapshot()
+            cache_key = (query, pkey, snapshot)
             hit = self._result_cache.get(cache_key)
             if hit is not None:
                 return hit[0]
-        compiler = Compiler(self.catalog, params, store=self.store)
+        # only read-only queries take pattern frames from the memo: a
+        # write query changes the store while it compiles
+        compiler = Compiler(
+            self.catalog, params, store=self.store,
+            pattern_memo=self._pattern_memo if cache_key is not None else None,
+            snapshot=snapshot,
+        )
         # compile-time checkpoint blocks (row tags, merge/export frames)
         # AND operator-internal kept frames (e.g. a CALL'd gds operator's
         # contribs frame, escaped by CkptScope.finish mid-compile) live
@@ -213,6 +224,7 @@ class Engine:
             for jrdd in pinned:
                 scope.unpersist_rdd(jrdd)
         self._result_cache.clear()
+        self._pattern_memo.clear()
         if self._store is not None:
             self._store.close()  # store versions are engine-owned
         scope.release_escaped(owner=self._escape_owner)
@@ -220,15 +232,17 @@ class Engine:
     def _store_snapshot(self):
         """Identity snapshot of the mutable store — every write swaps in
         new DataFrames, so object identities change with any mutation.
-        A pristine Engine (no store yet) snapshots as None."""
+        The snapshot holds the DataFrames themselves (they compare by
+        identity), so a cache key keeps its versions alive and a freed
+        version's id can never make a later one look unchanged."""
         from nornicdb_spark.projections import DEFAULT_CATALOG
 
         ic = getattr(self.catalog, "_index_catalog", None)
         ic_key = tuple(sorted(ic._defs)) if ic is not None else None
         s = self.store  # instantiate: compile() will create it anyway
         return (
-            tuple(sorted((k, id(v)) for k, v in s.tables.items())),
-            id(s.edges),
+            tuple(sorted(s.tables.items(), key=lambda kv: kv[0])),
+            s.edges,
             s._dyn_counter,
             s._edge_batch,
             ic_key,
@@ -263,12 +277,17 @@ class Engine:
 
     def explain(self, query: str, params: dict | None = None) -> str:
         """EXPLAIN (reference explain.go:37-63): parsed clause summary +
-        Spark's formatted physical plan for the compiled DataFrame."""
-        ast = parse(query)
+        Spark's formatted physical plan for the DataFrame :meth:`cypher`
+        would return — same parse cache, same store-aware compile, so
+        the plan reads this Engine's writes. Write queries are refused:
+        compiling one applies its writes."""
+        ast = _cached_parse(query)
+        if not _is_read_only(ast):
+            raise ValueError("EXPLAIN takes a read-only query: compiling a write runs it")
         lines = ["=== Cypher AST ==="]
         for clause in ast.clauses:
             lines.append(f"  {type(clause).__name__}")
-        df = compile_cypher(self.catalog, query, params)
+        df = self._compile(query, ast, params)
         lines.append("=== Physical plan ===")
         lines.append(df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
             df._jdf.queryExecution(), "formatted"

@@ -20,7 +20,7 @@ import sys
 def run_bench(repo_dir: str) -> dict:
     env = dict(os.environ)
     env.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    env.setdefault("SPARK_GRAFT_CPUS", "32")
+    env.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     out = subprocess.run(
         [sys.executable, "bench.py"],
         cwd=repo_dir, env=env, capture_output=True, text=True, timeout=1800,
