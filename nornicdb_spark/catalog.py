@@ -21,7 +21,7 @@ label stay separate → label scans are table scans, not filters.
 
 from __future__ import annotations
 
-from functools import cached_property
+from functools import cached_property, reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -76,6 +76,16 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
 def node_id(label: str, key_col) -> F.Column:
     """Graph node id: '<Label>:<key>' (FIXTURES.md §A)."""
     return F.concat(F.lit(label + ":"), F.col(key_col).cast("string"))
+
+
+def label_nodes(label: str, key_col: str) -> list[F.Column]:
+    """``(id, label, key)`` columns of one label's node table — the
+    per-label part of a graph's ``nodes`` union."""
+    return [
+        node_id(label, key_col).alias("id"),
+        F.lit(label).alias("label"),
+        F.col(key_col).cast("long").alias("key"),
+    ]
 
 
 _SHARED_CATALOGS: dict = {}
@@ -344,19 +354,12 @@ class PropertyGraph:
 
     @classmethod
     def from_star_schema(cls, cat: Catalog) -> "PropertyGraph":
-        parts = []
-        for label, table, key in NODE_SPECS:
-            parts.append(
-                cat.table(table).select(
-                    node_id(label, key).alias("id"),
-                    F.lit(label).alias("label"),
-                    F.col(key).cast("long").alias("key"),
-                    cls._enc_of(label, key).alias("id_enc"),
-                )
+        nodes_full = reduce(lambda a, b: a.unionByName(b), [
+            cat.table(table).select(
+                *label_nodes(label, key), cls._enc_of(label, key).alias("id_enc")
             )
-        nodes_full = parts[0]
-        for p in parts[1:]:
-            nodes_full = nodes_full.unionByName(p)
+            for label, table, key in NODE_SPECS
+        ])
         nodes = nodes_full.drop("id_enc")
 
         orders, lineitem = cat.table("orders"), cat.table("lineitem")
@@ -423,9 +426,7 @@ class PropertyGraph:
                     *prop_cols,
                 )
             )
-        edges_full = padded[0]
-        for f in padded[1:]:
-            edges_full = edges_full.unionByName(f)
+        edges_full = reduce(lambda a, b: a.unionByName(b), padded)
         edges = edges_full.drop("src_enc", "dst_enc")
 
         endpoints = {

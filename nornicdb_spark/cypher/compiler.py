@@ -26,14 +26,12 @@ import itertools
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from nornicdb_spark.catalog import NODE_SPECS, Catalog, node_id
+from nornicdb_spark.catalog import Catalog, node_id
 from nornicdb_spark.cypher import ast as A
 from nornicdb_spark.cypher.parser import parse
-from nornicdb_spark.cypher.store import lit1_df
+from nornicdb_spark.cypher.store import LABEL_TABLES, GraphStore, WriteStats, lit1_df
 from nornicdb_spark.operators.expand import cartesian
 from nornicdb_spark.operators.localframe import lit_expr
-
-LABEL_TABLES = {label: (table, key) for label, table, key in NODE_SPECS}
 
 # entries an Engine's pattern memo keeps (see Compiler._memo_match)
 PATTERN_MEMO_CAP = 128
@@ -122,6 +120,15 @@ def _sub_outside_strings(pat, repl: str, text: str) -> str:
     return "".join(out)
 
 
+def _props_equal(frame: DataFrame, props: dict, cond: Column | None = None) -> Column:
+    """``cond`` AND ``frame.k == v`` for every MERGE property; a property
+    the frame has no column for is false (nothing matches)."""
+    for k, v in props.items():
+        eq = (F.col(k) == F.lit(v)) if k in frame.columns else F.lit(False)
+        cond = eq if cond is None else cond & eq
+    return cond
+
+
 def _contains_agg(e) -> bool:
     if isinstance(e, A.CountStar):
         return True
@@ -174,20 +181,22 @@ class Binding:
 
 
 class Compiler:
-    def __init__(self, catalog: Catalog, params: dict | None = None, store=None,
-                 ckpt_sink: list | None = None, pattern_memo: dict | None = None,
-                 snapshot=None):
+    """Compiles one query against an Engine's :class:`GraphStore`: label
+    scans and edges read the store's current tables, traversals, CALL
+    algorithms and schema procedures read ``store.graph``, and write
+    clauses swap in the store's next version."""
+
+    def __init__(self, catalog: Catalog, params: dict | None = None, *,
+                 store: GraphStore, ckpt_sink: list | None = None,
+                 pattern_memo: dict | None = None, snapshot=None):
         self.cat = catalog
         # row-tag / export checkpoints created while compiling — the
         # caller (Engine) ties their release to the compiled plan's
         # lifetime (result-cache entry eviction / deferred escape).
         # Inner compilers share the outermost sink.
         self.ckpts: list = ckpt_sink if ckpt_sink is not None else []
-        self.graph = catalog.graph
         self.params = params or {}
-        self.store = store  # GraphStore for write clauses / post-write reads
-        from nornicdb_spark.cypher.store import WriteStats
-
+        self.store = store
         self.stats = WriteStats()
         self._wrote = False
         self._created: dict[str, str] = {}  # CREATE-bound var -> node id
@@ -202,6 +211,18 @@ class Compiler:
         # on; only read-only queries get one (_memo_match)
         self._pattern_memo = pattern_memo
         self._snapshot = snapshot
+
+    def _inner(self, params: dict | None = None, **kw) -> "Compiler":
+        """Compiler for a nested query over the same store and sink."""
+        return Compiler(
+            self.cat, self.params if params is None else params,
+            store=self.store, ckpt_sink=self.ckpts, **kw,
+        )
+
+    def _absorb(self, inner: "Compiler") -> None:
+        """Count a nested query's writes as this query's."""
+        self.stats.add(**dataclasses.asdict(inner.stats))
+        self._wrote = self._wrote or inner._wrote
 
     def _sink_ckpt(self, df: DataFrame, eager: bool = True) -> DataFrame:
         """localCheckpoint whose blocks are tied to the compiled plan's
@@ -218,8 +239,7 @@ class Compiler:
     def compile(self, q: A.Query) -> DataFrame:
         df = self._compile_single(q)
         for is_all, rhs in q.unions:
-            rdf = Compiler(
-                self.cat, self.params, store=self.store, ckpt_sink=self.ckpts,
+            rdf = self._inner(
                 pattern_memo=self._pattern_memo, snapshot=self._snapshot,
             )._compile_single(rhs)
             df = df.unionByName(rdf)
@@ -272,15 +292,19 @@ class Compiler:
         """FOREACH — driver-side loop over a list value; each element is
         bound as a scalar and the update clauses replayed (reference
         clauses.go:1689-1797 iterates the same way per row)."""
-        self._require_store()
+        self._wrote = True
         values = self._py_value(c.source)
         if values is None:
             return
         outer = self._scalar_vars.get(c.var)
+        created = self._created
         for v in values:
             self._scalar_vars[c.var] = v
+            # the body's CREATE/MERGE variables are scoped to one iteration
+            self._created = dict(created)
             for up in c.updates:
                 self._compile_clause(up)
+        self._created = created
         if outer is None:
             self._scalar_vars.pop(c.var, None)
         else:
@@ -318,16 +342,9 @@ class Compiler:
             and first.limit is None
         ):
             return self._compile_correlated_call(c, first)
-        inner = Compiler(self.cat, self.params, store=self.store, ckpt_sink=self.ckpts)
+        inner = self._inner()
         result = inner._compile_single(c.query)
-        self.stats.add(
-            nodes_created=inner.stats.nodes_created,
-            relationships_created=inner.stats.relationships_created,
-            properties_set=inner.stats.properties_set,
-            nodes_deleted=inner.stats.nodes_deleted,
-            relationships_deleted=inner.stats.relationships_deleted,
-        )
-        self._wrote = self._wrote or inner._wrote
+        self._absorb(inner)
         if not isinstance(c.query.clauses[-1], A.ReturnClause):
             return  # unit subquery (writes only) — nothing to import
         if self.frame is None:
@@ -360,20 +377,13 @@ class Compiler:
         for k, tag in corr.items():
             import_frame = import_frame.withColumn(tag, F.col(f"`{k}`"))
 
-        inner = Compiler(self.cat, self.params, store=self.store, ckpt_sink=self.ckpts)
+        inner = self._inner()
         inner.frame = import_frame
         inner.bindings = {v: self.bindings[v] for v in import_vars}
         inner._carry = list(corr.values())
         body = A.Query(clauses=tuple(c.query.clauses[1:]), unions=())
         result = inner._compile_single(body)
-        self.stats.add(
-            nodes_created=inner.stats.nodes_created,
-            relationships_created=inner.stats.relationships_created,
-            properties_set=inner.stats.properties_set,
-            nodes_deleted=inner.stats.nodes_deleted,
-            relationships_deleted=inner.stats.relationships_deleted,
-        )
-        self._wrote = self._wrote or inner._wrote
+        self._absorb(inner)
         last = c.query.clauses[-1]
         if not isinstance(last, A.ReturnClause):
             return  # unit subquery (writes only) — frame unchanged
@@ -423,24 +433,13 @@ class Compiler:
         """Scan for (var:Label) — typed base table + synthesized graph id;
         label-less vars scan the id-only union (no properties)."""
         if label is None:
-            df = self.store.nodes if self.store is not None else self.graph.nodes
+            df = self.store.graph.nodes
             return df.select(*[F.col(c).alias(f"{var}_{c}") for c in df.columns])
-        if label not in LABEL_TABLES:
-            # dynamic label (created at runtime) or unknown → empty scan;
-            # the reference is schema-free, so neither is an error
-            if self.store is not None and self.store.has_dynamic(label):
-                _t, key, df = self.store.table_for(label)
-            else:
-                return lit1_df(self.cat.spark, 
-                    [], f"{var}_id string"
-                )
-        else:
-            table, key = LABEL_TABLES[label]
-            df = (
-                self.store.tables[table]
-                if self.store is not None
-                else self.cat.table(table)
-            )
+        if label not in LABEL_TABLES and not self.store.has_dynamic(label):
+            # unknown label → empty scan; the reference is schema-free,
+            # so it is not an error
+            return lit1_df(self.cat.spark, [], f"{var}_id string")
+        _table, key, df = self.store.table_for(label)
         return df.select(
             node_id(label, key).alias(f"{var}_id"),
             *[F.col(c).alias(f"{var}_{c}") for c in df.columns],
@@ -765,7 +764,7 @@ class Compiler:
                 F.col(f"{b_var}_id").alias("id")
             )
 
-        g = self._pgraph()
+        g = self.store.graph
         paths = all_shortest_paths(
             g, starts, targets, max_hops=rel.max_hops,
             rel_types=rel.types, direction=rel.direction,
@@ -832,11 +831,8 @@ class Compiler:
                 F.col(f"{var}_{key}") == self._expr(expr)
             )
 
-    def _edges_df(self) -> DataFrame:
-        return self.store.edges if self.store is not None else self.graph.edges
-
     def _oriented_edges(self, rel: A.RelPat) -> DataFrame:
-        e = self._edges_df()
+        e = self.store.edges
         if rel.types:
             e = e.filter(
                 F.col("type") == rel.types[0]
@@ -905,7 +901,7 @@ class Compiler:
         starts = self.frame.select(
             F.col(f"{src_var}_id").alias("id")
         ).distinct()
-        g = self._pgraph()
+        g = self.store.graph
         rel_var = rel.var or self._fresh("_r")
         depth_col = f"{rel_var}_length"
         info = {
@@ -948,14 +944,6 @@ class Compiler:
 
     # ---- CALL -----------------------------------------------------------
 
-    def _pgraph(self):
-        """Store-aware graph view for algorithms/paths."""
-        from nornicdb_spark.catalog import PropertyGraph
-
-        if self.store is not None:
-            return PropertyGraph(nodes=self.store.nodes, edges=self.store.edges)
-        return self.graph
-
     def _proc_pagerank(self, args) -> DataFrame:
         """CALL apoc.algo.pageRank([iterations[, damping]]) → (node,
         score) (reference apoc_algorithms.go:252-307)."""
@@ -965,7 +953,7 @@ class Compiler:
         iterations = int(vals[0]) if vals else 10
         damping = float(vals[1]) if len(vals) > 1 else 0.85
         return algorithms.pagerank(
-            self._pgraph(), iterations=iterations, damping=damping
+            self.store.graph, iterations=iterations, damping=damping
         ).select(F.col("id").alias("node"), F.col("pagerank").alias("score"))
 
     def _proc_gds_pagerank(self, args) -> DataFrame:
@@ -981,7 +969,7 @@ class Compiler:
         damping = float(config.get("dampingFactor", 0.85))
         rel_types = tuple(config.get("relationshipTypes", ()) or ())
         sources = config.get("sourceNodes")
-        g = self._pgraph()
+        g = self.store.graph
         if sources:
             src = lit1_df(self.cat.spark, 
                 [(str(s),) for s in sources], "id string"
@@ -1001,7 +989,7 @@ class Compiler:
         (reference apoc_community.go:332-429)."""
         from nornicdb_spark.operators import algorithms
 
-        return algorithms.connected_components(self._pgraph()).select(
+        return algorithms.connected_components(self.store.graph).select(
             F.col("id").alias("node"), F.col("component")
         )
 
@@ -1013,7 +1001,7 @@ class Compiler:
         vals = [self._py_value(a) for a in args]
         its = int(vals[0]) if vals else 10
         return algorithms.label_propagation(
-            self._pgraph(), max_iterations=its
+            self.store.graph, max_iterations=its
         ).select(F.col("id").alias("node"), F.col("community"))
 
     def _proc_dijkstra(self, args) -> DataFrame:
@@ -1026,7 +1014,7 @@ class Compiler:
         start_id, end_id = vals[0], vals[1]
         weight = vals[2] if len(vals) > 2 else None
         starts = lit1_df(self.cat.spark, [(start_id,)], "id string")
-        res = weighted_shortest_paths(self._pgraph(), starts, weight_col=weight)
+        res = weighted_shortest_paths(self.store.graph, starts, weight_col=weight)
         return res.filter(F.col("end_id") == F.lit(end_id)).select(
             F.col("start_id").alias("start"),
             F.col("end_id").alias("end"),
@@ -1041,7 +1029,7 @@ class Compiler:
         vals = [self._py_value(a) for a in args]
         start_id, hops = vals[0], int(vals[1])
         starts = lit1_df(self.cat.spark, [(start_id,)], "id string")
-        return k_hop_neighborhood(self._pgraph(), starts, hops).select(
+        return k_hop_neighborhood(self.store.graph, starts, hops).select(
             F.col("end_id").alias("node"), F.col("first_depth").alias("depth")
         )
 
@@ -1054,7 +1042,7 @@ class Compiler:
         vals = [self._py_value(a) for a in args]
         start_id, hops = vals[0], int(vals[1])
         starts = lit1_df(self.cat.spark, [(start_id,)], "id string")
-        reach = k_hop_neighborhood(self._pgraph(), starts, hops)
+        reach = k_hop_neighborhood(self.store.graph, starts, hops)
         return (
             reach.groupBy(F.col("first_depth").alias("depth"))
             .agg(F.array_sort(F.collect_list("end_id")).alias("nodes"))
@@ -1074,7 +1062,7 @@ class Compiler:
         start_id, end_id = vals[0], vals[1]
         rel_type = vals[2] if len(vals) > 2 and vals[2] else None
         weight = vals[3] if len(vals) > 3 and vals[3] else None
-        g = self._pgraph()
+        g = self.store.graph
         starts = lit1_df(self.cat.spark, [(start_id,)], "id string")
         targets = lit1_df(self.cat.spark, [(end_id,)], "id string")
         h = g.nodes.select("id", F.lit(0.0).alias("h"))
@@ -1103,7 +1091,7 @@ class Compiler:
         starts = lit1_df(self.cat.spark, [(start_id,)], "id string")
         targets = lit1_df(self.cat.spark, [(end_id,)], "id string")
         paths = all_simple_paths(
-            self._pgraph(), starts, targets, max_hops=max_depth,
+            self.store.graph, starts, targets, max_hops=max_depth,
             rel_types=(rel_type,) if rel_type else (),
         )
         return paths.select(
@@ -1123,7 +1111,7 @@ class Compiler:
         label = self._algo_label(args)
         config = self._py_value(args[1]) if len(args) > 1 else {}
         samples = (config or {}).get("samples")
-        nodes, edges = _induced_subgraph(self._pgraph(), label)
+        nodes, edges = _induced_subgraph(self.store.graph, label)
         return betweenness_centrality(
             nodes, edges, samples=int(samples) if samples else None
         ).select(F.col("id").alias("node"), F.col("score"))
@@ -1137,7 +1125,7 @@ class Compiler:
         )
 
         label = self._algo_label(args)
-        nodes, edges = _induced_subgraph(self._pgraph(), label)
+        nodes, edges = _induced_subgraph(self.store.graph, label)
         return closeness_centrality(nodes, edges).select(
             F.col("id").alias("node"), F.col("score")
         )
@@ -1153,7 +1141,7 @@ class Compiler:
         label = self._algo_label(args)
         config = self._py_value(args[1]) if len(args) > 1 else {}
         weight = (config or {}).get("weightProperty")
-        nodes, edges = _induced_subgraph(self._pgraph(), label)
+        nodes, edges = _induced_subgraph(self.store.graph, label)
         return louvain_communities(nodes, edges, weight_col=weight).select(
             F.col("id").alias("node"), F.col("community")
         )
@@ -1191,7 +1179,7 @@ class Compiler:
         start_id, max_level, rel_types = self._path_config(args)
         starts = lit1_df(self.cat.spark, [(start_id,)], "id string")
         res = subgraph_nodes(
-            self._pgraph(), starts, max_level=max_level, rel_types=rel_types
+            self.store.graph, starts, max_level=max_level, rel_types=rel_types
         )
         return res.select(F.col("id").alias("node"), F.col("level"))
 
@@ -1204,7 +1192,7 @@ class Compiler:
         start_id, max_level, rel_types = self._path_config(args)
         starts = lit1_df(self.cat.spark, [(start_id,)], "id string")
         res = spanning_tree(
-            self._pgraph(), starts, max_level=max_level, rel_types=rel_types
+            self.store.graph, starts, max_level=max_level, rel_types=rel_types
         )
         return res.select(
             F.array(F.col("parent"), F.col("id")).alias("path"),
@@ -1232,7 +1220,7 @@ class Compiler:
         ) if rel_filter else ()
         starts = lit1_df(self.cat.spark, [(start_id,)], "id string")
         paths = var_length_paths(
-            self._pgraph(), starts, min_hops=max(min_level, 1),
+            self.store.graph, starts, min_hops=max(min_level, 1),
             max_hops=max_level, rel_types=rel_types, with_node_path=True,
         )
         if label_filter:
@@ -1271,7 +1259,7 @@ class Compiler:
             "preferentialattachment": "preferential_attachment",
             "jaccard": "jaccard",
         }[variant]
-        scores = common_neighbors(self._pgraph(), rel_types=rels, min_common=1)
+        scores = common_neighbors(self.store.graph, rel_types=rels, min_common=1)
         if source is not None:
             scores = scores.filter(
                 (F.col("a") == source) | (F.col("b") == source)
@@ -1314,7 +1302,7 @@ class Compiler:
         w_s = float((config or {}).get("semanticWeight", 0.5))
         thr = float((config or {}).get("minThreshold", 0.0))
         rels = tuple((config or {}).get("relationshipTypes", ()) or ())
-        scores = common_neighbors(self._pgraph(), rel_types=rels, min_common=1)
+        scores = common_neighbors(self.store.graph, rel_types=rels, min_common=1)
         base = scores.filter(
             (F.col("a") == source) | (F.col("b") == source)
         ).select(
@@ -1431,7 +1419,7 @@ class Compiler:
 
         vals = [self._py_value(a) for a in args]
         dim = int(vals[0]) if vals else 32
-        return fastrp_embeddings(self._pgraph(), dim=dim).select(
+        return fastrp_embeddings(self.store.graph, dim=dim).select(
             F.col("id").alias("nodeId"), F.col("embedding")
         )
 
@@ -1471,7 +1459,7 @@ class Compiler:
         types = vals[2] if len(vals) > 2 else None
         labels = [labels] if isinstance(labels, str) else labels
         types = [types] if isinstance(types, str) else types
-        g = self._pgraph()
+        g = self.store.graph
         nodes = (
             g.nodes.filter(F.col("label").isin(labels))
             if labels and labels != ["*"]
@@ -1612,7 +1600,7 @@ class Compiler:
                 )
 
             if rels:
-                e = self._pgraph().edges
+                e = self.store.graph.edges
                 avail = [p for p in props if p in e.columns]
                 if not avail:
                     return lit1_df(self.cat.spark, 
@@ -1677,7 +1665,7 @@ class Compiler:
         """db.create.setNodeVectorProperty(n, key, vector) (reference
         call.go:728-748): a table rewrite through the store — void
         procedure, mutates the bound node rows."""
-        self._require_store()
+        self._wrote = True
         var_arg, key, vec = args[0], self._py_value(args[1]), self._py_value(args[2])
         if not isinstance(var_arg, A.Var) or var_arg.name not in self.bindings:
             raise ValueError(
@@ -1697,16 +1685,16 @@ class Compiler:
     PROCEDURES = {
         "db.labels": lambda self, args: __import__(
             "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_labels(self.graph),
+        ).db_labels(self.store.graph),
         "db.relationshiptypes": lambda self, args: __import__(
             "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_relationship_types(self.graph),
+        ).db_relationship_types(self.store.graph),
         "db.propertykeys": lambda self, args: __import__(
             "nornicdb_spark.procedures", fromlist=["x"]
         ).db_property_keys(self.cat),
         "db.schema.visualization": lambda self, args: __import__(
             "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_schema_visualization(self.graph),
+        ).db_schema_visualization(self.store.graph),
         "db.info": lambda self, args: __import__(
             "nornicdb_spark.procedures", fromlist=["x"]
         ).db_info(self.cat),
@@ -1954,7 +1942,7 @@ class Compiler:
 
         stmt = self._py_value(args[0])
         path = self._py_value(args[1])
-        inner = Compiler(self.cat, self.params, store=self.store, ckpt_sink=self.ckpts)
+        inner = self._inner()
         # checkpoint once: the count and the file write share one
         # execution of the (possibly expensive) inner plan
         df = self._sink_ckpt(inner._compile_single(parse(stmt)), eager=False)
@@ -1972,7 +1960,7 @@ class Compiler:
         from nornicdb_spark.sources.loaders import export_csv, export_json
 
         path = self._py_value(args[0])
-        g = self._pgraph()
+        g = self.store.graph
         nodes = g.nodes.select(
             F.col("id"), F.lit("node").alias("kind"),
             F.col("label"), F.lit(None).cast("string").alias("type"),
@@ -2042,19 +2030,9 @@ class Compiler:
         JSON here (a typed struct can't hold heterogeneous rows)."""
         stmt = self._py_value(args[0])
         params = self._py_value(args[1]) if len(args) > 1 else {}
-        inner = Compiler(
-            self.cat, {**self.params, **(params or {})}, store=self.store,
-            ckpt_sink=self.ckpts,
-        )
+        inner = self._inner({**self.params, **(params or {})})
         result = inner._compile_single(parse(stmt))
-        self.stats.add(
-            nodes_created=inner.stats.nodes_created,
-            relationships_created=inner.stats.relationships_created,
-            properties_set=inner.stats.properties_set,
-            nodes_deleted=inner.stats.nodes_deleted,
-            relationships_deleted=inner.stats.relationships_deleted,
-        )
-        self._wrote = self._wrote or inner._wrote
+        self._absorb(inner)
         return result.select(
             F.to_json(F.struct(*result.columns)).alias("value")
         )
@@ -2070,20 +2048,9 @@ class Compiler:
         params = self._py_value(args[1]) if len(args) > 1 else {}
         out = []
         for i, stmt in enumerate(stmts):
-            inner = Compiler(
-                self.cat, {**self.params, **(params or {})}, store=self.store,
-                ckpt_sink=self.ckpts,
-            )
-            df = inner._compile_single(parse(stmt))
-            n = df.count()
-            self.stats.add(
-                nodes_created=inner.stats.nodes_created,
-                relationships_created=inner.stats.relationships_created,
-                properties_set=inner.stats.properties_set,
-                nodes_deleted=inner.stats.nodes_deleted,
-                relationships_deleted=inner.stats.relationships_deleted,
-            )
-            self._wrote = self._wrote or inner._wrote
+            inner = self._inner({**self.params, **(params or {})})
+            n = inner._compile_single(parse(stmt)).count()
+            self._absorb(inner)
             out.append((i, f'{{"rowCount": {n}}}'))
         return lit1_df(self.cat.spark, out, "row long, result string")
 
@@ -2099,12 +2066,12 @@ class Compiler:
         its rows failed (per-batch commit, matching APOC)."""
         import re
 
-        self._require_store()
+        self._wrote = True
         iterate_q = self._py_value(args[0])
         action_q = self._py_value(args[1])
         config = self._py_value(args[2]) if len(args) > 2 else {}
         batch_size = int((config or {}).get("batchSize", 1000)) or 1
-        outer = Compiler(self.cat, self.params, store=self.store, ckpt_sink=self.ckpts)
+        outer = self._inner()
         rows = outer._compile_single(parse(iterate_q)).collect()
         total, failed, failed_batches = len(rows), 0, 0
         batches = (total + batch_size - 1) // batch_size
@@ -2123,21 +2090,10 @@ class Compiler:
                     "_batch": [r.asDict(recursive=True) for r in chunk],
                 }
                 try:
-                    inner = Compiler(self.cat, params, store=self.store, ckpt_sink=self.ckpts)
+                    inner = self._inner(params)
                     df = inner._compile_single(parse(batched_q))
                     if inner._wrote:
-                        self._wrote = True
-                        self.stats.add(
-                            nodes_created=inner.stats.nodes_created,
-                            relationships_created=(
-                                inner.stats.relationships_created
-                            ),
-                            properties_set=inner.stats.properties_set,
-                            nodes_deleted=inner.stats.nodes_deleted,
-                            relationships_deleted=(
-                                inner.stats.relationships_deleted
-                            ),
-                        )
+                        self._absorb(inner)
                     else:
                         df.count()
                 except Exception:
@@ -2156,7 +2112,7 @@ class Compiler:
         executions, runtime, batches (reference
         call_apoc_periodic.go:148-230): re-run the (LIMITed) write
         statement until an execution makes 0 updates."""
-        self._require_store()
+        self._wrote = True
         stmt = self._py_value(args[0])
         params = dict(self._py_value(args[1])) if len(args) > 1 else {}
         limit = int(params.get("limit", 10000))
@@ -2164,10 +2120,7 @@ class Compiler:
             stmt = f"{stmt} LIMIT {limit}"
         total, executions = 0, 0
         for _ in range(10000):  # hard backstop, same spirit as the ref loop
-            inner = Compiler(
-                self.cat, {**self.params, **params}, store=self.store,
-                ckpt_sink=self.ckpts,
-            )
+            inner = self._inner({**self.params, **params})
             inner._compile_single(parse(stmt))
             executions += 1
             s = inner.stats
@@ -2176,14 +2129,7 @@ class Compiler:
                 + s.relationships_deleted + s.properties_set
             )
             if updates:
-                self._wrote = True
-                self.stats.add(
-                    nodes_created=s.nodes_created,
-                    relationships_created=s.relationships_created,
-                    properties_set=s.properties_set,
-                    nodes_deleted=s.nodes_deleted,
-                    relationships_deleted=s.relationships_deleted,
-                )
+                self._absorb(inner)
             total += updates
             if updates == 0:
                 break
@@ -2216,11 +2162,6 @@ class Compiler:
             self.bindings[col] = Binding("value", column=col)
 
     # ---- write clauses --------------------------------------------------
-
-    def _require_store(self):
-        if self.store is None:
-            raise ValueError("cypher: write clauses need an Engine (mutable store)")
-        self._wrote = True
 
     def _py_value(self, e):
         if isinstance(e, A.Lit):
@@ -2286,9 +2227,7 @@ class Compiler:
         return self.frame.select(F.col(f"{var}_id").alias("_target_id")).distinct()
 
     def _compile_create(self, c: "A.CreateClause") -> None:
-        from nornicdb_spark.catalog import node_id as _  # noqa: F401
-
-        self._require_store()
+        self._wrote = True
         for path in c.paths:
             elems = path.elements
             for node in elems[0::2]:
@@ -2368,13 +2307,7 @@ class Compiler:
             out = aug.select(
                 *[c for c in aug.columns if not c.startswith("_cr_")],
                 *[F.col(old).alias(new) for old, new in renames.items()],
-            ).withColumn(
-                f"{var}_id",
-                F.concat(
-                    F.lit(label + ":"),
-                    F.col(f"{var}_{key}").cast("string"),
-                ),
-            )
+            ).withColumn(f"{var}_id", node_id(label, f"{var}_{key}"))
             self.frame = out
             self.bindings[var] = Binding("node", label=label)
         else:
@@ -2420,7 +2353,7 @@ class Compiler:
         raise ValueError("cypher: CREATE relationship endpoints must be bound")
 
     def _compile_set(self, items) -> None:
-        self._require_store()
+        self._wrote = True
         # SET n += {map} (reference set_helpers.go map-merge) expands to
         # one property assignment per map entry
         expanded = []
@@ -2457,7 +2390,7 @@ class Compiler:
             self.stats.add(properties_set=n)
 
     def _compile_delete(self, c: "A.DeleteClause") -> None:
-        self._require_store()
+        self._wrote = True
         for var in c.vars:
             b = self.bindings.get(var)
             if b is None or b.kind != "node" or b.label is None:
@@ -2468,7 +2401,7 @@ class Compiler:
             self.stats.add(nodes_deleted=n_nodes, relationships_deleted=n_edges)
 
     def _compile_merge(self, c: "A.MergeClause") -> None:
-        self._require_store()
+        self._wrote = True
         elems = c.path.elements
         if len(elems) > 1:
             if len(elems) % 2 != 1:
@@ -2477,40 +2410,9 @@ class Compiler:
         node: A.NodePat = elems[0]
         if node.label is None or not node.props:
             raise NotImplementedError("cypher: MERGE needs (n:Label {props})")
-        table, key, df = self.store.table_for(node.label)
-        props = {k: self._py_value(v) for k, v in node.props}
-        missing_cols = [k for k in props if k not in df.columns]
-        cond = None
-        for k, v in props.items():
-            c2 = (F.col(k) == F.lit(v)) if k in df.columns else F.lit(False)
-            cond = c2 if cond is None else (cond & c2)
-        matched = df.filter(cond)
-        var = node.var or self._fresh()
-        if missing_cols or matched.limit(1).count() == 0:
-            nid = self.store.create_node(node.label, props)
-            self.stats.add(nodes_created=1)
-            self._created[var] = nid
-            sets = c.on_create
-        else:
-            self._created[var] = None  # resolved below via prop filter
-            sets = c.on_match
-        # target ids = rows matching the merge props (covers both fates);
-        # re-derive the predicate against the post-create table — a
-        # dynamic-label create may have added the property columns
-        fresh = self.store.tables[table]
-        cond = None
-        for k, v in props.items():
-            c2 = (F.col(k) == F.lit(v)) if k in fresh.columns else F.lit(False)
-            cond = c2 if cond is None else (cond & c2)
-        ids = (
-            fresh
-            .filter(cond)
-            .select(
-                F.concat(
-                    F.lit(node.label + ":"), F.col(key).cast("string")
-                ).alias("_target_id")
-            )
-        )
+        var, ids, created = self._merge_endpoint_ids(node)
+        ids = ids.select(F.col("id").alias("_target_id"))
+        sets = c.on_create if created else c.on_match
         if sets:
             per: dict[str, Column] = {}
             for target, expr in sets:
@@ -2521,57 +2423,49 @@ class Compiler:
             self.stats.add(properties_set=n)
         first = ids.first()
         self._created[var] = first["_target_id"] if first else None
-        self.bindings[var] = Binding("node", label=node.label)
 
     # ---- MERGE on relationship patterns ---------------------------------
 
     def _merge_endpoint_ids(self, pat: "A.NodePat"):
-        """Resolve one MERGE endpoint to an id frame (column ``id``).
+        """Resolve one MERGE node to ``(var, id frame, created)``; the
+        frame's column is ``id``.
 
         Bound variables (MATCHed frame columns or CREATE/MERGE-created ids)
-        are used as-is; an unbound ``(n:Label {props})`` endpoint is
-        node-merged first (match by props, else create) — the reference's
-        per-row merge loop (merge.go mergeNodes) collapses to a set-level
-        match-else-create in batch."""
+        are used as-is; an unbound ``(n:Label {props})`` node is merged
+        (match by props, else create) — the reference's per-row merge loop
+        (merge.go mergeNodes) collapses to a set-level match-else-create
+        in batch. ``created`` says whether this call created the node."""
         var = pat.var or self._fresh()
         if (
             self.frame is not None
             and pat.var is not None
             and f"{var}_id" in self.frame.columns
         ):
-            return var, self.frame.select(F.col(f"{var}_id").alias("id")).distinct()
-        if var in self._created and self._created[var] is not None:
-            return var, lit1_df(self.cat.spark, 
-                [(self._created[var],)], "id string"
-            )
+            return var, self.frame.select(F.col(f"{var}_id").alias("id")).distinct(), False
+        if self._created.get(var) is not None:
+            return var, lit1_df(self.cat.spark, [(self._created[var],)], "id string"), False
         if pat.label is None or not pat.props:
             raise NotImplementedError(
-                "cypher: MERGE endpoint must be bound or (n:Label {props})"
+                "cypher: MERGE node must be bound or (n:Label {props})"
             )
         table, key, df = self.store.table_for(pat.label)
         props = {k: self._py_value(v) for k, v in pat.props}
-
-        def match_cond(frame):
-            cond = None
-            for k, v in props.items():
-                c2 = (F.col(k) == F.lit(v)) if k in frame.columns else F.lit(False)
-                cond = c2 if cond is None else (cond & c2)
-            return cond
-
-        matched = df.filter(match_cond(df))
-        if (
+        created = (
             any(k not in df.columns for k in props)
-            or matched.limit(1).count() == 0
-        ):
-            nid = self.store.create_node(pat.label, props)
+            or df.filter(_props_equal(df, props)).limit(1).count() == 0
+        )
+        if created:
+            self._created[var] = self.store.create_node(pat.label, props)
             self.stats.add(nodes_created=1)
-            self._created[var] = nid
+        # target ids = rows matching the merge props (covers both fates);
+        # re-derive the predicate against the post-create table — a
+        # dynamic-label create may have added the property columns
         fresh = self.store.tables[table]
-        ids = fresh.filter(match_cond(fresh)).select(
+        ids = fresh.filter(_props_equal(fresh, props)).select(
             node_id(pat.label, key).alias("id")
         )
         self.bindings[var] = Binding("node", label=pat.label)
-        return var, ids
+        return var, ids, created
 
     def _merge_rel_chain(self, c: "A.MergeClause", elems) -> None:
         """MERGE over relationship patterns (reference merge.go:14-1847
@@ -2594,8 +2488,8 @@ class Compiler:
                 raise NotImplementedError("cypher: MERGE relationship cannot be var-length")
             if rel.direction == "both":
                 raise NotImplementedError("cypher: MERGE relationship needs a direction")
-            a_var, a_ids = self._merge_endpoint_ids(elems[i - 1])
-            b_var, b_ids = self._merge_endpoint_ids(elems[i + 1])
+            a_var, a_ids, _ = self._merge_endpoint_ids(elems[i - 1])
+            b_var, b_ids, _ = self._merge_endpoint_ids(elems[i + 1])
             etype = rel.types[0]
             eprops = {k: self._py_value(v) for k, v in rel.props}
             rel_var = rel.var
@@ -2622,18 +2516,9 @@ class Compiler:
                     .distinct()
                 )
 
-            def edge_cond(edges):
-                cond = F.col("type") == F.lit(etype)
-                for k, v in eprops.items():
-                    cond = cond & (
-                        (F.col(k) == F.lit(v))
-                        if k in edges.columns
-                        else F.lit(False)
-                    )
-                return cond
-
+            edges = self.store.edges
             existing_pairs = (
-                self.store.edges.filter(edge_cond(self.store.edges))
+                edges.filter(_props_equal(edges, eprops, F.col("type") == F.lit(etype)))
                 .select("src", "dst")
                 .join(pairs, ["src", "dst"])
                 .distinct()
@@ -2668,15 +2553,10 @@ class Compiler:
             for a_var, b_var, rel_var, etype, eprops, pairs in pair_frames:
                 if tvar == rel_var:
                     edges = self.store.edges
-                    cond = F.col("type") == F.lit(etype)
-                    for k, v in eprops.items():
-                        cond = cond & (
-                            (F.col(k) == F.lit(v))
-                            if k in edges.columns
-                            else F.lit(False)
-                        )
                     edge_ids = (
-                        edges.filter(cond)
+                        edges.filter(
+                            _props_equal(edges, eprops, F.col("type") == F.lit(etype))
+                        )
                         .join(pairs, ["src", "dst"])
                         .select(F.col("edge_id").alias("_edge_id"))
                     )
@@ -3660,9 +3540,3 @@ class Compiler:
 
         raise NotImplementedError(f"cypher: function {name}()")
 
-
-def compile_cypher(
-    catalog: Catalog, query: str, params: dict | None = None
-) -> DataFrame:
-    """Parse + compile a Cypher query against the catalog's graph."""
-    return Compiler(catalog, params).compile(parse(query))

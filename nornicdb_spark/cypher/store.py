@@ -11,11 +11,14 @@ version; nothing touches disk until the caller persists.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nornicdb_spark.catalog import NODE_SPECS, Catalog, node_id
+from nornicdb_spark.catalog import (
+    NODE_SPECS, Catalog, PropertyGraph, label_nodes, node_id,
+)
 from nornicdb_spark.operators.scope import unpersist_frame
 
 LABEL_TABLES = {label: (table, key) for label, table, key in NODE_SPECS}
@@ -76,6 +79,11 @@ class GraphStore:
         # eagerly because a superseding version may be a LAZY rewrite over
         # them (set_props/delete_nodes swap in un-materialized plans)
         self._ckpts: list[DataFrame] = []
+        # the version whose rows are the catalog graph's (its tables and
+        # edge set are the objects this store starts from), and the graph
+        # of every later version read so far
+        self._base = self.version()
+        self._graphs: dict[tuple, PropertyGraph] = {}
 
     def _ckpt(self, df: DataFrame) -> DataFrame:
         """Eager version checkpoint, tracked for close()."""
@@ -84,46 +92,60 @@ class GraphStore:
         return out
 
     def close(self) -> None:
-        """Release every version checkpoint directly — the owning
-        Engine's ``close()`` is the only caller and is the "done" signal
-        for everything this store pinned; routing a potentially large
-        version history through the bounded escape FIFO would evict
-        other owners' deferred frames (ADVICE r8)."""
+        """Release every version checkpoint and every per-version graph's
+        resident artifacts directly — the owning Engine's ``close()`` is
+        the only caller and is the "done" signal for everything this
+        store pinned; routing a potentially large version history through
+        the bounded escape FIFO would evict other owners' deferred frames
+        (ADVICE r8). The shared catalog graph stays resident."""
         for df in self._ckpts:
             unpersist_frame(df)
         self._ckpts.clear()
+        for graph in self._graphs.values():
+            graph.release()
+        self._graphs.clear()
 
-    # ---- store-aware graph views ----------------------------------------
+    # ---- versions and their graphs --------------------------------------
+
+    def version(self) -> tuple:
+        """Identity of the store's current version. Every write swaps in
+        new DataFrames, so object identities change with any mutation;
+        the tuple holds the DataFrames themselves (they compare by
+        identity), so a key built from it keeps its version alive and a
+        freed version's id can never make a later one look unchanged."""
+        return (
+            tuple(sorted(self.tables.items(), key=lambda kv: kv[0])),
+            self.edges, self._dyn_counter, self._edge_batch,
+        )
+
+    @property
+    def graph(self) -> PropertyGraph:
+        """The graph a query at this version reads: the shared catalog
+        graph (and its long-encoded fast paths and resident adjacency)
+        until the first write, then one graph per version, built on first
+        use and reused — with every artifact it derives — until the next
+        write."""
+        v = self.version()
+        if v == self._base:
+            return self.catalog.graph
+        if v not in self._graphs:
+            self._graphs[v] = PropertyGraph(nodes=self.nodes, edges=self.edges)
+        return self._graphs[v]
 
     @property
     def nodes(self) -> DataFrame:
         """Union node view (id, label, key) over this store's *current*
-        table versions — the mutable counterpart of
-        ``Catalog.graph.nodes``, so post-write traversals (var-length,
-        shortest-path, unlabeled scans) see CREATEd/DELETEd nodes."""
-        parts = []
-        for label, table, key in NODE_SPECS:
-            parts.append(
-                self.tables[table].select(
-                    node_id(label, key).alias("id"),
-                    F.lit(label).alias("label"),
-                    F.col(key).cast("long").alias("key"),
-                )
-            )
-        for table, df in self.tables.items():
-            if table.startswith("_dyn_"):
-                label = table[len("_dyn_"):]
-                parts.append(
-                    df.select(
-                        node_id(label, "_key").alias("id"),
-                        F.lit(label).alias("label"),
-                        F.col("_key").cast("long").alias("key"),
-                    )
-                )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        table versions, dynamic labels included — what
+        ``Catalog.graph.nodes`` is for the star schema."""
+        specs = [(label, self.tables[table], key) for label, table, key in NODE_SPECS]
+        specs += [
+            (table[len("_dyn_"):], df, "_key")
+            for table, df in self.tables.items() if table.startswith("_dyn_")
+        ]
+        return reduce(
+            lambda a, b: a.unionByName(b),
+            [df.select(*label_nodes(label, key)) for label, df, key in specs],
+        )
 
     # ---- dynamic labels (schema-free reference semantics) ---------------
 

@@ -8,8 +8,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from nornicdb_spark.catalog import Catalog
+from nornicdb_spark.catalog import shared_catalog
 from nornicdb_spark.cypher.parser import parse
+from nornicdb_spark.cypher.store import GraphStore
 from nornicdb_spark.operators import scope
 from nornicdb_spark.operators.localframe import literal_df
 
@@ -77,13 +78,14 @@ class Engine:
     RESULT_CACHE_CAP = 256
 
     def __init__(self, spark: SparkSession, sf_dir: str):
-        from nornicdb_spark.catalog import shared_catalog
-
         self.spark = spark
         # shared read-only catalog: plans and the materialized adjacency
         # are reused across Engines; writes live in this Engine's store
         self.catalog = shared_catalog(spark, sf_dir)
-        self._store = None
+        # this Engine's mutable graph store: reads and writes share its
+        # table versions (the batch analogue of the reference's implicit
+        # transaction), and every query compiles against it
+        self.store = GraphStore(self.catalog)
         # read-query result cache (reference SmartQueryCache,
         # cache.go:476-560 / executor.go:659-692): keyed on
         # (query, params, store snapshot). The cached value is the lazy
@@ -104,17 +106,6 @@ class Engine:
         # close() frees only ours (not frames other live Engines'
         # consumers still read)
         self._escape_owner = object()
-
-    @property
-    def store(self):
-        """Session-scoped mutable graph store — created on first use;
-        reads and writes in this Engine share its table versions
-        (the batch analogue of the reference's implicit transaction)."""
-        if self._store is None:
-            from nornicdb_spark.cypher.store import GraphStore
-
-            self._store = GraphStore(self.catalog)
-        return self._store
 
     def cypher(self, query: str, params: dict | None = None) -> DataFrame:
         """Execute a Cypher query; returns the result DataFrame
@@ -163,7 +154,7 @@ class Engine:
             # vector parameters), and repr is deterministic for the
             # literal types Cypher parameters allow
             pkey = repr(sorted((params or {}).items(), key=lambda kv: kv[0]))
-            snapshot = self._store_snapshot()
+            snapshot = self._snapshot()
             cache_key = (query, pkey, snapshot)
             hit = self._result_cache.get(cache_key)
             if hit is not None:
@@ -225,29 +216,20 @@ class Engine:
                 scope.unpersist_rdd(jrdd)
         self._result_cache.clear()
         self._pattern_memo.clear()
-        if self._store is not None:
-            self._store.close()  # store versions are engine-owned
+        self.store.close()  # store versions and their graphs are engine-owned
         scope.release_escaped(owner=self._escape_owner)
 
-    def _store_snapshot(self):
-        """Identity snapshot of the mutable store — every write swaps in
-        new DataFrames, so object identities change with any mutation.
-        The snapshot holds the DataFrames themselves (they compare by
-        identity), so a cache key keeps its versions alive and a freed
-        version's id can never make a later one look unchanged."""
+    def _snapshot(self):
+        """What a read-only query's result depends on besides its text
+        and parameters: the store version, the index definitions and the
+        projection names (project/drop change what gds.graph.list and
+        fastRP.stats return)."""
         from nornicdb_spark.projections import DEFAULT_CATALOG
 
         ic = getattr(self.catalog, "_index_catalog", None)
-        ic_key = tuple(sorted(ic._defs)) if ic is not None else None
-        s = self.store  # instantiate: compile() will create it anyway
         return (
-            tuple(sorted(s.tables.items(), key=lambda kv: kv[0])),
-            s.edges,
-            s._dyn_counter,
-            s._edge_batch,
-            ic_key,
-            # projection-catalog state: project/drop change what
-            # gds.graph.list / fastRP.stats return
+            self.store.version(),
+            tuple(sorted(ic._defs)) if ic is not None else None,
             tuple(sorted(DEFAULT_CATALOG._graphs)),
         )
 

@@ -34,7 +34,6 @@ SQL cache manager and is a no-op for checkpoints.
 
 from __future__ import annotations
 
-import os
 import threading
 from collections import deque
 
@@ -84,7 +83,7 @@ def _unpersist(jrdd) -> None:
 # happened), or eagerly via release_escaped() from Engine.close().
 # ---------------------------------------------------------------------------
 
-_ESCAPE_CAP = int(os.environ.get("NORNICDB_ESCAPE_CAP", "64"))
+_ESCAPE_CAP = 64
 _ESCAPED: deque = deque()  # (owner_token | None, jrdd)
 _ESCAPE_LOCK = threading.Lock()  # FIFO mutations (escape vs release races)
 

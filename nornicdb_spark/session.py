@@ -31,13 +31,21 @@ def default_driver_memory(total_bytes: int | None = None) -> str:
     return f"{min(16, max(1, int(total_bytes * 0.4 / 2**30)))}g"
 
 
+def default_cpus() -> int:
+    """``local[N]`` width when ``SPARK_GRAFT_CPUS`` is unset: the CPUs
+    this process may run on."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "nornicdb-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus())
     master = master or f"local[{cpus}]"
     # shuffle partitions must scale with DATA, not cores: at 100 TB a
     # cores-sized partition count gives multi-GB per-task sorts that

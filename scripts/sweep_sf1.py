@@ -68,12 +68,13 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from nornicdb_spark.queries import ORACLES, QUERIES
+    from nornicdb_spark.session import default_cpus
     from tests.oracle_harness import compare
 
     # env knobs (same names as nornicdb_spark.session): heavy iterative
     # rows at sf10 need SPARK_GRAFT_SHUFFLE≈256 — shuffle partitions
     # must scale with data, not cores, or per-task sorts OOM the JVM
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or default_cpus()
     shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", "32")
     driver_mem = os.environ.get("SPARK_DRIVER_MEM", "48g")
     spark = (

@@ -106,6 +106,26 @@ def test_anonymous_elements_get_no_fresh_name_collision(eng, duck):
         assert eng.cypher(q, {"k": k, "i": i}).collect()[0].n == ref
 
 
+def test_varlen_read_reuses_the_static_edge_set(eng, monkeypatch):
+    """On an unwritten Engine a var-length read traverses the shared
+    catalog graph, so a second read with another ``$k`` checkpoints only
+    its frontiers (which carry ``start_id``), never the edge set again."""
+    q = "MATCH (c:Customer {c_custkey: $k})-[*1..3]->(x) RETURN count(*) AS n"
+    frame_cls = type(eng.store.edges)  # the session's concrete DataFrame
+    real = frame_cls.localCheckpoint
+    taken = []
+
+    def counting(self, *args, **kw):
+        taken.append(self.columns)
+        return real(self, *args, **kw)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", counting)
+    assert eng.cypher(q, {"k": 1}).collect()[0].n > 0
+    taken.clear()
+    assert eng.cypher(q, {"k": 2}).collect()[0].n > 0
+    assert taken and all("start_id" in cols for cols in taken), taken
+
+
 def test_memo_is_bounded_and_close_frees_only_its_own(spark, eng, monkeypatch):
     monkeypatch.setattr(C, "PATTERN_MEMO_CAP", 3)
     eng.catalog.graph.adj()

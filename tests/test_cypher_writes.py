@@ -166,6 +166,17 @@ def test_foreach_range_and_nested(eng):
     assert (row.n, row.s) == (2, 30)
 
 
+def test_foreach_create_binds_per_iteration(eng):
+    stats = one(eng.cypher(
+        "FOREACH (x IN [1, 2] | CREATE (a:Tmp {v: x})-[:NEXT]->(b:Tmp {v: x + 10}))"
+    ))
+    assert (stats.nodes_created, stats.relationships_created) == (4, 2)
+    row = one(eng.cypher(
+        "MATCH (a:Tmp)-[:NEXT]->(b:Tmp) RETURN count(*) AS n, sum(b.v - a.v) AS d"
+    ))
+    assert (row.n, row.d) == (2, 20)
+
+
 def test_set_plus_map_merge(eng):
     one(eng.cypher(
         "MATCH (r:Region {r_regionkey: 0}) SET r += {r_name: 'ZED', extra: 7}"
@@ -405,3 +416,36 @@ def test_call_null_numeric_args_fall_back_to_defaults(eng):
            YIELD path, depth RETURN count(*) AS n"""
     ).collect()
     assert rows[0].n >= 0  # no TypeError; default maxDepth applies
+
+
+def _tag_customer_one(eng):
+    eng.cypher("CREATE (:Tag {tag_id: 1, name: 'x'})")
+    eng.cypher(
+        "MATCH (c:Customer {c_custkey: 1}), (t:Tag {tag_id: 1}) "
+        "CREATE (c)-[:TAGGED]->(t)"
+    )
+
+
+def test_schema_procedures_see_writes(eng):
+    _tag_customer_one(eng)
+    assert one(eng.cypher("MATCH (t:Tag) RETURN count(*) AS n")).n == 1
+    labels = {r.label: r.n_nodes for r in eng.cypher("CALL db.labels()").collect()}
+    assert labels["Tag"] == 1 and labels["Customer"] > 0
+    types = {r.type: r.n_edges for r in eng.cypher("CALL db.relationshipTypes()").collect()}
+    assert types["TAGGED"] == 1 and types["PLACED"] > 0
+    shape = {tuple(r) for r in eng.cypher("CALL db.schema.visualization()").collect()}
+    assert ("Customer", "TAGGED", "Tag") in shape
+
+
+def test_store_graph_is_the_catalog_graph_then_one_per_version(eng):
+    assert eng.store.graph is eng.catalog.graph
+    _tag_customer_one(eng)
+    g = eng.store.graph
+    assert g is not eng.catalog.graph and eng.store.graph is g
+    # a traversal reads this version's graph and leaves it current
+    n = one(eng.cypher(
+        "MATCH (t:Tag {tag_id: 1})<-[:TAGGED*1..2]-(c) RETURN count(*) AS n"
+    )).n
+    assert n == 1 and eng.store.graph is g
+    eng.cypher("CREATE (:Tag {tag_id: 2})")
+    assert eng.store.graph is not g
