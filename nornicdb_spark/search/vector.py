@@ -30,6 +30,28 @@ def dot(a: F.Column, b: F.Column) -> F.Column:
     )
 
 
+def dot_sql(a: str, b: str) -> str:
+    """:func:`dot` as SQL text over array expressions ``a`` and ``b``:
+    the same zip_with-then-left-fold from a double zero, so the score
+    is bit-identical, but it parses JVM-side in one call where the
+    Column form costs tens of py4j round trips. An int array operand
+    is widened element-wise by the analyzer (``cast(x AS DOUBLE) * y``)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+        f"{sql_literal(0.0)}, (acc, v) -> acc + v)"
+    )
+
+
+def sql_col(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """:func:`cosine_sim` as SQL text (see :func:`dot_sql`)."""
+    return f"{dot_sql(a, b)} / (sqrt({dot_sql(a, a)}) * sqrt({dot_sql(b, b)}))"
+
+
 def norm(a: F.Column) -> F.Column:
     return F.sqrt(dot(a, a))
 
@@ -66,10 +88,10 @@ def cosine_topk(
     The threshold compares the 9-digit-rounded score so ULP-level
     engine/oracle differences cannot flip membership at the boundary.
     Returns (vec_id, score) ordered desc, ties by id."""
-    emb = F.col(vec_col).cast("array<double>")
-    scored = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        cosine_sim(emb, lit_expr([float(x) for x in query_vec])).alias("score"),
+    emb = f"CAST({sql_col(vec_col)} AS ARRAY<DOUBLE>)"
+    q = sql_literal([float(x) for x in query_vec])
+    scored = embeddings.selectExpr(
+        f"{sql_col(id_col)} AS vec_id", f"{cosine_sql(emb, q)} AS score"
     )
     if min_similarity is not None:
         scored = scored.where(
@@ -81,7 +103,7 @@ def cosine_topk(
         # arithmetic differ in the last ULP, and duplicated vectors (equal
         # scores) must fall to the vec_id tie-break identically on both
         # sides or the top-k MEMBERSHIP diverges at the boundary
-        .orderBy(F.desc(F.round(F.col("score"), 9)), F.asc("vec_id"))
+        .orderBy(F.desc(F.expr("round(score, 9)")), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -278,14 +300,10 @@ class RandomHyperplaneLSH:
         ``acc * 2 + bit`` band fold; the per-plane constants are
         ``localframe.sql_literal`` text, which constant-folds to the
         same double-array Literal."""
-        vec = f"CAST(`{self.vec_col}` AS ARRAY<DOUBLE>)"
+        vec = f"CAST({sql_col(self.vec_col)} AS ARRAY<DOUBLE>)"
         bits = []
         for row in self.planes:
-            arr = sql_literal([float(x) for x in row])
-            d = (
-                f"aggregate(zip_with({vec}, {arr}, (x, y) -> x * y), "
-                f"{sql_literal(0.0)}, (acc, v) -> acc + v)"
-            )
+            d = dot_sql(vec, sql_literal([float(x) for x in row]))
             bits.append(f"(CASE WHEN {d} >= 0 THEN 1 ELSE 0 END)")
         per_band = len(bits) // self.n_bands
         bands = []
@@ -665,15 +683,8 @@ class Int8Index:
 
     def _approx_score(self, query_vec) -> F.Column:
         qn = float(sum(float(x) * float(x) for x in query_vec)) ** 0.5
-        code_dot = F.aggregate(
-            F.zip_with(
-                F.col("codes"), lit_expr([float(x) for x in query_vec]),
-                lambda c, qx: c.cast("double") * qx,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return code_dot / (F.col("code_norm") * F.lit(qn))
+        code_dot = dot_sql("codes", sql_literal([float(x) for x in query_vec]))
+        return F.expr(f"{code_dot} / (code_norm * {sql_literal(qn)})")
 
     def search(self, query_vec, k: int = 10, refine: int = 4) -> DataFrame:
         """Approximate cosine top-(k·refine) on the codes, then exact

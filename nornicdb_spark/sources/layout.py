@@ -137,9 +137,17 @@ def rewrite_partitioned(
     swap. MUST run with no concurrent writer (stream stopped). A crash
     between the two renames leaves the table at ``<path>.old`` — the
     next run restores it first (and :func:`read_or_empty` refuses to
-    read the half-swapped state as an empty table)."""
+    read the half-swapped state as an empty table).
+
+    The rows are hash-repartitioned by ``partition_cols`` first, so each
+    partition directory holds exactly one file. Otherwise the count is
+    the number of input splits that carried its rows, which follows how
+    the scan packs the table's files (their listing order), not the
+    data."""
     recover_interrupted_swap(path)
     df = transform(spark.read.schema(schema).parquet(path))
+    if partition_cols:
+        df = df.repartition(*partition_cols)
     staging, old = f"{path}.compacting", f"{path}.old"
     shutil.rmtree(staging, ignore_errors=True)
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(staging)
@@ -216,6 +224,7 @@ class BatchTable:
         self.partition_cols = partition_cols
         self.id_col = id_col
         self.by_batch = by_batch
+        self._id_type: str | None = None  # stored id type, once per era
         self.columns = T._parse_datatype_string(self.schema()).fieldNames()
         self.tombstones = (
             BatchTable(spark, root, f"{root}/tombstones", tombstones,
@@ -229,8 +238,14 @@ class BatchTable:
         return self._schema.format(it=it)
 
     def stored_id_type(self) -> str | None:
-        """The stored id type; ``None`` on a never-ingested table."""
-        return stored_col_type(self.spark, self.path, self.id_col)
+        """The stored id type; ``None`` on a never-ingested table. Read
+        from the files once per table era (a schema-inference job each
+        time otherwise): appends keep the type, and only what replaces
+        the files wholesale — :meth:`restart_era`, :meth:`fold`, an
+        ``overwrite`` :meth:`write` — drops the cached value."""
+        if self._id_type is None:
+            self._id_type = stored_col_type(self.spark, self.path, self.id_col)
+        return self._id_type
 
     def id_type(self, given: str | None = None) -> str:
         """``given`` if supplied, else the stored id type (bigint on a
@@ -254,6 +269,7 @@ class BatchTable:
 
     def restart_era(self) -> None:
         """A (re)bootstrap starts a fresh stream era: reset the guard."""
+        self._id_type = None
         guard.record_batch(self.root, -1, reset=True)
 
     def marker(self, name: str, value=None) -> int | None:
@@ -267,6 +283,8 @@ class BatchTable:
         """Dynamic partition overwrite of the batch's own partitions for
         a ``by_batch`` table; otherwise ``mode`` (append)."""
         w = df.write
+        if mode == "overwrite":
+            self._id_type = None
         if mode is None and self.by_batch:
             w = w.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         else:
@@ -394,6 +412,7 @@ class BatchTable:
                 self.spark, table.path, table.schema(it), step,
                 *table.partition_cols,
             )
+            table._id_type = None
         if self.tombstones:
             shutil.rmtree(self.tombstones.path, ignore_errors=True)
         return True

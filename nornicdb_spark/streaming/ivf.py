@@ -37,7 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from nornicdb_spark.operators.localframe import lit_expr, literal_df
+from nornicdb_spark.operators.localframe import literal_df, sql_literal
+from nornicdb_spark.search.vector import cosine_sql, cosine_topk, dot_sql, sql_col
 from nornicdb_spark.sources.layout import BatchTable, MaintainedIndex
 
 __all__ = ["MaintainedIVFIndex"]
@@ -95,56 +96,46 @@ class MaintainedIVFIndex(MaintainedIndex):
         return self._centers
 
     # -- row derivation (per-row narrow expressions, micro-batch-safe) ----
-    def _code_cols(self) -> list:
-        """(vec_id, codes, code_norm) — the Int8Index quantization as
-        plain select expressions."""
-        v = F.col(self.vec_col).cast("array<double>")
-        scale = F.array_max(F.transform(v, lambda x: F.abs(x))) / F.lit(127.0)
-        return [F.col(self.id_col).alias("vec_id"), v.alias("_v"), scale.alias("_scale")]
-
     def _rows(self, vectors: DataFrame, batch_id: int) -> DataFrame:
-        """(vec_id, codes, code_norm, src_batch, list_id) — assignment is
-        a codegen'd argmin of squared L2 distance over the frozen
-        centroid literals (‖v−c‖² = ‖v‖² − 2v·c + ‖c‖²; ‖v‖² is common
-        to all lists, so argmin(‖c‖² − 2v·c) suffices — one fused
-        aggregate per centroid, no Python)."""
-        from nornicdb_spark.search.vector import dot
-
-        centers = self.centers()
-        base = vectors.select(*self._code_cols())
-        scores = F.array(
-            *[
-                F.lit(float(sum(x * x for x in c)))
-                - 2.0 * dot(F.col("_v"), lit_expr(c))
-                for c in centers
-            ]
+        """(vec_id, codes, code_norm, src_batch, list_id) — the Int8Index
+        quantization, and assignment as a codegen'd argmin of squared L2
+        distance over the frozen centroid literals (‖v−c‖² = ‖v‖² −
+        2v·c + ‖c‖²; ‖v‖² is common to all lists, so argmin(‖c‖² −
+        2v·c) suffices — one fused fold per centroid, no Python). Built
+        as SQL text: a fixed handful of JVM calls however many lists."""
+        two = sql_literal(2.0)
+        dists = ", ".join(
+            f"({sql_literal(float(sum(x * x for x in c)))}"
+            f" - {dot_sql('_v', sql_literal(c))} * {two})"
+            for c in self.centers()
         )
-        codes = F.when(
-            F.col("_scale") > 0,
-            F.transform(F.col("_v"), lambda x: F.round(x / F.col("_scale")).cast("int")),
-        ).otherwise(F.transform(F.col("_v"), lambda x: F.lit(0)))
         return (
-            base.withColumn("_s", scores)
-            .select(
+            vectors.selectExpr(
+                f"{sql_col(self.id_col)} AS vec_id",
+                f"CAST({sql_col(self.vec_col)} AS ARRAY<DOUBLE>) AS _v",
+            )
+            .selectExpr(
+                "vec_id", "_v",
+                f"array_max(transform(_v, x -> abs(x))) / {sql_literal(127.0)}"
+                " AS _scale",
+                f"array({dists}) AS _s",
+            )
+            .selectExpr(
                 "vec_id",
-                codes.alias("codes"),
-                (F.array_position(F.col("_s"), F.array_min("_s")) - 1)
-                .cast("int")
-                .alias("list_id"),
+                "CASE WHEN _scale > 0"
+                " THEN transform(_v, x -> CAST(round(x / _scale) AS INT))"
+                " ELSE transform(_v, x -> 0) END AS codes",
+                "CAST(array_position(_s, array_min(_s)) - 1 AS INT) AS list_id",
             )
-            .withColumn(
-                "code_norm",
-                F.sqrt(
-                    F.aggregate(
-                        F.col("codes"),
-                        F.lit(0.0),
-                        lambda a, c: a + c.cast("double") * c.cast("double"),
-                    )
-                ),
+            .selectExpr(
+                "vec_id", "codes",
+                f"sqrt(aggregate(codes, {sql_literal(0.0)},"
+                " (acc, c) -> acc + CAST(c AS DOUBLE) * CAST(c AS DOUBLE)))"
+                " AS code_norm",
+                f"CAST({int(batch_id)} AS BIGINT) AS src_batch",
+                "list_id",
             )
-            .filter(F.col("code_norm") > 0)  # zero vectors have no direction
-            .withColumn("src_batch", F.lit(int(batch_id)).cast("bigint"))
-            .select("vec_id", "codes", "code_norm", "src_batch", "list_id")
+            .filter("code_norm > 0")  # zero vectors have no direction
         )
 
     # -- bootstrap ----------------------------------------------------------
@@ -245,16 +236,11 @@ class MaintainedIVFIndex(MaintainedIndex):
         `PartitionFilters`) scores the int8 codes for every query at
         once (the query batch broadcasts as (query_id, list_id) probe
         pairs + (query_id, qv, qn) vectors), a per-query window keeps
-        k·refine candidates, and one keyed fetch of ≤ |batch|·k·refine
-        fp32 rows exact-refines them. q queries cost one pruned scan
+        k·refine candidates, and one keyed pass over the fp32 corpus
+        against those broadcast candidates exact-refines them. q queries cost one pruned scan
         instead of q. Zero-norm queries have no direction and produce
         no rows."""
-        from pyspark.sql import Window
-
-        from nornicdb_spark.search.vector import cosine_sim
-
         id_type = self.codes.id_type(id_type)
-        out_schema = f"query_id bigint, vec_id {id_type}, score double"
         centers = self.centers()
         # Probe assignment is SPARK-SIDE — the ingest path's codegen-
         # over-broadcast-centroid-literals discipline (``_rows``), not a
@@ -265,107 +251,91 @@ class MaintainedIVFIndex(MaintainedIndex):
         # centroid; a degenerate zero-norm centroid pins sim = −1.0,
         # matching :meth:`search`), comparator-sorted sim-desc /
         # list_id-asc (the stable argsort ``search`` computes), sliced
-        # to n_probe, exploded to (query_id, list_id) probe pairs.
-        from nornicdb_spark.search.vector import dot
-
-        qbase = (
-            queries.select(
-                F.col(qid_col).cast("bigint").alias("query_id"),
-                F.col(qvec_col).cast("array<double>").alias("qv"),
+        # to n_probe, exploded to (query_id, list_id) probe pairs. All
+        # of it is SQL text, a fixed handful of JVM calls.
+        sims = ", ".join(
+            "named_struct('sim', "
+            + (
+                f"{dot_sql('qv', sql_literal(c))} / ({sql_literal(cn)} * qn)"
+                if cn > 0.0
+                else sql_literal(-1.0)
             )
-            .withColumn(
-                "qn",
-                F.sqrt(
-                    F.aggregate(
-                        F.col("qv"), F.lit(0.0), lambda a, x: a + x * x
-                    )
-                ),
+            + f", 'list_id', {i})"
+            for i, (c, cn) in enumerate(
+                (c, sum(x * x for x in c) ** 0.5) for c in centers
             )
-            .filter(F.col("qn") > 0)  # zero-norm: no direction, no rows
         )
-        sims = F.array(
-            *[
-                F.struct(
-                    (
-                        (dot(F.col("qv"), lit_expr(c))
-                         / (F.lit(cn) * F.col("qn"))).alias("sim")
-                        if cn > 0.0
-                        else F.lit(-1.0).alias("sim")
-                    ),
-                    F.lit(i).alias("list_id"),
-                )
-                for i, (c, cn) in enumerate(
-                    (c, sum(x * x for x in c) ** 0.5) for c in centers
-                )
-            ]
+        by_sim = (
+            "(l, r) -> CASE WHEN l.sim > r.sim THEN -1"
+            " WHEN l.sim < r.sim THEN 1 ELSE l.list_id - r.list_id END"
         )
-        cmp = lambda l, r: (  # noqa: E731 — array_sort comparator
-            F.when(l["sim"] > r["sim"], F.lit(-1))
-            .when(l["sim"] < r["sim"], F.lit(1))
-            .otherwise(l["list_id"] - r["list_id"])
+        qdf = (
+            queries.selectExpr(
+                f"CAST({sql_col(qid_col)} AS BIGINT) AS query_id",
+                f"CAST({sql_col(qvec_col)} AS ARRAY<DOUBLE>) AS qv",
+            )
+            .selectExpr(
+                "query_id", "qv",
+                f"sqrt(aggregate(qv, {sql_literal(0.0)}, (acc, x) -> acc + x * x))"
+                " AS qn",
+            )
+            .filter("qn > 0")  # zero-norm: no direction, no rows
         )
-        pair_df = qbase.select(
+        pair_df = qdf.selectExpr(
             "query_id",
-            F.explode(
-                F.slice(F.array_sort(sims, cmp), 1, int(n_probe))
-            ).alias("_p"),
-        ).select("query_id", F.col("_p.list_id").alias("list_id"))
-        qdf = qbase.select("query_id", "qv", "qn")
-        # the ONLY collect: the distinct probed lists, bounded by
-        # n_lists (not by |batch|) — it feeds the ``list_id isin``
-        # literal that becomes PartitionFilters on the codes scan
-        lists = sorted(
-            r.list_id for r in pair_df.select("list_id").distinct().collect()
-        )
-        if not lists:
-            return literal_df(self.spark, [], out_schema)
-        code_dot = F.aggregate(
-            F.zip_with(
-                F.col("codes"), F.col("qv"), lambda c, qx: c.cast("double") * qx
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+            f"explode(slice(array_sort(array({sims}), {by_sim}), 1, {int(n_probe)}))"
+            " AS _p",
+        ).selectExpr("query_id", "_p.list_id AS list_id")
+        if n_probe >= len(centers):
+            # every list is probed: nothing for a list literal to prune
+            lists = list(range(len(centers)))
+        else:
+            # the ONLY collect: the distinct probed lists, bounded by
+            # n_lists (not by |batch|) — it feeds the ``list_id isin``
+            # literal that becomes PartitionFilters on the codes scan
+            lists = sorted(
+                r.list_id for r in pair_df.select("list_id").distinct().collect()
+            )
+            if not lists:
+                return literal_df(
+                    self.spark, [], f"query_id bigint, vec_id {id_type}, score double"
+                )
         approx = (
             self._codes_pruned(lists, id_type)
             .join(F.broadcast(pair_df), "list_id")
-            .join(F.broadcast(qdf.select("query_id", "qv", "qn")), "query_id")
-            .select(
-                "query_id",
-                "vec_id",
-                (code_dot / (F.col("code_norm") * F.col("qn"))).alias("score"),
+            .join(F.broadcast(qdf), "query_id")
+            .selectExpr(
+                "query_id", "vec_id", "qv",
+                f"{dot_sql('codes', 'qv')} / (code_norm * qn) AS score",
             )
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc(F.round(F.col("score"), 9)), F.asc("vec_id")
+        rank = (
+            "row_number() OVER (PARTITION BY query_id"
+            " ORDER BY round(score, 9) DESC, vec_id) AS _rn"
         )
+        # the candidates, with their query vectors, broadcast into ONE
+        # keyed pass over the fp32 corpus: only their ≤ |batch|·k·refine
+        # rows come out. A second consumer of ``cand`` (an id list for a
+        # semi-join fetch) is planned as a second scan-and-window
+        # pipeline whenever its columns differ.
         cand = (
-            approx.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= int(k) * int(refine))
-            .select("query_id", "vec_id")
+            approx.selectExpr("query_id", "vec_id", "qv", rank)
+            .filter(f"_rn <= {int(k) * int(refine)}")
+            .selectExpr("query_id", "vec_id AS _cand_id", "qv")
         )
-        ids = cand.select(F.col("vec_id").alias("_cand_id")).distinct()
-        fetched = refine_src.join(
-            F.broadcast(ids),
-            refine_src[self.id_col] == F.col("_cand_id"),
-            "left_semi",
-        ).select(
-            F.col(self.id_col).alias("vec_id"),
-            F.col(self.vec_col).cast("array<double>").alias("_emb"),
-        )
-        exact = (
-            cand.join(fetched, "vec_id")
-            .join(F.broadcast(qdf.select("query_id", "qv")), "query_id")
-            .select(
-                "query_id",
-                "vec_id",
-                cosine_sim(F.col("_emb"), F.col("qv")).alias("score"),
-            )
+        ref = refine_src.selectExpr(
+            f"{sql_col(self.id_col)} AS _ref_id",
+            f"CAST({sql_col(self.vec_col)} AS ARRAY<DOUBLE>) AS _emb",
         )
         return (
-            exact.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= int(k))
-            .select("query_id", "vec_id", "score")
+            F.broadcast(cand)
+            .join(ref, F.expr("_ref_id = _cand_id"))
+            .selectExpr(
+                "query_id", "_cand_id AS vec_id", f"{cosine_sql('_emb', 'qv')} AS score"
+            )
+            .selectExpr("query_id", "vec_id", "score", rank)
+            .filter(f"_rn <= {int(k)}")
+            .selectExpr("query_id", "vec_id", "score")
         )
 
     # -- monitoring -----------------------------------------------------------
@@ -390,8 +360,6 @@ class MaintainedIVFIndex(MaintainedIndex):
         each pruned to n_probe lists. Raises on a never-ingested index
         (a sentinel that reports healthy on nothing would hide a dead
         ingest path)."""
-        from nornicdb_spark.search.vector import cosine_topk
-
         id_type = self.codes.id_type(id_type)
         codes = self.codes.read(id_type)
         latest = codes.agg(F.max("src_batch")).collect()[0][0]
@@ -435,8 +403,11 @@ class MaintainedIVFIndex(MaintainedIndex):
         (only the probed lists' directories are read); removed vectors
         stop matching immediately — both search and search_many inherit
         the tombstone anti-join."""
+        in_lists = ", ".join(str(int(i)) for i in list_ids)
         return self.codes.drop_tombstoned(
-            self.codes.read(id_type).filter(F.col("list_id").isin(list_ids)),
+            self.codes.read(id_type).filter(
+                f"list_id IN ({in_lists})" if list_ids else "FALSE"
+            ),
             id_type,
         )
 
@@ -453,8 +424,6 @@ class MaintainedIVFIndex(MaintainedIndex):
         their codes, exact-refine the top k·refine against ``refine_src``
         (the fp32 corpus — cold storage at scale; only ≤ k·refine rows
         are fetched). Returns (vec_id, score) descending, ties by id."""
-        from nornicdb_spark.search.vector import cosine_topk
-
         id_type = self.codes.id_type(id_type)
         qn = float(sum(float(x) * float(x) for x in query_vec)) ** 0.5
         if qn == 0.0:
@@ -472,24 +441,19 @@ class MaintainedIVFIndex(MaintainedIndex):
             return d / n if n else -1.0
 
         probe = sorted(range(len(centers)), key=lambda i: -cos(centers[i]))[:n_probe]
-        code_dot = F.aggregate(
-            F.zip_with(
-                F.col("codes"), lit_expr([float(x) for x in query_vec]),
-                lambda c, qx: c.cast("double") * qx,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        code_dot = dot_sql("codes", sql_literal([float(x) for x in query_vec]))
         approx = (
             self._codes_pruned(probe, id_type)
-            .select("vec_id", (code_dot / (F.col("code_norm") * F.lit(qn))).alias("score"))
-            .orderBy(F.desc(F.round("score", 9)), F.asc("vec_id"))
+            .selectExpr(
+                "vec_id", f"{code_dot} / (code_norm * {sql_literal(qn)}) AS score"
+            )
+            .orderBy(F.desc(F.expr("round(score, 9)")), F.asc("vec_id"))
             .limit(k * refine)
         )
-        cand_ids = approx.select(F.col("vec_id").alias("_cand_id"))
+        cand_ids = approx.selectExpr("vec_id AS _cand_id")
         cand = refine_src.join(
             F.broadcast(cand_ids),
-            refine_src[self.id_col] == F.col("_cand_id"),
+            F.expr(f"{sql_col(self.id_col)} = _cand_id"),
             "left_semi",
         )
         return cosine_topk(cand, query_vec, k, self.id_col, self.vec_col)
