@@ -9,7 +9,7 @@ reference's EdgeSuggestion (inference.go:95-101).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from nornicdb_spark.operators.localframe import literal_df
 
@@ -45,6 +45,7 @@ def similarity_edges(
     pair both ways and keeps the per-source top-k by a keyed window.
     Returns (src, dst, rel_type, score, confidence, method)."""
     from nornicdb_spark.operators.dedup import embedding_near_duplicates
+    from nornicdb_spark.search import hybrid
 
     pairs = embedding_near_duplicates(
         embeddings, threshold=threshold, id_col=id_col, vec_col=vec_col,
@@ -62,14 +63,8 @@ def similarity_edges(
         ).alias("_e"),
         "score",
     ).select(F.col("_e.a").alias("a"), F.col("_e.b").alias("b"), "score")
-    # rounded rank key: numpy and the SQL oracle differ in the last ULP,
-    # so near-tied neighbors must fall to the id tie-break identically
-    w = Window.partitionBy("a").orderBy(
-        F.desc(F.round(F.col("score"), 9)), F.asc("b")
-    )
     return (
-        both.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= top_k)
+        hybrid.top_k(both, top_k, "score", "b", by=("a",), rank="_r")
         .select(
             F.col("a").alias("src"),
             F.col("b").alias("dst"),

@@ -116,6 +116,11 @@ def sql_literal(v, escapes_off=None) -> str:
     raise Unrenderable(type(v).__name__)
 
 
+def sql_col(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def lit_expr(value) -> F.Column:
     """Column literal for an array or matrix ``value``, parsed JVM-side
     from :func:`sql_literal` text in one call. Scalars stay ``F.lit``."""

@@ -18,11 +18,39 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nornicdb_spark.operators.localframe import sql_literal
+from nornicdb_spark.operators.localframe import sql_col, sql_literal
 
 
 def _vec(col: str) -> F.Column:
     return F.col(col).cast("array<double>")
+
+
+# The int8 codec, as SQL text over array<double> expressions. Every int8
+# index writes its codes with these three rules, and drops the rows whose
+# code_norm is 0: a zero vector has no direction.
+
+
+def int8_scale_sql(v: str) -> str:
+    """Symmetric per-vector scale: max|v| / 127."""
+    return f"array_max(transform({v}, x -> abs(x))) / {sql_literal(127.0)}"
+
+
+def int8_codes_sql(v: str, scale: str) -> str:
+    """code_i = round(v_i / scale) ∈ [-127, 127]; all zeros at scale 0."""
+    return (
+        f"CASE WHEN {scale} > 0"
+        f" THEN transform({v}, x -> CAST(round(x / {scale}) AS INT))"
+        f" ELSE transform({v}, x -> 0) END"
+    )
+
+
+def code_norm_sql(codes: str) -> str:
+    """The code vector's L2 norm, a double: the per-vector scale cancels
+    in cosine, so int8 cosine is Σcᵢqᵢ / (code_norm·|q|)."""
+    return (
+        f"sqrt(aggregate({codes}, {sql_literal(0.0)},"
+        " (acc, c) -> acc + CAST(c AS DOUBLE) * CAST(c AS DOUBLE)))"
+    )
 
 
 def quantize_int8(
@@ -30,21 +58,14 @@ def quantize_int8(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Symmetric per-vector int8 quantization: scale = max|v| / 127,
-    code_i = round(v_i / scale) ∈ [-127, 127] (zero vectors get scale 0
-    and all-zero codes). Returns (vec_id, scale, codes array<int>)."""
-    v = _vec(vec_col)
-    scale = F.array_max(F.transform(v, lambda x: F.abs(x))) / F.lit(127.0)
-    codes = F.when(
-        F.col("scale") > 0,
-        F.transform(v, lambda x: F.round(x / F.col("scale")).cast("int")),
-    ).otherwise(F.transform(v, lambda x: F.lit(0)))
+    """Symmetric per-vector int8 quantization (:func:`int8_scale_sql`,
+    :func:`int8_codes_sql`; zero vectors get scale 0 and all-zero
+    codes). Returns (vec_id, scale, codes array<int>)."""
+    v = f"CAST({sql_col(vec_col)} AS ARRAY<DOUBLE>)"
     return (
-        embeddings.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias(vec_col)
-        )
-        .withColumn("scale", scale)
-        .select("vec_id", "scale", codes.alias("codes"))
+        embeddings.selectExpr(f"{sql_col(id_col)} AS vec_id", sql_col(vec_col))
+        .withColumn("scale", F.expr(int8_scale_sql(v)))
+        .selectExpr("vec_id", "scale", f"{int8_codes_sql(v, 'scale')} AS codes")
     )
 
 

@@ -20,7 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from nornicdb_spark.operators.localframe import literal_df
+from nornicdb_spark.operators.localframe import literal_df, sql_literal
+from nornicdb_spark.search.hybrid import top_k
 
 K1 = 1.2
 B = 0.75
@@ -77,8 +78,6 @@ class BM25Index:
 
     @classmethod
     def build(cls, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> "BM25Index":
-        from pyspark.sql import Window
-
         from nornicdb_spark.operators.dedup import spread
 
         docs = spread(docs)  # single-file corpora arrive as 1 partition
@@ -188,40 +187,21 @@ class BM25Index:
                 cand, terms, self.n_docs, self.avgdl, k
             )
 
-        df_per_term = cand.groupBy("term").agg(
-            F.count(F.lit(1)).alias("df")
-        )
-        idf = F.greatest(
-            F.log(
-                1
-                + (F.lit(self.n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
-            F.lit(0.0),
-        )
-
         # a term may match several query terms (exact for one, prefix
         # for another) — the qdf join fans contributions out per match
         cond = (F.col("term") == F.col("qterm")) | (
             F.col("term").startswith(F.col("qterm"))
             & (F.col("term") != F.col("qterm"))
         )
-        weight = F.when(F.col("term") == F.col("qterm"), F.lit(1.0)).otherwise(
-            F.lit(0.8)
+        weight = (
+            f"CASE WHEN term = qterm THEN {sql_literal(1.0)}"
+            f" ELSE {sql_literal(0.8)} END"
         )
-        matched = cand.join(df_per_term, "term").join(F.broadcast(qdf), cond)
-        tf = F.col("tf").cast("double")
-        denom = tf + K1 * (1 - B + B * F.col("dl") / F.lit(self.avgdl))
-        contrib = weight * idf * (tf * (K1 + 1) / denom)
-        return (
-            matched.groupBy("doc_id")
-            .agg(F.sum(contrib).alias("score"))
-            # rounded selection key: F.sum's partition order gives two
-            # identical documents ULP-different scores, so an unrounded
-            # sort would rank them arbitrarily instead of by doc_id —
-            # and differently from the oracle's single-threaded sum
-            .orderBy(F.desc(F.round(F.col("score"), 9)), F.asc("doc_id"))
-            .limit(k)
+        matched = _with_df(cand).join(F.broadcast(qdf), cond)
+        scored = matched.groupBy("doc_id").agg(
+            F.expr(bm25_sum_sql(weight, self.n_docs, self.avgdl))
         )
+        return top_k(scored, k, "score", "doc_id")
 
 
     def search_many(
@@ -244,8 +224,6 @@ class BM25Index:
         multiplies its term's contribution exactly as the single-query
         path does; a query with no indexable tokens contributes no
         output rows."""
-        from pyspark.sql import Window
-
         qterms = query_terms_table(queries, qid_col, qtext_col)
         # prune the index to terms any query mentions (bounded: the
         # query batch is driver-scale, the postings are corpus-scale)
@@ -281,29 +259,14 @@ def score_many_candidates(
     ``search_many`` and the maintained index's term-pruned batched probe
     (streaming/fulltext.py) — the :func:`score_exact_candidates`
     sharing discipline, batched."""
-    from pyspark.sql import Window
-
-    df_per_term = cand.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.greatest(
-        F.log(1 + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        F.lit(0.0),
-    )
-    tf = F.col("tf").cast("double")
-    denom = tf + K1 * (1 - B + B * F.col("dl") / F.lit(avgdl))
-    contrib = F.col("qw") * idf * (tf * (K1 + 1) / denom)
     scored = (
-        cand.join(df_per_term, "term")
+        _with_df(cand)
         .join(F.broadcast(qterms), "term")
         .groupBy("query_id", "doc_id")
-        .agg(F.sum(contrib).alias("score"))
+        .agg(F.expr(bm25_sum_sql("qw", n_docs, avgdl)))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("score"), 9)), F.asc("doc_id")
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= int(k))
-        .select("query_id", "doc_id", "score")
+    return top_k(scored, k, "score", "doc_id", by=("query_id",)).select(
+        "query_id", "doc_id", "score"
     )
 
 
@@ -317,29 +280,47 @@ def score_exact_candidates(
     as a literal weight."""
     from collections import Counter
 
-    df_per_term = cand.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.greatest(
-        F.log(1 + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        F.lit(0.0),
-    )
-    counts = Counter(terms)
-    weight = F.lit(1.0)
-    for t, c in counts.items():
+    weight = sql_literal(1.0)
+    for t, c in Counter(terms).items():
         if c > 1:
-            weight = F.when(F.col("term") == t, F.lit(float(c))).otherwise(weight)
-    matched = cand.join(df_per_term, "term")
-    tf = F.col("tf").cast("double")
-    denom = tf + K1 * (1 - B + B * F.col("dl") / F.lit(avgdl))
-    contrib = weight * idf * (tf * (K1 + 1) / denom)
+            weight = (
+                f"CASE WHEN term = {sql_literal(t)}"
+                f" THEN {sql_literal(float(c))} ELSE {weight} END"
+            )
+    scored = _with_df(cand).groupBy("doc_id").agg(
+        F.expr(bm25_sum_sql(weight, n_docs, avgdl))
+    )
+    return top_k(scored, k, "score", "doc_id")
+
+
+def _with_df(cand: DataFrame) -> DataFrame:
+    """A postings slice joined with each of its terms' document
+    frequency ``df`` within the slice."""
+    return cand.join(cand.groupBy("term").agg(F.count(F.lit(1)).alias("df")), "term")
+
+
+def bm25_sum_sql(weight: str, n_docs: int, avgdl: float) -> str:
+    """``sum(...) AS score`` of the BM25 term contributions, as SQL text
+    over (tf, dl, df) rows: Σ weight · idf · tf·(K1+1) / (tf + K1·(1 −
+    B + B·dl/avgdl)), idf = max(ln(1 + (N − df + 0.5)/(df + 0.5)), 0).
+    ``weight`` is the SQL text of each row's query-term weight: the
+    repeat count of the word, the ``qw`` column of a query table, or
+    0.8 for a prefix match. The operands are in the order the
+    Column-expression form of this formula planned them, so the doubles
+    are the same."""
+    lit = sql_literal
+    tf = "CAST(tf AS DOUBLE)"
+    idf = (
+        f"greatest(ln((((({int(n_docs)} - df) + {lit(0.5)}) / (df + {lit(0.5)}))"
+        f" + 1)), {lit(0.0)})"
+    )
+    # tf + K1 * (1 - B + B * dl / avgdl)
+    denom = (
+        f"({tf} + (((((dl * {lit(B)}) / {lit(float(avgdl))}) + {lit(1 - B)}))"
+        f" * {lit(K1)}))"
+    )
     return (
-        matched.groupBy("doc_id")
-        .agg(F.sum(contrib).alias("score"))
-        # rounded selection key: F.sum's partition order gives two
-        # identical documents ULP-different scores, so an unrounded
-        # sort would rank them arbitrarily instead of by doc_id —
-        # and differently from the oracle's single-threaded sum
-        .orderBy(F.desc(F.round(F.col("score"), 9)), F.asc("doc_id"))
-        .limit(k)
+        f"sum((({weight}) * {idf}) * (({tf} * {lit(K1 + 1)}) / {denom})) AS score"
     )
 
 
@@ -362,15 +343,11 @@ def phrase_search(
     unit), and ties break by doc id (the reference's sort.Slice leaves
     equal scores in arbitrary order)."""
     pos = F.locate(phrase.lower(), F.lower(F.col(text_col)))  # 1-based, 0=miss
-    return (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            (1.0 / (1.0 + (pos - 1).cast("double") / 100.0)).alias("score"),
-        )
-        .where(pos > 0)
-        .orderBy(F.desc(F.round(F.col("score"), 9)), F.asc("doc_id"))
-        .limit(int(limit))
-    )
+    scored = docs.select(
+        F.col(id_col).alias("doc_id"),
+        (1.0 / (1.0 + (pos - 1).cast("double") / 100.0)).alias("score"),
+    ).where(pos > 0)
+    return top_k(scored, limit, "score", "doc_id")
 
 
 def phrase_oracle_sql(phrase: str, limit: int = 10) -> str:

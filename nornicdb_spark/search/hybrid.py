@@ -12,9 +12,62 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
+
+from nornicdb_spark.operators.localframe import sql_col, sql_literal
 
 RRF_K = 60
+
+
+def _row_number_sql(score: str, key: str, ascending: bool, part: list[str]) -> str:
+    """The ranking rule of :func:`top_k` as a ``row_number`` window over
+    the SQL expressions ``part``."""
+    return (
+        f"row_number() OVER (PARTITION BY {', '.join(part)} ORDER BY"
+        f" round({sql_col(score)}, 9){'' if ascending else ' DESC'}, {sql_col(key)})"
+    )
+
+
+def sort_rule(
+    score: str, key: str, ascending: bool = False, by: tuple[str, ...] = ()
+) -> list[F.Column]:
+    """Sort columns for the ranking rule of :func:`top_k`, after the
+    ``by`` columns ascending."""
+    rounded = F.expr(f"round({sql_col(score)}, 9)")
+    return [
+        *[F.asc(c) for c in by],
+        rounded.asc() if ascending else rounded.desc(),
+        F.asc(key),
+    ]
+
+
+def top_k(
+    df: DataFrame,
+    k: int | None,
+    score: str,
+    key: str,
+    by: tuple[str, ...] = (),
+    ascending: bool = False,
+    rank: str = "_rn",
+) -> DataFrame:
+    """The one top-k rule of every search path: ``score`` ROUNDED to 9
+    decimals, descending (``ascending`` for distances), ties broken by
+    ``key`` ascending. Distributed float sums give duplicated documents
+    ULP-different scores; the rounded key makes them fall to the id
+    tie-break identically to the single-threaded SQL oracle.
+
+    Without ``by`` it plans ``orderBy`` + ``limit``
+    (TakeOrderedAndProject), the single-query shape; ``k=None`` sorts
+    without a limit. With ``by`` (a query key) it keeps the first ``k``
+    rows of each key group by a ``row_number`` window, the batched
+    shape, and the frame gains that row number as column ``rank``
+    (callers select it away or keep it). The plan shape follows the
+    call."""
+    if not by:
+        out = df.orderBy(*sort_rule(score, key, ascending))
+        return out if k is None else out.limit(int(k))
+    return df.withColumn(
+        rank, F.expr(_row_number_sql(score, key, ascending, [sql_col(c) for c in by]))
+    ).filter(f"{sql_col(rank)} <= {int(k)}")
 
 
 def rank_by(
@@ -24,32 +77,62 @@ def rank_by(
     ascending: bool = False,
     partition_by: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Attach a deterministic 1-indexed ``rank`` (ties broken by id).
+    """Attach a deterministic 1-indexed ``rank`` by the rule of
+    :func:`top_k` (the score rounded to 9 decimals, ties by id).
 
     ``partition_by``: rank within each key group (e.g. a query id for
     batched multi-query search) — the scalable path, one shuffle keyed by
     the partition columns. Without it, ranking is GLOBAL: the caller's
     contract is a bounded top-k list (every in-tree caller LIMITs
-    upstream); the constant partition key makes the single-partition
-    execution explicit rather than an accidental WindowExec fallback.
-
-    The rank key is the score ROUNDED to 9 decimals: distributed float
-    sums give duplicated documents ULP-different scores, and the rank
-    must fall to the id tie-break identically to the single-threaded
-    SQL oracle."""
-    key = F.round(F.col(score_col), 9)
-    order = [
-        F.asc(key) if ascending else F.desc(key),
-        F.asc(id_col),
+    upstream); a single-bucket hash of the id as partition key (a plain
+    literal folds back to the unpartitioned-window fallback WindowExec
+    warns about) makes the single-partition execution explicit."""
+    part = [sql_col(c) for c in partition_by] or [
+        f"pmod(xxhash64({sql_col(id_col)}), 1)"
     ]
-    if partition_by:
-        spec = W.partitionBy(*partition_by)
-    else:
-        # single-bucket hash of the id: semantically one partition, but an
-        # explicit partition spec (a plain lit folds back to the
-        # unpartitioned-window fallback WindowExec warns about)
-        spec = W.partitionBy(F.pmod(F.xxhash64(F.col(id_col)), F.lit(1)))
-    return df.withColumn("rank", F.row_number().over(spec.orderBy(*order)))
+    return df.withColumn(
+        "rank", F.expr(_row_number_sql(score_col, id_col, ascending, part))
+    )
+
+
+def _rrf(
+    ranked: dict[str, DataFrame],
+    weights: dict[str, float] | None,
+    id_col: str,
+    keys: tuple[str, ...],
+    k: int,
+    limit: int | None,
+    min_score: float | None,
+) -> DataFrame:
+    """RRF over ranked lists joined on ``keys`` + ``id_col``: a list
+    missing a document contributes 0 for it. Returns (*keys, id_col,
+    <name>_rank …, rrf_score) in the :func:`top_k` order, after the
+    keys; ``limit`` keeps the top rows per key."""
+    weights = weights or {}
+    fused = None
+    for name, df in ranked.items():
+        part = df.selectExpr(
+            *map(sql_col, keys), sql_col(id_col), f"rank AS {sql_col(name + '_rank')}"
+        )
+        fused = part if fused is None else fused.join(
+            part, [*keys, id_col], "full_outer"
+        )
+    score = " + ".join(
+        f"CASE WHEN {sql_col(name + '_rank')} IS NOT NULL"
+        f" THEN {sql_literal(float(weights.get(name, 1.0)))}"
+        f" / ({int(k)} + {sql_col(name + '_rank')}) ELSE {sql_literal(0.0)} END"
+        for name in ranked
+    )
+    out = fused.withColumn("rrf_score", F.expr(score))
+    if min_score is not None:
+        out = out.where(
+            f"round(rrf_score, 9) >= {sql_literal(float(min_score))}"
+        )
+    if not keys:
+        return top_k(out, limit or None, "rrf_score", id_col)
+    if limit:
+        out = top_k(out, limit, "rrf_score", id_col, by=keys).drop("_rn")
+    return out.orderBy(*sort_rule("rrf_score", id_col, by=keys))
 
 
 def rrf_fuse(
@@ -62,37 +145,14 @@ def rrf_fuse(
 ) -> DataFrame:
     """Fuse named ranked lists (each with ``id_col`` + ``rank``).
 
-    Returns (id_col, rrf_score, <name>_rank …) ordered by score desc.
-    Missing entries contribute 0 (document absent from that ranking).
-    ``min_score``: drop fused results below the threshold (the
+    Returns (id_col, <name>_rank …, rrf_score) ordered by score desc,
+    ties by id. Missing entries contribute 0 (document absent from that
+    ranking). ``min_score``: drop fused results below the threshold (the
     reference's SearchOptions.MinRRFScore, search.go:172 — default
     0.01 there; compared on the 9-digit-rounded score so boundary
     membership matches the oracle).
     """
-    weights = weights or {}
-    fused = None
-    for name, df in ranked.items():
-        part = df.select(
-            F.col(id_col), F.col("rank").alias(f"{name}_rank")
-        )
-        fused = part if fused is None else fused.join(part, id_col, "full_outer")
-
-    score = None
-    for name in ranked:
-        w = float(weights.get(name, 1.0))
-        term = F.when(
-            F.col(f"{name}_rank").isNotNull(),
-            F.lit(w) / (F.lit(k) + F.col(f"{name}_rank")),
-        ).otherwise(F.lit(0.0))
-        score = term if score is None else score + term
-
-    out = fused.withColumn("rrf_score", score)
-    if min_score is not None:
-        out = out.where(F.round(F.col("rrf_score"), 9) >= float(min_score))
-    out = out.orderBy(
-        F.desc(F.round(F.col("rrf_score"), 9)), F.asc(id_col)
-    )
-    return out.limit(limit) if limit else out
+    return _rrf(ranked, weights, id_col, (), k, limit, min_score)
 
 
 def rrf_fuse_many(
@@ -107,50 +167,16 @@ def rrf_fuse_many(
     """Batched RRF: fuse named PER-QUERY ranked lists (each with
     ``qid_col`` + ``id_col`` + ``rank``, e.g. from ``search_many`` legs
     ranked via :func:`rank_by` with ``partition_by=(qid_col,)``). The
-    batched twin of :func:`rrf_fuse` — per-query results identical; the
-    whole batch fuses in one pass (full-outer join on (query, doc),
-    one weighted-sum expression, per-query window ``limit``). This is
-    the reference's user-facing search entry (search.go:38-58 fuses
-    vector+BM25 per request) re-expressed at serving-batch shape: q
-    hybrid requests cost one fused plan, not q driver round trips.
-    Returns (qid_col, id_col, rrf_score, <name>_rank …) ordered within
+    batched twin of :func:`rrf_fuse` — the same fusion keyed by query,
+    so per-query results are identical; the whole batch fuses in one
+    pass (full-outer join on (query, doc), one weighted-sum expression,
+    per-query window ``limit``). This is the reference's user-facing
+    search entry (search.go:38-58 fuses vector+BM25 per request)
+    re-expressed at serving-batch shape: q hybrid requests cost one
+    fused plan, not q driver round trips.
+    Returns (qid_col, id_col, <name>_rank …, rrf_score) ordered within
     each query by score desc, ties by id."""
-    weights = weights or {}
-    fused = None
-    for name, df in ranked.items():
-        part = df.select(
-            F.col(qid_col), F.col(id_col), F.col("rank").alias(f"{name}_rank")
-        )
-        fused = (
-            part
-            if fused is None
-            else fused.join(part, [qid_col, id_col], "full_outer")
-        )
-
-    score = None
-    for name in ranked:
-        w = float(weights.get(name, 1.0))
-        term = F.when(
-            F.col(f"{name}_rank").isNotNull(),
-            F.lit(w) / (F.lit(k) + F.col(f"{name}_rank")),
-        ).otherwise(F.lit(0.0))
-        score = term if score is None else score + term
-
-    out = fused.withColumn("rrf_score", score)
-    if min_score is not None:
-        out = out.where(F.round(F.col("rrf_score"), 9) >= float(min_score))
-    if limit:
-        spec = W.partitionBy(qid_col).orderBy(
-            F.desc(F.round(F.col("rrf_score"), 9)), F.asc(id_col)
-        )
-        out = (
-            out.withColumn("_rn", F.row_number().over(spec))
-            .filter(F.col("_rn") <= int(limit))
-            .drop("_rn")
-        )
-    return out.orderBy(
-        F.asc(qid_col), F.desc(F.round(F.col("rrf_score"), 9)), F.asc(id_col)
-    )
+    return _rrf(ranked, weights, id_col, (qid_col,), k, limit, min_score)
 
 
 def adaptive_rrf_weights(query: str) -> dict[str, float]:
@@ -191,9 +217,7 @@ def lexical_rerank(
     terms = sorted(set(tokenize_query(query)))
     if not terms:
         raise ValueError("rerank: empty query after tokenization")
-    top = candidates.orderBy(
-        F.desc(F.round(F.col(score_col), 9)), F.asc(id_col)
-    ).limit(top_k)
+    top = candidates.orderBy(*sort_rule(score_col, id_col)).limit(top_k)
     joined = top.join(
         docs.select(F.col(id_col), F.col(text_col)), id_col, "left"
     )
@@ -219,11 +243,7 @@ def lexical_rerank(
             F.col("cross_score").alias("final_score"),
         )
     )
-    return out.orderBy(
-        F.desc("final_score"),
-        F.desc(F.round(F.col("bi_score"), 9)),
-        F.asc(id_col),
-    )
+    return out.orderBy(F.desc("final_score"), *sort_rule("bi_score", id_col))
 
 
 def mmr_diversify(

@@ -20,7 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from nornicdb_spark.operators.localframe import lit_expr, literal_df, sql_literal
+from nornicdb_spark.operators.localframe import lit_expr, literal_df, sql_col, sql_literal
+from nornicdb_spark.search.hybrid import top_k
 
 
 def dot(a: F.Column, b: F.Column) -> F.Column:
@@ -30,21 +31,19 @@ def dot(a: F.Column, b: F.Column) -> F.Column:
     )
 
 
-def dot_sql(a: str, b: str) -> str:
+def dot_sql(a: str, b: str, widen: bool = False) -> str:
     """:func:`dot` as SQL text over array expressions ``a`` and ``b``:
     the same zip_with-then-left-fold from a double zero, so the score
     is bit-identical, but it parses JVM-side in one call where the
     Column form costs tens of py4j round trips. An int array operand
-    is widened element-wise by the analyzer (``cast(x AS DOUBLE) * y``)."""
+    is widened element-wise by the analyzer (``cast(x AS DOUBLE) * y``);
+    ``widen`` casts both elements to double before the product, for two
+    int arrays."""
+    prod = "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)" if widen else "x * y"
     return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+        f"aggregate(zip_with({a}, {b}, (x, y) -> {prod}), "
         f"{sql_literal(0.0)}, (acc, v) -> acc + v)"
     )
-
-
-def sql_col(name: str) -> str:
-    """A column name as a quoted SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def cosine_sql(a: str, b: str) -> str:
@@ -97,14 +96,30 @@ def cosine_topk(
         scored = scored.where(
             F.round(F.col("score"), 9) >= float(min_similarity)
         )
-    return (
-        scored
-        # selection key rounded to 9 decimals: JVM and oracle float
-        # arithmetic differ in the last ULP, and duplicated vectors (equal
-        # scores) must fall to the vec_id tie-break identically on both
-        # sides or the top-k MEMBERSHIP diverges at the boundary
-        .orderBy(F.desc(F.expr("round(score, 9)")), F.asc("vec_id"))
-        .limit(k)
+    return top_k(scored, k, "score", "vec_id")
+
+
+def _cosine_pairs(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    qid: str,
+    qvec: str,
+    id_col: str,
+    vec_col: str,
+    where: str | None = None,
+) -> DataFrame:
+    """(qid, vec_id, score): the exact cosine of every corpus row against
+    every query of the broadcast ``queries`` frame (``qid``, ``qvec``
+    array<double>) — the scorer of the batched exact paths. ``where``
+    filters the pairs before scoring."""
+    pairs = embeddings.crossJoin(F.broadcast(queries))
+    if where is not None:
+        pairs = pairs.filter(where)
+    emb = f"CAST({sql_col(vec_col)} AS ARRAY<DOUBLE>)"
+    return pairs.selectExpr(
+        sql_col(qid),
+        f"{sql_col(id_col)} AS vec_id",
+        f"{cosine_sql(emb, sql_col(qvec))} AS score",
     )
 
 
@@ -125,26 +140,13 @@ def cosine_topk_many(
     :func:`knn_join` there is no self-exclusion — this is the batched
     SEARCH path, not the all-pairs neighbor join.
     Returns (query_id, vec_id, score)."""
-    from pyspark.sql import Window as W
-
-    q = queries.select(
-        F.col(qid_col).alias("query_id"),
-        F.col(qvec_col).cast("array<double>").alias("_qv"),
+    q = queries.selectExpr(
+        f"{sql_col(qid_col)} AS query_id",
+        f"CAST({sql_col(qvec_col)} AS ARRAY<DOUBLE>) AS _qv",
     )
-    scored = embeddings.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        F.col(id_col).alias("vec_id"),
-        cosine_sim(F.col(vec_col).cast("array<double>"), F.col("_qv")).alias(
-            "score"
-        ),
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("score"), 9)), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= int(k))
-        .select("query_id", "vec_id", "score")
+    scored = _cosine_pairs(embeddings, q, "query_id", "_qv", id_col, vec_col)
+    return top_k(scored, k, "score", "vec_id", by=("query_id",)).select(
+        "query_id", "vec_id", "score"
     )
 
 
@@ -157,14 +159,11 @@ def euclidean_topk(
 ) -> DataFrame:
     """Exact top-k by euclidean distance (ascending)."""
     emb = F.col(vec_col).cast("array<double>")
-    return (
-        embeddings.select(
-            F.col(id_col).alias("vec_id"),
-            euclidean_dist(emb, lit_expr([float(x) for x in query_vec])).alias("dist"),
-        )
-        .orderBy(F.asc(F.round(F.col("dist"), 9)), F.asc("vec_id"))
-        .limit(k)
+    dist = embeddings.select(
+        F.col(id_col).alias("vec_id"),
+        euclidean_dist(emb, lit_expr([float(x) for x in query_vec])).alias("dist"),
     )
+    return top_k(dist, k, "dist", "vec_id", ascending=True)
 
 
 def knn_join(
@@ -180,30 +179,17 @@ def knn_join(
     (excluding self-matches on equal ids). Broadcast the query side —
     the executors stream the big embedding table once.
     Returns (q_id, vec_id, score, rank)."""
-    from pyspark.sql import Window as W
-
-    e = embeddings.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("_v")
+    e = embeddings.selectExpr(
+        f"{sql_col(id_col)} AS vec_id",
+        f"CAST({sql_col(vec_col)} AS ARRAY<DOUBLE>) AS _v",
     )
-    q = queries.select(
-        F.col(q_id_col).alias("q_id"), F.col(q_vec_col).cast("array<double>").alias("_q")
+    q = queries.selectExpr(
+        f"{sql_col(q_id_col)} AS q_id",
+        f"CAST({sql_col(q_vec_col)} AS ARRAY<DOUBLE>) AS _q",
     )
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            cosine_sim(F.col("_v"), F.col("_q")).alias("score"),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(
-        F.desc(F.round(F.col("score"), 9)), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "score", "rank")
+    scored = _cosine_pairs(e, q, "q_id", "_q", "vec_id", "_v", where="vec_id != q_id")
+    return top_k(scored, k, "score", "vec_id", by=("q_id",), rank="rank").select(
+        "q_id", "vec_id", "score", "rank"
     )
 
 
@@ -624,11 +610,10 @@ class IVFPQIndex:
                 ),
             ),
         )
-        adc = (
+        adc = top_k(
             self.codes.filter(F.col("list_id").isin([int(x) for x in probe]))
-            .select("vec_id", adc_expr.alias("adc"))
-            .orderBy(F.asc(F.round(F.col("adc"), 9)), F.asc("vec_id"))
-            .limit(k * max(1, refine))
+            .select("vec_id", adc_expr.alias("adc")),
+            k * max(1, refine), "adc", "vec_id", ascending=True,
         )
         if refine <= 1:
             return adc.select("vec_id", F.col("adc").alias("dist")).limit(k)
@@ -665,39 +650,37 @@ class Int8Index:
     @classmethod
     def build(cls, embeddings: DataFrame, id_col: str = "vec_id",
               vec_col: str = "embedding") -> "Int8Index":
-        from nornicdb_spark.operators.quantize import quantize_int8
+        from nornicdb_spark.operators.quantize import code_norm_sql, quantize_int8
 
         q = quantize_int8(embeddings, id_col=id_col, vec_col=vec_col)
-        codes = q.select(
-            "vec_id",
-            "codes",
-            F.sqrt(
-                F.aggregate(
-                    F.col("codes"),
-                    F.lit(0.0),
-                    lambda acc, c: acc + c.cast("double") * c.cast("double"),
-                )
-            ).alias("code_norm"),
-        )
+        codes = q.selectExpr("vec_id", "codes", f"{code_norm_sql('codes')} AS code_norm")
         return cls(codes, embeddings, id_col, vec_col)
 
-    def _approx_score(self, query_vec) -> F.Column:
+    @staticmethod
+    def _approx_sql(query_vec) -> str:
+        """The int8 cosine of the query against a (codes, code_norm) row."""
         qn = float(sum(float(x) * float(x) for x in query_vec)) ** 0.5
         code_dot = dot_sql("codes", sql_literal([float(x) for x in query_vec]))
-        return F.expr(f"{code_dot} / (code_norm * {sql_literal(qn)})")
+        return f"{code_dot} / (code_norm * {sql_literal(qn)})"
+
+    def _approx_score(self, query_vec) -> F.Column:
+        return F.expr(self._approx_sql(query_vec))
+
+    @staticmethod
+    def approx_topk(codes: DataFrame, query_vec, n: int) -> DataFrame:
+        """(vec_id, score): the top ``n`` (vec_id, codes, code_norm) rows
+        of ``codes`` by int8 cosine to the query."""
+        scored = codes.selectExpr(
+            "vec_id", f"{Int8Index._approx_sql(query_vec)} AS score"
+        )
+        return top_k(scored, n, "score", "vec_id")
 
     def search(self, query_vec, k: int = 10, refine: int = 4) -> DataFrame:
         """Approximate cosine top-(k·refine) on the codes, then exact
         cosine re-rank of those candidates on the full vectors.
         ``refine=1`` returns the pure quantized ranking.
         Returns (vec_id, score) descending, ties by id."""
-        approx = (
-            self.codes.select(
-                "vec_id", self._approx_score(query_vec).alias("score")
-            )
-            .orderBy(F.desc(F.round(F.col("score"), 9)), F.asc("vec_id"))
-            .limit(k * max(1, refine))
-        )
+        approx = self.approx_topk(self.codes, query_vec, k * max(1, refine))
         if refine <= 1:
             return approx.limit(k)
         cand_ids = approx.select(F.col("vec_id").alias("_i8_cand"))
@@ -744,13 +727,12 @@ def rp_refine_topk(
     emb = embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
     )
-    cand = (
-        random_projection(emb, in_dim, out_dim)
-        .select("vec_id", cosine_sim(F.col("rp"), lit_expr(qrp)).alias("cs"))
-        .orderBy(F.desc(F.round(F.col("cs"), 9)), F.asc("vec_id"))
-        .limit(int(coarse))
-        .select("vec_id")
-    )
+    cand = top_k(
+        random_projection(emb, in_dim, out_dim).select(
+            "vec_id", cosine_sim(F.col("rp"), lit_expr(qrp)).alias("cs")
+        ),
+        int(coarse), "cs", "vec_id",
+    ).select("vec_id")
     return cosine_topk(emb.join(cand, "vec_id", "left_semi"), query_vec, k)
 
 
@@ -777,8 +759,6 @@ def rp_refine_topk_many(
     same left-to-right order, so scores are bit-identical and the
     rounded-score/vec_id tie-break selects identical sets (equality-
     gated, not recall-gated). Returns (query_id, vec_id, score)."""
-    from pyspark.sql import Window as W
-
     from nornicdb_spark.operators.quantize import (
         random_projection,
         rp_project_array,
@@ -816,10 +796,7 @@ def rp_refine_topk_many(
         vec_col="rp",
         qvec_col="_qrp",
     ).select("query_id", "vec_id")
-    fine_w = W.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("score"), 9)), F.asc("vec_id")
-    )
-    return (
+    fine = (
         cand.join(emb, "vec_id")
         .join(F.broadcast(q.select("query_id", "_qv")), "query_id")
         .select(
@@ -829,7 +806,7 @@ def rp_refine_topk_many(
                 F.col("embedding").cast("array<double>"), F.col("_qv")
             ).alias("score"),
         )
-        .withColumn("_rn", F.row_number().over(fine_w))
-        .filter(F.col("_rn") <= int(k))
-        .select("query_id", "vec_id", "score")
+    )
+    return top_k(fine, k, "score", "vec_id", by=("query_id",)).select(
+        "query_id", "vec_id", "score"
     )

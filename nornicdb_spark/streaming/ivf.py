@@ -35,10 +35,25 @@ shared maintained-table protocol, described once on
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from nornicdb_spark.operators.localframe import literal_df, sql_literal
-from nornicdb_spark.search.vector import cosine_sql, cosine_topk, dot_sql, sql_col
+from nornicdb_spark.operators.quantize import (
+    code_norm_sql,
+    int8_codes_sql,
+    int8_scale_sql,
+)
+from nornicdb_spark.search.hybrid import top_k
+from nornicdb_spark.search.vector import (
+    Int8Index,
+    cosine_sql,
+    cosine_topk,
+    cosine_topk_many,
+    dot_sql,
+    sql_col,
+)
 from nornicdb_spark.sources.layout import BatchTable, MaintainedIndex
 
 __all__ = ["MaintainedIVFIndex"]
@@ -116,22 +131,17 @@ class MaintainedIVFIndex(MaintainedIndex):
             )
             .selectExpr(
                 "vec_id", "_v",
-                f"array_max(transform(_v, x -> abs(x))) / {sql_literal(127.0)}"
-                " AS _scale",
+                f"{int8_scale_sql('_v')} AS _scale",
                 f"array({dists}) AS _s",
             )
             .selectExpr(
                 "vec_id",
-                "CASE WHEN _scale > 0"
-                " THEN transform(_v, x -> CAST(round(x / _scale) AS INT))"
-                " ELSE transform(_v, x -> 0) END AS codes",
+                f"{int8_codes_sql('_v', '_scale')} AS codes",
                 "CAST(array_position(_s, array_min(_s)) - 1 AS INT) AS list_id",
             )
             .selectExpr(
                 "vec_id", "codes",
-                f"sqrt(aggregate(codes, {sql_literal(0.0)},"
-                " (acc, c) -> acc + CAST(c AS DOUBLE) * CAST(c AS DOUBLE)))"
-                " AS code_norm",
+                f"{code_norm_sql('codes')} AS code_norm",
                 f"CAST({int(batch_id)} AS BIGINT) AS src_batch",
                 "list_id",
             )
@@ -141,7 +151,10 @@ class MaintainedIVFIndex(MaintainedIndex):
     # -- bootstrap ----------------------------------------------------------
     def bootstrap(self, vectors: DataFrame, n_lists: int = 16, seed: int = 42) -> None:
         """Train centroids on the seed corpus (distributed KMeans), then
-        index it as batch −1."""
+        index it as batch −1 of a new era: the codes table is rewritten
+        whole and the old tombstones are dropped, as the near-dup and
+        graph indexes' bootstraps do, so nothing indexed under the old
+        centroids' lists survives."""
         from pyspark.ml.clustering import KMeans
         from pyspark.ml.functions import array_to_vector
 
@@ -154,8 +167,9 @@ class MaintainedIVFIndex(MaintainedIndex):
             "list_id int, center array<double>",
         ).coalesce(1).write.mode("overwrite").parquet(self.centroids_path)
         self._centers = None  # reload from the persisted truth
+        self.codes.write(self._rows(vectors, -1), "overwrite")
+        shutil.rmtree(self.tombstones_path, ignore_errors=True)
         self.codes.restart_era()
-        self.process_batch(vectors, batch_id=-1)
 
     # -- ingest ---------------------------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -309,33 +323,27 @@ class MaintainedIVFIndex(MaintainedIndex):
                 f"{dot_sql('codes', 'qv')} / (code_norm * qn) AS score",
             )
         )
-        rank = (
-            "row_number() OVER (PARTITION BY query_id"
-            " ORDER BY round(score, 9) DESC, vec_id) AS _rn"
-        )
         # the candidates, with their query vectors, broadcast into ONE
         # keyed pass over the fp32 corpus: only their ≤ |batch|·k·refine
         # rows come out. A second consumer of ``cand`` (an id list for a
         # semi-join fetch) is planned as a second scan-and-window
         # pipeline whenever its columns differ.
-        cand = (
-            approx.selectExpr("query_id", "vec_id", "qv", rank)
-            .filter(f"_rn <= {int(k) * int(refine)}")
-            .selectExpr("query_id", "vec_id AS _cand_id", "qv")
-        )
+        cand = top_k(
+            approx, int(k) * int(refine), "score", "vec_id", by=("query_id",)
+        ).selectExpr("query_id", "vec_id AS _cand_id", "qv")
         ref = refine_src.selectExpr(
             f"{sql_col(self.id_col)} AS _ref_id",
             f"CAST({sql_col(self.vec_col)} AS ARRAY<DOUBLE>) AS _emb",
         )
-        return (
+        fine = (
             F.broadcast(cand)
             .join(ref, F.expr("_ref_id = _cand_id"))
             .selectExpr(
                 "query_id", "_cand_id AS vec_id", f"{cosine_sql('_emb', 'qv')} AS score"
             )
-            .selectExpr("query_id", "vec_id", "score", rank)
-            .filter(f"_rn <= {int(k)}")
-            .selectExpr("query_id", "vec_id", "score")
+        )
+        return top_k(fine, k, "score", "vec_id", by=("query_id",)).selectExpr(
+            "query_id", "vec_id", "score"
         )
 
     # -- monitoring -----------------------------------------------------------
@@ -356,9 +364,11 @@ class MaintainedIVFIndex(MaintainedIndex):
         this catches). Monitoring only: the operator alerts when the
         value drops below the deployment's gate bar and re-trains via
         an offline re-:meth:`bootstrap` (a new index era). Run it per N
-        batches or per compaction — cost is n_queries bounded searches,
-        each pruned to n_probe lists. Raises on a never-ingested index
-        (a sentinel that reports healthy on nothing would hide a dead
+        batches or per compaction — cost is one batched exact scan
+        (:func:`~nornicdb_spark.search.vector.cosine_topk_many`) and one
+        :meth:`search_many` over the sampled vectors, joined and counted
+        per query in one collect. Raises on a never-ingested index (a
+        sentinel that reports healthy on nothing would hide a dead
         ingest path)."""
         id_type = self.codes.id_type(id_type)
         codes = self.codes.read(id_type)
@@ -376,26 +386,25 @@ class MaintainedIVFIndex(MaintainedIndex):
             .limit(int(n_queries))
             .collect()
         ]
-        queries = refine_src.filter(
+        rows = refine_src.filter(
             F.col(self.id_col).isin(sample_ids)
-        ).select(self.id_col, self.vec_col).collect()
-        recalls = []
-        for row in queries:
-            qv = [float(x) for x in row[self.vec_col]]
-            exact = {
-                r[0]
-                for r in cosine_topk(
-                    refine_src, qv, k, self.id_col, self.vec_col
-                ).collect()
-            }
-            got = {
-                r[0]
-                for r in self.search(
-                    qv, refine_src, k, n_probe, refine, id_type
-                ).collect()
-            }
-            recalls.append(len(exact & got) / float(k))
-        return sum(recalls) / len(recalls) if recalls else 0.0
+        ).select(self.vec_col).collect()
+        if not rows:
+            return 0.0
+        queries = literal_df(
+            self.spark,
+            [(i, [float(x) for x in r[0]]) for i, r in enumerate(rows)],
+            "query_id bigint, qvec array<double>",
+        )
+        exact = cosine_topk_many(refine_src, queries, k, self.id_col, self.vec_col)
+        got = self.search_many(
+            queries, refine_src, k, n_probe, refine, id_type=id_type
+        )
+        hits = dict(
+            exact.join(got, ["query_id", "vec_id"]).groupBy("query_id").count().collect()
+        )
+        recalls = [hits.get(i, 0) / float(k) for i in range(len(rows))]
+        return sum(recalls) / len(recalls)
 
     # -- search ---------------------------------------------------------------
     def _codes_pruned(self, list_ids: list[int], id_type: str) -> DataFrame:
@@ -441,14 +450,8 @@ class MaintainedIVFIndex(MaintainedIndex):
             return d / n if n else -1.0
 
         probe = sorted(range(len(centers)), key=lambda i: -cos(centers[i]))[:n_probe]
-        code_dot = dot_sql("codes", sql_literal([float(x) for x in query_vec]))
-        approx = (
-            self._codes_pruned(probe, id_type)
-            .selectExpr(
-                "vec_id", f"{code_dot} / (code_norm * {sql_literal(qn)}) AS score"
-            )
-            .orderBy(F.desc(F.expr("round(score, 9)")), F.asc("vec_id"))
-            .limit(k * refine)
+        approx = Int8Index.approx_topk(
+            self._codes_pruned(probe, id_type), query_vec, k * refine
         )
         cand_ids = approx.selectExpr("vec_id AS _cand_id")
         cand = refine_src.join(

@@ -65,7 +65,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from nornicdb_spark.operators.localframe import literal_df
+from nornicdb_spark.operators.localframe import literal_df, sql_col
+from nornicdb_spark.operators.quantize import (
+    code_norm_sql,
+    int8_codes_sql,
+    int8_scale_sql,
+)
+from nornicdb_spark.search.vector import dot_sql
 
 from nornicdb_spark.operators import scope
 from nornicdb_spark.sources.layout import (
@@ -563,32 +569,18 @@ class MaintainedVecIndex(_MaintainedIndexBase):
         """(doc, codes, code_norm, band, band_key, pk) per vector —
         the quantization and the sign-bit banding are both per-row
         narrow expressions (micro-batch-safe)."""
-        v = F.col(self.vec_col).cast("array<double>")
-        scale = F.array_max(F.transform(v, lambda x: F.abs(x))) / F.lit(127.0)
-        codes = F.when(
-            F.col("_scale") > 0,
-            F.transform(v, lambda x: F.round(x / F.col("_scale")).cast("int")),
-        ).otherwise(F.transform(v, lambda x: F.lit(0)))
+        v = f"CAST({sql_col(self.vec_col)} AS ARRAY<DOUBLE>)"
         base = (
-            docs.withColumn("_scale", scale)
+            docs.withColumn("_scale", F.expr(int8_scale_sql(v)))
             .select(
                 F.col(self.id_col).alias("doc"),
-                codes.alias("codes"),
+                F.expr(int8_codes_sql(v, "_scale")).alias("codes"),
                 self.lsh.signature_col().alias("_sig"),
             )
-            .withColumn(
-                "code_norm",
-                F.sqrt(
-                    F.aggregate(
-                        F.col("codes"),
-                        F.lit(0.0),
-                        lambda a, c: a + c.cast("double") * c.cast("double"),
-                    )
-                ),
-            )
-            # a zero vector has no direction — it can neither match nor
-            # be matched, so it never enters the index
-            .filter(F.col("code_norm") > 0)
+            .withColumn("code_norm", F.expr(code_norm_sql("codes")))
+            # a zero vector can neither match nor be matched, so it
+            # never enters the index
+            .filter("code_norm > 0")
         )
         return base.select(
             "doc",
@@ -604,16 +596,8 @@ class MaintainedVecIndex(_MaintainedIndexBase):
         ).withColumn("pk", self._pk_col())
 
     def _pair_score(self) -> F.Column:
-        dot = F.aggregate(
-            F.zip_with(
-                F.col("s_codes"),
-                F.col("c_codes"),
-                lambda a, b: a.cast("double") * b.cast("double"),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return dot / (F.col("s_code_norm") * F.col("c_code_norm"))
+        dot = dot_sql("s_codes", "c_codes", widen=True)
+        return F.expr(f"{dot} / (s_code_norm * c_code_norm)")
 
 
 class MaintainedHashIndex(MaintainedIndex):

@@ -247,3 +247,63 @@ def test_identical_schedules_leave_identical_files(spark, emb, tmp_path):
     codes = {d: n for d, n in layouts[0].items() if d.startswith("codes")}
     assert codes and all(d.startswith("codes/src_batch=-2/") for d in codes), codes
     assert set(codes.values()) == {1}, codes
+
+
+def test_rebootstrap_replaces_the_old_era(spark, emb, tmp_path):
+    """Re-bootstrapping a used path (appends, a compaction, a pending
+    removal) leaves the files and search rows of a fresh index on a fresh
+    path, and a removed id may be ingested again: no code written under
+    the old centroids' lists and no old tombstone survives."""
+    seed = emb.filter(F.col("vec_id") % 3 == 0)
+    used = MaintainedIVFIndex(spark, str(tmp_path / "used"))
+    used.bootstrap(emb.filter(F.col("vec_id") % 3 == 1), n_lists=N_LISTS, seed=3)
+    used.process_batch(emb.filter(F.col("vec_id") % 3 == 2), 0)
+    used.compact()
+    used.process_batch(seed.filter(F.col("vec_id") % 2 == 0), 1)
+    gone = int(emb.filter(F.col("vec_id") % 3 == 1).orderBy("vec_id").first().vec_id)
+    used.remove_batch(literal_df(spark, [(gone,)], "vec_id long"), 2)
+    used.bootstrap(seed, n_lists=N_LISTS, seed=7)
+    fresh = MaintainedIVFIndex(spark, str(tmp_path / "fresh"))
+    fresh.bootstrap(seed, n_lists=N_LISTS, seed=7)
+
+    assert _data_files(used.path) == _data_files(fresh.path)
+    qv = [float(x) for x in emb.orderBy("vec_id").first().embedding]
+    got = _rows(used.search(qv, refine_src=emb, k=K, n_probe=N_LISTS))
+    assert len(got) == K
+    assert got == _rows(fresh.search(qv, refine_src=emb, k=K, n_probe=N_LISTS))
+    again = emb.filter(F.col("vec_id") == gone)
+    used.process_batch(again, 0)
+    fresh.process_batch(again, 0)
+    assert _data_files(used.path) == _data_files(fresh.path)
+
+
+def test_recall_sentinel_is_the_per_query_loop_in_fewer_jobs(spark, emb, ivf):
+    """``recall_sentinel`` scores its sample with one batched exact scan
+    and one ``search_many``: the value equals the mean recall of the
+    per-query ``cosine_topk`` and ``search`` pairs, and the call starts
+    fewer jobs than that loop."""
+    from nornicdb_spark.search.vector import cosine_topk
+
+    idx, _live = ivf
+    n, k, n_probe = 4, 5, 2
+    codes = idx.codes.read("bigint")
+    latest = codes.agg(F.max("src_batch")).collect()[0][0]
+
+    def loop():
+        ids = [r.vec_id for r in codes.filter(F.col("src_batch") == latest)
+               .select("vec_id").orderBy("vec_id").limit(n).collect()]
+        recalls = []
+        for r in emb.filter(F.col("vec_id").isin(ids)).collect():
+            qv = [float(x) for x in r.embedding]
+            exact = {x[0] for x in cosine_topk(emb, qv, k).collect()}
+            got = {x[0] for x in idx.search(qv, emb, k, n_probe).collect()}
+            recalls.append(len(exact & got) / float(k))
+        return sum(recalls) / len(recalls)
+
+    want = loop()
+    got = idx.recall_sentinel(emb, n_queries=n, k=k, n_probe=n_probe)
+    assert got == want and 0.0 < got <= 1.0
+    loop_jobs = _jobs(spark, "sentinel-loop", loop)
+    jobs = _jobs(spark, "sentinel", lambda: idx.recall_sentinel(
+        emb, n_queries=n, k=k, n_probe=n_probe))
+    assert jobs < loop_jobs, (jobs, loop_jobs)
