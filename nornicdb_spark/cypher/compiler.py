@@ -29,9 +29,11 @@ from pyspark.sql import functions as F
 from nornicdb_spark.catalog import Catalog, node_id
 from nornicdb_spark.cypher import ast as A
 from nornicdb_spark.cypher.parser import parse
-from nornicdb_spark.cypher.store import LABEL_TABLES, GraphStore, WriteStats, lit1_df
+from nornicdb_spark import procedures
+from nornicdb_spark.cypher.store import LABEL_TABLES, GraphStore
 from nornicdb_spark.operators.expand import cartesian
-from nornicdb_spark.operators.localframe import lit_expr
+from nornicdb_spark.operators.localframe import lit_expr, literal_df
+from nornicdb_spark.operators.mutations import MutationStats
 
 # entries an Engine's pattern memo keeps (see Compiler._memo_match)
 PATTERN_MEMO_CAP = 128
@@ -175,7 +177,7 @@ class Binding:
     """What a pattern variable means in the current frame."""
 
     def __init__(self, kind: str, label: str | None = None, column: str | None = None):
-        self.kind = kind  # node | rel | value
+        self.kind = kind  # node | rel | value | own (the frame is its table)
         self.label = label
         self.column = column  # for value bindings
 
@@ -197,7 +199,7 @@ class Compiler:
         self.ckpts: list = ckpt_sink if ckpt_sink is not None else []
         self.params = params or {}
         self.store = store
-        self.stats = WriteStats()
+        self.stats = MutationStats()
         self._wrote = False
         self._created: dict[str, str] = {}  # CREATE-bound var -> node id
         self.frame: DataFrame | None = None
@@ -420,7 +422,8 @@ class Compiler:
 
     def _stats_frame(self) -> DataFrame:
         s = self.stats
-        return lit1_df(self.cat.spark, 
+        return literal_df(
+            self.cat.spark,
             [(s.nodes_created, s.relationships_created, s.properties_set,
               s.nodes_deleted, s.relationships_deleted)],
             "nodes_created long, relationships_created long, properties_set long, "
@@ -438,7 +441,7 @@ class Compiler:
         if label not in LABEL_TABLES and not self.store.has_dynamic(label):
             # unknown label → empty scan; the reference is schema-free,
             # so it is not an error
-            return lit1_df(self.cat.spark, [], f"{var}_id string")
+            return literal_df(self.cat.spark, [], f"{var}_id string")
         _table, key, df = self.store.table_for(label)
         return df.select(
             node_id(label, key).alias(f"{var}_id"),
@@ -971,9 +974,7 @@ class Compiler:
         sources = config.get("sourceNodes")
         g = self.store.graph
         if sources:
-            src = lit1_df(self.cat.spark, 
-                [(str(s),) for s in sources], "id string"
-            )
+            src = literal_df(self.cat.spark, [(str(s),) for s in sources], "id string")
             pr = algorithms.personalized_pagerank(
                 g, src, iterations=iterations, damping=damping,
                 rel_types=rel_types,
@@ -1013,7 +1014,7 @@ class Compiler:
         vals = [self._py_value(a) for a in args]
         start_id, end_id = vals[0], vals[1]
         weight = vals[2] if len(vals) > 2 else None
-        starts = lit1_df(self.cat.spark, [(start_id,)], "id string")
+        starts = literal_df(self.cat.spark, [(start_id,)], "id string")
         res = weighted_shortest_paths(self.store.graph, starts, weight_col=weight)
         return res.filter(F.col("end_id") == F.lit(end_id)).select(
             F.col("start_id").alias("start"),
@@ -1028,7 +1029,7 @@ class Compiler:
 
         vals = [self._py_value(a) for a in args]
         start_id, hops = vals[0], int(vals[1])
-        starts = lit1_df(self.cat.spark, [(start_id,)], "id string")
+        starts = literal_df(self.cat.spark, [(start_id,)], "id string")
         return k_hop_neighborhood(self.store.graph, starts, hops).select(
             F.col("end_id").alias("node"), F.col("first_depth").alias("depth")
         )
@@ -1041,7 +1042,7 @@ class Compiler:
 
         vals = [self._py_value(a) for a in args]
         start_id, hops = vals[0], int(vals[1])
-        starts = lit1_df(self.cat.spark, [(start_id,)], "id string")
+        starts = literal_df(self.cat.spark, [(start_id,)], "id string")
         reach = k_hop_neighborhood(self.store.graph, starts, hops)
         return (
             reach.groupBy(F.col("first_depth").alias("depth"))
@@ -1063,8 +1064,8 @@ class Compiler:
         rel_type = vals[2] if len(vals) > 2 and vals[2] else None
         weight = vals[3] if len(vals) > 3 and vals[3] else None
         g = self.store.graph
-        starts = lit1_df(self.cat.spark, [(start_id,)], "id string")
-        targets = lit1_df(self.cat.spark, [(end_id,)], "id string")
+        starts = literal_df(self.cat.spark, [(start_id,)], "id string")
+        targets = literal_df(self.cat.spark, [(end_id,)], "id string")
         h = g.nodes.select("id", F.lit(0.0).alias("h"))
         res = astar_shortest_path(
             g, starts, targets, h, weight_col=weight,
@@ -1088,8 +1089,8 @@ class Compiler:
         max_depth = (
             int(vals[3]) if len(vals) > 3 and vals[3] is not None else 10
         )
-        starts = lit1_df(self.cat.spark, [(start_id,)], "id string")
-        targets = lit1_df(self.cat.spark, [(end_id,)], "id string")
+        starts = literal_df(self.cat.spark, [(start_id,)], "id string")
+        targets = literal_df(self.cat.spark, [(end_id,)], "id string")
         paths = all_simple_paths(
             self.store.graph, starts, targets, max_hops=max_depth,
             rel_types=(rel_type,) if rel_type else (),
@@ -1177,7 +1178,7 @@ class Compiler:
         from nornicdb_spark.operators.paths import subgraph_nodes
 
         start_id, max_level, rel_types = self._path_config(args)
-        starts = lit1_df(self.cat.spark, [(start_id,)], "id string")
+        starts = literal_df(self.cat.spark, [(start_id,)], "id string")
         res = subgraph_nodes(
             self.store.graph, starts, max_level=max_level, rel_types=rel_types
         )
@@ -1190,7 +1191,7 @@ class Compiler:
         from nornicdb_spark.operators.paths import spanning_tree
 
         start_id, max_level, rel_types = self._path_config(args)
-        starts = lit1_df(self.cat.spark, [(start_id,)], "id string")
+        starts = literal_df(self.cat.spark, [(start_id,)], "id string")
         res = spanning_tree(
             self.store.graph, starts, max_level=max_level, rel_types=rel_types
         )
@@ -1218,7 +1219,7 @@ class Compiler:
             t.strip().lstrip("<>").rstrip("<>")
             for t in rel_filter.split("|")
         ) if rel_filter else ()
-        starts = lit1_df(self.cat.spark, [(start_id,)], "id string")
+        starts = literal_df(self.cat.spark, [(start_id,)], "id string")
         paths = var_length_paths(
             self.store.graph, starts, min_hops=max(min_level, 1),
             max_hops=max_level, rel_types=rel_types, with_node_path=True,
@@ -1437,15 +1438,11 @@ class Compiler:
         if proj is None:
             raise ValueError(f"cypher: graph {name!r} does not exist")
         n = proj.nodes.count()
-        return lit1_df(self.cat.spark, 
-            [(n, dim)], "nodeCount long, embeddingDimension long"
-        )
+        return literal_df(self.cat.spark, [(n, dim)], "nodeCount long, embeddingDimension long")
 
     def _proc_gds_version(self) -> DataFrame:
         """CALL gds.version() (reference fastrp.go:83-90)."""
-        return lit1_df(self.cat.spark, 
-            [("2.6.0-nornicdb",)], "version string"
-        )
+        return literal_df(self.cat.spark, [("2.6.0-nornicdb",)], "version string")
 
     def _proc_graph_project(self, args) -> DataFrame:
         """CALL gds.graph.project(name, nodeLabel|[labels], relType|
@@ -1471,8 +1468,8 @@ class Compiler:
             else g.edges
         )
         info = DEFAULT_CATALOG.project(name, nodes, edges)
-        return lit1_df(self.cat.spark, 
-            [(info.name, info.node_count, info.relationship_count)],
+        return literal_df(
+            self.cat.spark, [(info.name, info.node_count, info.relationship_count)],
             "graphName string, nodeCount long, relationshipCount long",
         )
 
@@ -1483,8 +1480,8 @@ class Compiler:
             (i.name, i.node_count, i.relationship_count)
             for i in DEFAULT_CATALOG.list()
         ]
-        return lit1_df(self.cat.spark, 
-            rows, "graphName string, nodeCount long, relationshipCount long"
+        return literal_df(
+            self.cat.spark, rows, "graphName string, nodeCount long, relationshipCount long"
         )
 
     def _proc_graph_drop(self, args) -> DataFrame:
@@ -1492,9 +1489,7 @@ class Compiler:
 
         name = self._py_value(args[0])
         DEFAULT_CATALOG.drop(name)
-        return lit1_df(self.cat.spark, 
-            [(name,)], "graphName string"
-        )
+        return literal_df(self.cat.spark, [(name,)], "graphName string")
 
     # label → (table, id column) for index sources beyond the graph specs
     INDEX_SOURCES = {
@@ -1518,7 +1513,6 @@ class Compiler:
         a (table, id, property) source; exact cosine top-k is the oracle
         path; HNSW/k-means pruned variants live in nornicdb_spark.search
         for scale."""
-        from nornicdb_spark.procedures import index_catalog
         from nornicdb_spark.search.vector import cosine_topk
 
         vals = [self._py_value(a) for a in args]
@@ -1535,7 +1529,7 @@ class Compiler:
                     "install one with search.embedder.set_query_embedder"
                 )
             vec = emb(vec)
-        ic = index_catalog(self.cat)
+        ic = procedures.index_catalog(self.cat)
         if index in ic._defs and ic._defs[index]["kind"] == "VECTOR":
             d = ic._defs[index]
             src, id_col = self._index_source(d["label"])
@@ -1557,22 +1551,19 @@ class Compiler:
         memoized per index name. The relationship variant indexes the
         named string property of the current edge table (edge_id as the
         document key)."""
-        from nornicdb_spark.procedures import index_catalog
         from nornicdb_spark.search.bm25 import BM25Index
 
         vals = [self._py_value(a) for a in args]
         index, qtext = vals[0], vals[1]
         k = int(vals[2]) if len(vals) > 2 else 10
-        ic = index_catalog(self.cat)
+        ic = procedures.index_catalog(self.cat)
         out_col = "relationship" if rels else "node"
         if index in ic._defs and ic._defs[index]["kind"] == "FULLTEXT":
             d = ic._defs[index]
         elif rels:
             # no registered rel index and no default — empty result, same
             # shape (reference returns no rows for an unknown rel index)
-            return lit1_df(self.cat.spark, 
-                [], f"{out_col} string, score double"
-            )
+            return literal_df(self.cat.spark, [], f"{out_col} string, score double")
         else:
             # unknown name → the default documents index (reference
             # leniency, call_fulltext.go)
@@ -1603,9 +1594,7 @@ class Compiler:
                 e = self.store.graph.edges
                 avail = [p for p in props if p in e.columns]
                 if not avail:
-                    return lit1_df(self.cat.spark, 
-                        [], f"{out_col} string, score double"
-                    )
+                    return literal_df(self.cat.spark, [], f"{out_col} string, score double")
                 props = avail
                 src = e.filter(F.col("type") == d["label"]) if d.get(
                     "label"
@@ -1623,8 +1612,6 @@ class Compiler:
         """db.index.vector.createNodeIndex(name, label, prop, dim[, sim]) /
         db.index.fulltext.createNodeIndex(name, [labels], [props])
         (reference call.go:728-748, call_index_mgmt.go)."""
-        from nornicdb_spark.procedures import index_catalog
-
         vals = [self._py_value(a) for a in args]
         name = vals[0]
         if kind == "VECTOR":
@@ -1634,7 +1621,7 @@ class Compiler:
                 opts["dimensions"] = int(vals[3])
             if len(vals) > 4:
                 opts["similarity"] = vals[4]
-            index_catalog(self.cat).create(name, kind, label, [prop], **opts)
+            procedures.index_catalog(self.cat).create(name, kind, label, [prop], **opts)
         else:
             labels = vals[1] if isinstance(vals[1], list) else [vals[1]]
             props = vals[2] if isinstance(vals[2], list) else [vals[2]]
@@ -1645,21 +1632,17 @@ class Compiler:
                 w = vals[3].get("weights")
                 if w:
                     opts["weights"] = dict(w)
-            index_catalog(self.cat).create(
+            procedures.index_catalog(self.cat).create(
                 name, kind, labels[0], props, **opts
             )
-        return lit1_df(self.cat.spark, 
-            [(name, kind, "ONLINE")], "name string, type string, state string"
+        return literal_df(
+            self.cat.spark, [(name, kind, "ONLINE")], "name string, type string, state string"
         )
 
     def _proc_index_drop(self, args) -> DataFrame:
-        from nornicdb_spark.procedures import index_catalog
-
         name = self._py_value(args[0])
-        index_catalog(self.cat).drop(name)
-        return lit1_df(self.cat.spark, 
-            [(name, "DROPPED")], "name string, state string"
-        )
+        procedures.index_catalog(self.cat).drop(name)
+        return literal_df(self.cat.spark, [(name, "DROPPED")], "name string, state string")
 
     def _proc_set_node_vector(self, args) -> None:
         """db.create.setNodeVectorProperty(n, key, vector) (reference
@@ -1683,33 +1666,19 @@ class Compiler:
         return None
 
     PROCEDURES = {
-        "db.labels": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_labels(self.store.graph),
-        "db.relationshiptypes": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_relationship_types(self.store.graph),
-        "db.propertykeys": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_property_keys(self.cat),
-        "db.schema.visualization": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_schema_visualization(self.store.graph),
-        "db.info": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_info(self.cat),
-        "db.ping": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_ping(self.cat),
-        "db.indexes": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_indexes(self.cat),
-        "db.constraints": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_constraints(self.cat),
-        "dbms.components": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).dbms_components(self.cat),
+        "db.labels": lambda self, args: procedures.db_labels(self.store.graph),
+        "db.relationshiptypes": lambda self, args: (
+            procedures.db_relationship_types(self.store.graph)
+        ),
+        "db.propertykeys": lambda self, args: procedures.db_property_keys(self.cat),
+        "db.schema.visualization": lambda self, args: (
+            procedures.db_schema_visualization(self.store.graph)
+        ),
+        "db.info": lambda self, args: procedures.db_info(self.cat),
+        "db.ping": lambda self, args: procedures.db_ping(self.cat),
+        "db.indexes": lambda self, args: procedures.db_indexes(self.cat),
+        "db.constraints": lambda self, args: procedures.db_constraints(self.cat),
+        "dbms.components": lambda self, args: procedures.dbms_components(self.cat),
         "db.index.vector.querynodes": lambda self, args: self._proc_vector_query(
             args
         ),
@@ -1736,88 +1705,62 @@ class Compiler:
             self._proc_index_create(args, "FULLTEXT")
         ),
         "db.index.fulltext.drop": lambda self, args: self._proc_index_drop(args),
-        "db.index.fulltext.listavailableanalyzers": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).fulltext_analyzers(self.cat),
+        "db.index.fulltext.listavailableanalyzers": lambda self, args: (
+            procedures.fulltext_analyzers(self.cat)
+        ),
         "db.create.setnodevectorproperty": lambda self, args: (
             self._proc_set_node_vector(args)
         ),
-        "db.schema.nodetypeproperties": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_schema_node_type_properties(self.cat),
-        "db.schema.reltypeproperties": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_schema_rel_type_properties(self.cat),
+        "db.schema.nodetypeproperties": lambda self, args: (
+            procedures.db_schema_node_type_properties(self.cat)
+        ),
+        "db.schema.reltypeproperties": lambda self, args: (
+            procedures.db_schema_rel_type_properties(self.cat)
+        ),
         # short aliases listed by the reference's dbms.procedures
         # (call.go:1167-1168)
-        "db.schema.nodeproperties": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_schema_node_type_properties(self.cat),
-        "db.schema.relproperties": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_schema_rel_type_properties(self.cat),
-        "dbms.info": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).dbms_info(self.cat),
-        "dbms.listconfig": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).dbms_list_config(self.cat),
-        "dbms.procedures": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).dbms_procedures(self.cat, list(self.PROCEDURES)),
-        "db.awaitindex": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_await_index(self.cat, self._py_value(args[0]) if args else None),
-        "db.awaitindexes": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_await_index(self.cat),
-        "db.resampleindex": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_await_index(self.cat, self._py_value(args[0]) if args else None),
-        "db.clearquerycaches": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_await_index(self.cat),
-        "db.index.stats": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_index_stats(self.cat),
-        "db.stats.retrieve": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_stats_retrieve(
-            self.cat, *( [self._py_value(args[0])] if args else [] )
+        "db.schema.nodeproperties": lambda self, args: (
+            procedures.db_schema_node_type_properties(self.cat)
         ),
-        "db.stats.collect": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_stats_collect(self.cat, *([self._py_value(args[0])] if args else [])),
-        "db.stats.stop": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_stats_collect(self.cat, *([self._py_value(args[0])] if args else [])),
-        "db.stats.clear": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).db_stats_collect(self.cat, *([self._py_value(args[0])] if args else [])),
-        "dbms.functions": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).dbms_functions(self.cat),
-        "dbms.clientconfig": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).dbms_client_config(self.cat),
-        "dbms.listconnections": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).dbms_list_connections(self.cat),
-        "tx.setmetadata": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).tx_set_meta_data(self.cat),
-        "show.functions": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).show_functions(self.cat),
-        "show.databases": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).show_databases(self.cat),
-        "show.aliases": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).show_aliases(self.cat),
-        "show.limits": lambda self, args: __import__(
-            "nornicdb_spark.procedures", fromlist=["x"]
-        ).show_limits(self.cat),
+        "db.schema.relproperties": lambda self, args: (
+            procedures.db_schema_rel_type_properties(self.cat)
+        ),
+        "dbms.info": lambda self, args: procedures.dbms_info(self.cat),
+        "dbms.listconfig": lambda self, args: procedures.dbms_list_config(self.cat),
+        "dbms.procedures": lambda self, args: (
+            procedures.dbms_procedures(self.cat, list(self.PROCEDURES))
+        ),
+        "db.awaitindex": lambda self, args: (
+            procedures.db_await_index(self.cat, *self._py_values(args[:1]))
+        ),
+        "db.awaitindexes": lambda self, args: procedures.db_await_index(self.cat),
+        "db.resampleindex": lambda self, args: (
+            procedures.db_await_index(self.cat, *self._py_values(args[:1]))
+        ),
+        "db.clearquerycaches": lambda self, args: procedures.db_await_index(self.cat),
+        "db.index.stats": lambda self, args: procedures.db_index_stats(self.cat),
+        "db.stats.retrieve": lambda self, args: (
+            procedures.db_stats_retrieve(self.cat, *self._py_values(args[:1]))
+        ),
+        "db.stats.collect": lambda self, args: (
+            procedures.db_stats_collect(self.cat, *self._py_values(args[:1]))
+        ),
+        "db.stats.stop": lambda self, args: (
+            procedures.db_stats_collect(self.cat, *self._py_values(args[:1]))
+        ),
+        "db.stats.clear": lambda self, args: (
+            procedures.db_stats_collect(self.cat, *self._py_values(args[:1]))
+        ),
+        "dbms.functions": lambda self, args: procedures.dbms_functions(self.cat),
+        "dbms.clientconfig": lambda self, args: procedures.dbms_client_config(self.cat),
+        "dbms.listconnections": lambda self, args: (
+            procedures.dbms_list_connections(self.cat)
+        ),
+        "tx.setmetadata": lambda self, args: procedures.tx_set_meta_data(self.cat),
+        "show.functions": lambda self, args: procedures.show_functions(self.cat),
+        "show.databases": lambda self, args: procedures.show_databases(self.cat),
+        "show.aliases": lambda self, args: procedures.show_aliases(self.cat),
+        "show.limits": lambda self, args: procedures.show_limits(self.cat),
         "apoc.load.json": lambda self, args: self._proc_apoc_load_json(args),
         "apoc.load.csv": lambda self, args: self._proc_apoc_load_csv(args),
         "apoc.export.json.query": lambda self, args: (
@@ -1948,9 +1891,7 @@ class Compiler:
         df = self._sink_ckpt(inner._compile_single(parse(stmt)), eager=False)
         n = df.count()
         (export_json if fmt == "json" else export_csv)(df, path)
-        return lit1_df(self.cat.spark, 
-            [(path, n, "")], "file string, rows long, data string"
-        )
+        return literal_df(self.cat.spark, [(path, n, "")], "file string, rows long, data string")
 
     def _proc_apoc_export_all(self, args, fmt: str) -> DataFrame:
         """CALL apoc.export.{json,csv}.all(file[, config]) → (file,
@@ -1985,8 +1926,8 @@ class Compiler:
         n_nodes = int(counts.get("node", 0))
         n_edges = int(counts.get("relationship", 0))
         (export_json if fmt == "json" else export_csv)(dump, path)
-        return lit1_df(self.cat.spark, 
-            [(path, n_nodes, n_edges, 0)],
+        return literal_df(
+            self.cat.spark, [(path, n_nodes, n_edges, 0)],
             "file string, nodes long, relationships long, properties long",
         )
 
@@ -2018,8 +1959,8 @@ class Compiler:
         }
         n_nodes, p_nodes = counts.get("node", (0, 0))
         n_edges, p_edges = counts.get("relationship", (0, 0))
-        return lit1_df(self.cat.spark, 
-            [(path, n_nodes, n_edges, p_nodes + p_edges)],
+        return literal_df(
+            self.cat.spark, [(path, n_nodes, n_edges, p_nodes + p_edges)],
             "file string, nodes long, relationships long, properties long",
         )
 
@@ -2052,7 +1993,7 @@ class Compiler:
             n = inner._compile_single(parse(stmt)).count()
             self._absorb(inner)
             out.append((i, f'{{"rowCount": {n}}}'))
-        return lit1_df(self.cat.spark, out, "row long, result string")
+        return literal_df(self.cat.spark, out, "row long, result string")
 
     def _proc_apoc_periodic_iterate(self, args) -> DataFrame:
         """CALL apoc.periodic.iterate(iterate, action, config) (reference
@@ -2100,8 +2041,8 @@ class Compiler:
                     failed += len(chunk)
                     failed_batches += 1
         committed = total - failed
-        return lit1_df(self.cat.spark, 
-            [(batches, total, 0, committed, failed, failed_batches, 0, "")],
+        return literal_df(
+            self.cat.spark, [(batches, total, 0, committed, failed, failed_batches, 0, "")],
             "batches long, total long, timeTaken long, committedOperations long, "
             "failedOperations long, failedBatches long, retries long, "
             "errorMessages string",
@@ -2133,8 +2074,8 @@ class Compiler:
             total += updates
             if updates == 0:
                 break
-        return lit1_df(self.cat.spark, 
-            [(total, executions, 0, executions)],
+        return literal_df(
+            self.cat.spark, [(total, executions, 0, executions)],
             "updates long, executions long, runtime long, batches long",
         )
 
@@ -2189,39 +2130,24 @@ class Compiler:
             return list(range(vals[0], vals[1] + (1 if step > 0 else -1), step))
         raise NotImplementedError("cypher: CREATE/MERGE properties must be literals")
 
-    def _table_local_expr(self, e, var: str) -> Column:
-        """Compile a SET expression against the target node's OWN table
-        (Prop(var, p) → column p); other variables are out of scope —
-        the rewrite happens per label table, not per pattern row."""
-        if isinstance(e, A.Lit):
-            return F.lit(e.value)
-        if isinstance(e, A.Param):
-            return F.lit(self.params[e.name])
-        if isinstance(e, A.Prop) and isinstance(e.subject, A.Var) and e.subject.name == var:
-            return F.col(e.name)
-        if isinstance(e, A.BinOp):
-            l = self._table_local_expr(e.left, var)
-            r = self._table_local_expr(e.right, var)
-            return {
-                "+": l + r, "-": l - r, "*": l * r, "/": l / r, "%": l % r,
-            }[e.op]
-        if isinstance(e, A.UnOp) and e.op == "NEG":
-            return -self._table_local_expr(e.operand, var)
-        if isinstance(e, A.Func):
-            inner = [self._table_local_expr(a, var) for a in e.args]
-            simple = {"toupper": F.upper, "tolower": F.lower, "abs": F.abs,
-                      "round": F.round, "tostring": lambda c: c.cast("string")}
-            if e.name in simple:
-                return simple[e.name](*inner)
-        raise NotImplementedError(
-            "cypher: SET expression may reference only the target node"
-        )
+    def _py_values(self, args) -> list:
+        return [self._py_value(a) for a in args]
+
+    def _table_expr(self, e, var: str, table: DataFrame) -> Column:
+        """Compile a SET right-hand side against the target's OWN table:
+        the rewrite runs per label table, not per pattern row, so
+        ``var``'s properties are the table's columns (a property the
+        table lacks is null) and other pattern variables are unbound."""
+        saved = self.frame, self.bindings
+        self.frame, self.bindings = table, {var: Binding("own")}
+        try:
+            return self._expr(e)
+        finally:
+            self.frame, self.bindings = saved
 
     def _target_ids(self, var: str) -> DataFrame:
         if var in self._created:
-            return lit1_df(self.cat.spark, 
-                [(self._created[var],)], "_target_id string"
-            )
+            return literal_df(self.cat.spark, [(self._created[var],)], "_target_id string")
         if self.frame is None or f"{var}_id" not in self.frame.columns:
             raise ValueError(f"cypher: {var} is not bound")
         return self.frame.select(F.col(f"{var}_id").alias("_target_id")).distinct()
@@ -2347,8 +2273,8 @@ class Compiler:
                 "src", F.lit(self._created[a])
             ).select("src", "dst")
         if a in self._created and b in self._created:
-            return lit1_df(spark, 
-                [(self._created[a], self._created[b])], "src string, dst string"
+            return literal_df(
+                spark, [(self._created[a], self._created[b])], "src string, dst string"
             )
         raise ValueError("cypher: CREATE relationship endpoints must be bound")
 
@@ -2372,13 +2298,12 @@ class Compiler:
             else:
                 expanded.append(item)
         items = expanded
-        per_var: dict[str, dict[str, Column]] = {}
+        per_var: dict[str, dict] = {}
         for target, expr in items:
             if not (isinstance(target, A.Prop) and isinstance(target.subject, A.Var)):
                 raise NotImplementedError("cypher: SET target must be var.prop")
-            var = target.subject.name
-            per_var.setdefault(var, {})[target.name] = self._table_local_expr(expr, var)
-        for var, assignments in per_var.items():
+            per_var.setdefault(target.subject.name, {})[target.name] = expr
+        for var, exprs in per_var.items():
             label = (
                 self.bindings[var].label
                 if var in self.bindings
@@ -2386,6 +2311,8 @@ class Compiler:
             )
             if not label:
                 raise ValueError(f"cypher: SET needs a labeled node for {var}")
+            table = self.store.table_for(label)[2]
+            assignments = {p: self._table_expr(e, var, table) for p, e in exprs.items()}
             n = self.store.set_props(label, self._target_ids(var), assignments)
             self.stats.add(properties_set=n)
 
@@ -2414,11 +2341,12 @@ class Compiler:
         ids = ids.select(F.col("id").alias("_target_id"))
         sets = c.on_create if created else c.on_match
         if sets:
+            table = self.store.table_for(node.label)[2]
             per: dict[str, Column] = {}
             for target, expr in sets:
                 if not (isinstance(target, A.Prop) and isinstance(target.subject, A.Var)):
                     raise NotImplementedError("cypher: SET target must be var.prop")
-                per[target.name] = self._table_local_expr(expr, target.subject.name)
+                per[target.name] = self._table_expr(expr, target.subject.name, table)
             n = self.store.set_props(node.label, ids, per)
             self.stats.add(properties_set=n)
         first = ids.first()
@@ -2443,7 +2371,7 @@ class Compiler:
         ):
             return var, self.frame.select(F.col(f"{var}_id").alias("id")).distinct(), False
         if self._created.get(var) is not None:
-            return var, lit1_df(self.cat.spark, [(self._created[var],)], "id string"), False
+            return var, literal_df(self.cat.spark, [(self._created[var],)], "id string"), False
         if pat.label is None or not pat.props:
             raise NotImplementedError(
                 "cypher: MERGE node must be bound or (n:Label {props})"
@@ -2558,10 +2486,10 @@ class Compiler:
                             _props_equal(edges, eprops, F.col("type") == F.lit(etype))
                         )
                         .join(pairs, ["src", "dst"])
-                        .select(F.col("edge_id").alias("_edge_id"))
+                        .select(F.col("edge_id").alias("_target_id"))
                     )
                     n = self.store.set_edge_props(
-                        edge_ids, {target.name: self._table_local_expr(expr, tvar)}
+                        edge_ids, {target.name: self._table_expr(expr, tvar, edges)}
                     )
                     self.stats.add(properties_set=n)
                     done = True
@@ -2573,9 +2501,10 @@ class Compiler:
                         )
                     side = "src" if tvar == a_var else "dst"
                     ids = pairs.select(F.col(side).alias("_target_id")).distinct()
+                    table = self.store.table_for(binding.label)[2]
                     n = self.store.set_props(
                         binding.label, ids,
-                        {target.name: self._table_local_expr(expr, tvar)},
+                        {target.name: self._table_expr(expr, tvar, table)},
                     )
                     self.stats.add(properties_set=n)
                     done = True
@@ -2594,9 +2523,7 @@ class Compiler:
             if isinstance(v, list) and v and all(
                 isinstance(x, dict) for x in v
             ):
-                rows = lit1_df(self.cat.spark, 
-                    v, schema=_dicts_schema(v)
-                )
+                rows = literal_df(self.cat.spark, v, schema=_dicts_schema(v))
                 packed = rows.select(
                     F.struct(*rows.columns).alias(u.var)
                 )
@@ -2869,8 +2796,8 @@ class Compiler:
             if isinstance(e.subject, A.Var):
                 var = e.subject.name
                 b = self.bindings.get(var)
-                if b is not None and b.kind in ("node", "rel"):
-                    col = f"{var}_{e.name}"
+                if b is not None and b.kind in ("node", "rel", "own"):
+                    col = e.name if b.kind == "own" else f"{var}_{e.name}"
                     if col not in self.frame.columns:
                         # schema-free reference semantics: a property the
                         # entity doesn't have is null, not an error

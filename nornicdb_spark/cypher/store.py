@@ -1,8 +1,8 @@
 """Mutable graph store backing Cypher write clauses.
 
 The batch engine's tables are immutable parquet; a write session works on
-*versions*: every CREATE/SET/DELETE produces new DataFrames (pure
-rewrites, operators/mutations.py style) and the store swaps the pointer —
+*versions*: every CREATE/SET/DELETE produces new DataFrames (the pure
+rewrites of operators/mutations.py) and the store swaps the pointer —
 the batch analogue of the reference's implicit write transaction
 (executor.go:707-801). Reads inside the same Engine see the latest
 version; nothing touches disk until the caller persists.
@@ -19,44 +19,11 @@ from pyspark.sql import functions as F
 from nornicdb_spark.catalog import (
     NODE_SPECS, Catalog, PropertyGraph, label_nodes, node_id,
 )
+from nornicdb_spark.operators import mutations
+from nornicdb_spark.operators.localframe import literal_df
 from nornicdb_spark.operators.scope import unpersist_frame
 
 LABEL_TABLES = {label: (table, key) for label, table, key in NODE_SPECS}
-
-
-def lit1_df(spark, data, schema=None, **kw) -> DataFrame:
-    """Literal frame on the JVM-native path (operators/localframe.py):
-    a ``VALUES`` LocalRelation executes with ZERO Python tasks, where a
-    ``createDataFrame`` literal is a Python-RDD scan whose every action
-    pays a Python-worker handshake (measured 5.1 s vs 0.22 s per count
-    of a 1-row frame — a 3-node MERGE chain stacked those handshakes
-    into 553 s of wall).
-
-    The fallback keeps ``createDataFrame`` for rows outside the
-    literal-SQL subset (datetimes, maps, mixed columns), single-
-    partitioned: its defaultParallelism near-empty slices otherwise
-    multiply through the write path — every dynamic table union adds
-    +cores partitions per created node, and a bound 1-row × 1-row MERGE
-    endpoint crossJoin becomes a left×right-task CartesianProduct
-    (measured: 2048 tasks inside one MERGE statement). coalesce(1)
-    concatenates slices in order, so row order (and any downstream
-    monotonically_increasing_id ordering) is preserved."""
-    from nornicdb_spark.operators.localframe import literal_df
-
-    return literal_df(spark, data, schema, **kw)
-
-
-@dataclass
-class WriteStats:
-    nodes_created: int = 0
-    relationships_created: int = 0
-    properties_set: int = 0
-    nodes_deleted: int = 0
-    relationships_deleted: int = 0
-
-    def add(self, **kw) -> None:
-        for k, v in kw.items():
-            setattr(self, k, getattr(self, k) + v)
 
 
 @dataclass
@@ -161,9 +128,7 @@ class GraphStore:
             # empty dynamic table: surrogate key only; property columns
             # appear as nodes are created (schema-free, like the
             # reference's map-per-entity storage types.go:185-211)
-            self.tables[table] = lit1_df(self.catalog.spark, 
-                [], "_key long"
-            )
+            self.tables[table] = literal_df(self.catalog.spark, [], "_key long")
         return table, "_key", self.tables[table]
 
     # ---- mutations (pure rewrites + pointer swap) ----------------------
@@ -174,15 +139,13 @@ class GraphStore:
             props = dict(props)
             props[key] = self._dyn_counter
             self._dyn_counter += 1
-            new = lit1_df(self.catalog.spark, [props])
+            new = literal_df(self.catalog.spark, [props])
             self.tables[table] = df.unionByName(new, allowMissingColumns=True)
             return f"{label}:{props[key]}"
         if key not in props:
             raise ValueError(f"CREATE (:{label}) needs the key property {key}")
-        row = {c: props.get(c) for c in df.columns}
-        new = lit1_df(self.catalog.spark, 
-            [tuple(row[c] for c in df.columns)], df.schema
-        )
+        # a dict row under the table's schema: absent properties are NULL
+        new = literal_df(self.catalog.spark, [props], df.schema)
         self.tables[table] = df.unionByName(new)
         return f"{label}:{props[key]}"
 
@@ -210,7 +173,8 @@ class GraphStore:
         if key not in rows.columns:
             raise ValueError(f"CREATE (:{label}) needs the key property {key}")
         if label in LABEL_TABLES:
-            n = rows.count()
+            res = mutations.create_rows(df, rows)
+            n, merged = res.stats.nodes_created, res.df
         else:
             # one pass: row count + check the generated keys stayed inside
             # their reserved stride (guards the >131k-partition edge)
@@ -222,14 +186,6 @@ class GraphStore:
                     "bulk CREATE key range overflow: repartition the "
                     "input below 2^17 partitions"
                 )
-        if label in LABEL_TABLES:
-            aligned = rows.select(*[
-                (F.col(c) if c in rows.columns else F.lit(None))
-                .cast(df.schema[c].dataType).alias(c)
-                for c in df.columns
-            ])
-            merged = df.unionByName(aligned)
-        else:
             merged = df.unionByName(rows, allowMissingColumns=True)
         self.tables[table] = self._ckpt(merged)
         return n
@@ -247,24 +203,16 @@ class GraphStore:
         props = props or {}
         salt = self._edge_batch
         self._edge_batch += 1
-        cols = [
+        new = pairs.select(
             F.col("src"), F.col("dst"), F.lit(etype).alias("type"),
             F.xxhash64(
                 "src", "dst", F.lit(etype), F.lit(salt),
                 F.monotonically_increasing_id(),
             ).alias("edge_id"),
-        ]
-        prop_cols = [c for c in self.edges.columns if c not in ("src", "dst", "type", "edge_id")]
-        for c in prop_cols:
-            if c in props:
-                cols.append(F.lit(props[c]).alias(c))
-            else:
-                cols.append(F.lit(None).cast(self.edges.schema[c].dataType).alias(c))
-        for c, v in props.items():
-            if c not in self.edges.columns:
-                # schema-free edge property — appears as a new column
-                cols.append(F.lit(v).alias(c))
-        new = pairs.select(*cols)
+            # a property the edge table lacks becomes a new column; one
+            # it has but the CREATE omits is a typed NULL (the union's fill)
+            *[F.lit(v).alias(c) for c, v in props.items()],
+        )
         n = new.count()
         self.edges = self._ckpt(
             self.edges.unionByName(new, allowMissingColumns=True)
@@ -274,67 +222,32 @@ class GraphStore:
     def set_edge_props(
         self, edge_ids: DataFrame, assignments: dict[str, F.Column]
     ) -> int:
-        """SET over the edges whose edge_id is in ``edge_ids`` (column
-        ``_edge_id``) — relationship twin of :meth:`set_props`. Expressions
-        see the edge table's own columns; new property columns are allowed."""
-        targets = edge_ids.select("_edge_id").distinct()
-        n = targets.count() * len(assignments)
-        tagged = self.edges.join(
-            targets, self.edges.edge_id == F.col("_edge_id"), "left_outer"
+        """SET over the edges whose edge_id is in ``edge_ids`` (one
+        column) — relationship twin of :meth:`set_props`."""
+        res = mutations.set_properties(
+            self.edges, edge_ids.distinct(), assignments, F.col("edge_id")
         )
-        hit = F.col("_edge_id").isNotNull()
-        out = tagged
-        for c, expr in assignments.items():
-            prev = F.col(c) if c in self.edges.columns else F.lit(None)
-            out = out.withColumn(c, F.when(hit, expr).otherwise(prev))
-        keep = list(self.edges.columns) + [
-            c for c in assignments if c not in self.edges.columns
-        ]
-        self.edges = self._ckpt(out.select(*keep))
-        return n
+        self.edges = self._ckpt(res.df)
+        return res.stats.properties_set
 
     def set_props(
         self, label: str, target_ids: DataFrame, assignments: dict[str, F.Column]
     ) -> int:
         """SET over the rows of `label`'s table whose graph id is in
-        target_ids (column `_target_id`). Expressions see the table's own
-        columns. New property columns are allowed."""
+        target_ids (one column of distinct ids). Expressions see the
+        table's own columns. New property columns are allowed."""
         table, key, df = self.table_for(label)
-        tagged = df.join(
-            target_ids.select(F.col("_target_id")),
-            node_id(label, key) == F.col("_target_id"),
-            "left_outer",
-        )
-        hit = F.col("_target_id").isNotNull()
-        out = tagged
-        for c, expr in assignments.items():
-            prev = F.col(c) if c in df.columns else F.lit(None)
-            out = out.withColumn(c, F.when(hit, expr).otherwise(prev))
-        keep = list(df.columns) + [c for c in assignments if c not in df.columns]
-        self.tables[table] = out.select(*keep)
-        return target_ids.count() * len(assignments)
+        res = mutations.set_properties(df, target_ids, assignments, node_id(label, key))
+        self.tables[table] = res.df
+        return res.stats.properties_set
 
     def delete_nodes(self, label: str, target_ids: DataFrame, detach: bool) -> tuple[int, int]:
+        """DELETE / DETACH DELETE of the rows of `label`'s table whose
+        graph id is in target_ids (one column)."""
         table, key, df = self.table_for(label)
-        ids = self._ckpt(target_ids.select(F.col("_target_id")).distinct())
-        touching = self.edges.join(
-            ids, (self.edges.src == F.col("_target_id")) | (self.edges.dst == F.col("_target_id")),
-            "left_semi",
-        )
-        n_edges = 0
-        if not detach:
-            if touching.limit(1).count():
-                raise ValueError(
-                    "Cannot delete nodes that still have relationships; use DETACH DELETE"
-                )
-        else:
-            n_edges = touching.count()
-            self.edges = self._ckpt(
-                self.edges.join(ids, self.edges.src == F.col("_target_id"), "left_anti")
-                .join(ids, F.col("dst") == F.col("_target_id"), "left_anti")
-            )
-        n_nodes = ids.count()
-        self.tables[table] = df.join(
-            ids, node_id(label, key) == F.col("_target_id"), "left_anti"
-        )
-        return n_nodes, n_edges
+        ids = self._ckpt(target_ids.distinct())
+        res = mutations.delete_nodes(df, ids, self.edges, detach, node_id(label, key))
+        if detach:
+            self.edges = self._ckpt(res.edges)
+        self.tables[table] = res.df
+        return res.stats.nodes_deleted, res.stats.relationships_deleted

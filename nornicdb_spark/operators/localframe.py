@@ -158,9 +158,20 @@ def _infer_type(values) -> str:
 def literal_df(spark, data, schema=None, **kw) -> DataFrame:
     """Drop-in ``spark.createDataFrame`` replacement for driver-literal
     rows: the JVM ``VALUES`` LocalRelation when the rows render, else
-    the original call single-partitioned (near-empty defaultParallelism
-    slices otherwise multiply through unions and cartesian joins —
-    coalesce(1) preserves row order)."""
+    the original call single-partitioned.
+
+    A ``VALUES`` LocalRelation executes with zero Python tasks, where a
+    ``createDataFrame`` literal is a Python-RDD scan whose every action
+    pays a Python-worker handshake (measured 5.1 s vs 0.22 s per count
+    of a 1-row frame; a 3-node MERGE chain stacked those handshakes
+    into 553 s of wall). The fallback is single-partitioned because
+    near-empty defaultParallelism slices otherwise multiply through the
+    write path: every dynamic table union adds +cores partitions per
+    created node, and a bound 1-row × 1-row MERGE endpoint crossJoin
+    becomes a left×right-task CartesianProduct (measured: 2048 tasks in
+    one MERGE statement). coalesce(1) concatenates slices in order, so
+    row order (and any downstream monotonically_increasing_id ordering)
+    is preserved."""
     try:
         return local_df(spark, data, schema)
     except Unrenderable:

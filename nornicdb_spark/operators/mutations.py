@@ -25,6 +25,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nornicdb_spark.operators.localframe import sql_col
+
 
 @dataclass
 class MutationStats:
@@ -42,6 +44,10 @@ class MutationStats:
     labels_added: int = 0
     labels_removed: int = 0
 
+    def add(self, **kw) -> None:
+        for k, v in kw.items():
+            setattr(self, k, getattr(self, k) + v)
+
 
 @dataclass
 class MutationResult:
@@ -53,6 +59,7 @@ class MutationResult:
 
 
 NEW = "_new_"  # prefix for incoming-row columns visible to SET expressions
+TARGET = "_target_id"  # the target-id column SET and DELETE match on
 
 
 def create_rows(
@@ -61,13 +68,15 @@ def create_rows(
     """CREATE — append rows (reference create.go:15-...; batch insert).
 
     ``new_rows`` must carry a subset of base's columns; missing columns
-    become NULL (Cypher: absent properties).
+    become NULL (Cypher: absent properties), and every column takes
+    base's type, so the table's schema does not drift.
     """
-    missing = [c for c in base.columns if c not in new_rows.columns]
-    filled = new_rows
-    for c in missing:
-        filled = filled.withColumn(c, F.lit(None).cast(base.schema[c].dataType))
-    filled = filled.select(*base.columns)
+    have = set(new_rows.columns)
+    filled = new_rows.selectExpr(*[
+        f"CAST({sql_col(f.name) if f.name in have else 'NULL'} AS "
+        f"{f.dataType.simpleString()}) AS {sql_col(f.name)}"
+        for f in base.schema.fields
+    ])
     stats = MutationStats(nodes_created=filled.count() if with_stats else 0)
     return MutationResult(df=base.unionByName(filled), stats=stats)
 
@@ -139,22 +148,48 @@ def merge_rows(
     return MutationResult(df=result.select(*out_cols), stats=stats)
 
 
+def _id_frame(ids: DataFrame) -> DataFrame:
+    """A one-column frame of target ids, its column named :data:`TARGET`."""
+    (name,) = ids.columns
+    return ids if name == TARGET else ids.withColumnRenamed(name, TARGET)
+
+
+def _ids(id_col: Column | None) -> Column:
+    return F.col("id") if id_col is None else id_col
+
+
 def set_properties(
     df: DataFrame,
-    condition: Column,
+    condition: Column | DataFrame,
     assignments: dict[str, Column],
+    id_col: Column | None = None,
     with_stats: bool = True,
 ) -> MutationResult:
     """SET n.prop = expr [, ...] on rows matching ``condition`` (reference
     executor_mutations.go:247-566). Unmatched rows pass through unchanged.
     ``+=``-style map merge is just multiple assignments here — properties
-    are typed columns, not a map blob."""
-    out = df
+    are typed columns, not a map blob. Expressions see ``df``'s own
+    columns; an assignment to a column ``df`` lacks adds a property.
+
+    ``condition`` is a boolean Column, or a one-column frame of distinct
+    target ids (the MATCH that bound the nodes) matched against
+    ``id_col`` (default: column ``id``) by a left-outer tag join."""
+    cols = df.columns
+    if isinstance(condition, DataFrame):
+        targets, tid = _id_frame(condition), F.col(TARGET)
+        out = df.join(targets, _ids(id_col) == tid, "left_outer")
+        hit = tid.isNotNull()
+    else:
+        targets, out, hit = df.filter(condition), df, condition
     for c, expr in assignments.items():
-        prev = F.col(c) if c in df.columns else F.lit(None)
-        out = out.withColumn(c, F.when(condition, expr).otherwise(prev))
-    n = df.filter(condition).count() if with_stats else 0
-    return MutationResult(df=out, stats=MutationStats(properties_set=n * len(assignments)))
+        prev = F.col(c) if c in cols else F.lit(None)
+        out = out.withColumn(c, F.when(hit, expr).otherwise(prev))
+    n = targets.count() if with_stats else 0
+    keep = cols + [c for c in assignments if c not in cols]
+    return MutationResult(
+        df=out.select(*keep),
+        stats=MutationStats(properties_set=n * len(assignments)),
+    )
 
 
 def remove_properties(
@@ -215,15 +250,16 @@ def delete_nodes(
     condition: Column | DataFrame,
     edges: DataFrame | None = None,
     detach: bool = False,
-    id_col: str = "id",
+    id_col: Column | None = None,
     with_stats: bool = True,
 ) -> MutationResult:
     """DELETE / DETACH DELETE (reference executor_mutations.go:65-246).
 
     ``condition`` is either a boolean Column (DELETE ... WHERE pred) or a
-    DataFrame of target ids (the MATCH that bound the nodes) — the latter
-    keeps pattern-driven deletes join-based instead of collecting ids to
-    the driver.
+    one-column frame of distinct target ids (the MATCH that bound the
+    nodes) — the latter keeps pattern-driven deletes join-based instead
+    of collecting ids to the driver. ``id_col`` is the node id (default:
+    column ``id``); edges reference it in ``src`` and ``dst``.
 
     Plain DELETE refuses when a targeted node still has relationships —
     the Neo4j ConstraintValidationFailed behavior the reference mirrors.
@@ -231,28 +267,24 @@ def delete_nodes(
     anti-joins against the deleted-id set; Catalyst broadcasts it when
     small).
     """
+    tid = F.col(TARGET)
     if isinstance(condition, DataFrame):
-        doomed = condition.select(F.col(id_col).alias("_del_id")).distinct()
-        survivors = nodes.join(
-            doomed, nodes[id_col] == F.col("_del_id"), "left_anti"
-        )
+        doomed = _id_frame(condition)
+        survivors = nodes.join(doomed, _ids(id_col) == tid, "left_anti")
     else:
         # Cypher 3VL: a NULL predicate is no-match — the node survives.
         # Without the coalesce, rows where the predicate evaluates NULL
         # would fall out of BOTH the doomed set and the survivors.
         cond = F.coalesce(condition, F.lit(False))
-        doomed = nodes.filter(cond).select(F.col(id_col).alias("_del_id"))
+        doomed = nodes.filter(cond).select(_ids(id_col).alias(TARGET))
         survivors = nodes.filter(~cond)
     new_edges = edges
     stats = MutationStats()
     if edges is not None:
-        touching = edges.join(
-            doomed, (edges.src == F.col("_del_id")) | (edges.dst == F.col("_del_id")),
-            "left_semi",
-        )
+        src, dst = edges.src, edges.dst
+        touching = edges.join(doomed, (src == tid) | (dst == tid), "left_semi")
         if not detach:
-            n_touch = touching.limit(1).count()
-            if n_touch:
+            if touching.limit(1).count():
                 raise ValueError(
                     "Cannot delete nodes that still have relationships; "
                     "use DETACH DELETE"
@@ -261,8 +293,8 @@ def delete_nodes(
             if with_stats:
                 stats.relationships_deleted = touching.count()
             new_edges = (
-                edges.join(doomed, edges.src == F.col("_del_id"), "left_anti")
-                .join(doomed, F.col("dst") == F.col("_del_id"), "left_anti")
+                edges.join(doomed, src == tid, "left_anti")
+                .join(doomed, dst == tid, "left_anti")
             )
     if with_stats:
         stats.nodes_deleted = doomed.count()

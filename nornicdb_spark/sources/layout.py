@@ -78,23 +78,22 @@ def read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
     no bootstrap, or only empty batches so far): a missing path reads as
     an empty table with the explicit ``schema``, so first-batch ingest
     and early monitoring reads need no special-casing. The explicit
-    schema also covers file-less directories appends can leave behind."""
-    from pyspark.errors import AnalysisException
-
-    try:
+    schema also covers file-less directories appends can leave behind.
+    The path is tested before it is read: a failed read costs a JVM
+    exception, a logged stack trace and a py4j raise."""
+    if os.path.exists(path):
         return spark.read.schema(schema).parquet(path)
-    except AnalysisException:
-        if os.path.exists(f"{path}.old"):
-            # a rewrite_partitioned swap crashed between its two renames:
-            # the data is intact in <path>.old but a silent empty read
-            # here would make the index "forget" its corpus — be loud
-            raise RuntimeError(
-                f"{path} is missing but {path}.old exists — an "
-                "interrupted compaction left the table un-swapped. "
-                "Re-run the compaction (it restores the original "
-                "directory first) or rename the .old directory back."
-            )
-        return literal_df(spark, [], schema)
+    if os.path.exists(f"{path}.old"):
+        # a rewrite_partitioned swap crashed between its two renames:
+        # the data is intact in <path>.old but a silent empty read
+        # here would make the index "forget" its corpus — be loud
+        raise RuntimeError(
+            f"{path} is missing but {path}.old exists — an "
+            "interrupted compaction left the table un-swapped. "
+            "Re-run the compaction (it restores the original "
+            "directory first) or rename the .old directory back."
+        )
+    return literal_df(spark, [], schema)
 
 
 def stored_col_type(spark: SparkSession, path: str, col: str) -> str | None:

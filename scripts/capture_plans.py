@@ -11,14 +11,18 @@ call groups:
   ``search_many`` calls as perfbench ``ingest`` makes them (8 lists, all
   probed, k 10; also at n_probe 3), after an append and a removal;
 - ``@graph_read``: the ``db.index.fulltext.queryNodes`` and
-  ``db.index.vector.queryNodes`` CALLs of perfbench ``graph_read``.
+  ``db.index.vector.queryNodes`` CALLs of perfbench ``graph_read``;
+- ``@cypher_writes``: perfbench ``ingest``'s Cypher CREATE, relate, SET
+  and DETACH DELETE over two cycles on one Engine: after each write,
+  its read-back, the store's edge table and every node table the
+  store has replaced.
 
 Each file holds the optimized logical plan and the formatted physical
 plan, normalized so that two captures of the same plans diff empty:
 expression ids and ``plan_id=`` numbers are replaced, lambda variables
 are named by position (:func:`rename_lambda_vars`), and the
 data, checkout and temporary paths become ``<sf>``, ``<root>`` and
-``<tmp>``. Registry rows are built but not collected, so a row that
+``<tmp>``, and RDD ids (checkpointed frames) become ``N``. Registry rows are built but not collected, so a row that
 materializes state while building (the maintained indexes) still runs
 that part.
 """
@@ -49,6 +53,7 @@ def normalize(text: str, sf_dir: str) -> str:
     text = re.sub(r"/tmp/[^\s,\]\)]+", "<tmp>", text)
     text = re.sub(r"#\d+L?", "#N", text)
     text = re.sub(r"plan_id=\d+", "plan_id=N", text)
+    text = re.sub(r"RDD\[\d+\]", "RDD[N]", text)
     return rename_lambda_vars(text)
 
 
@@ -125,7 +130,33 @@ def graph_read_frames(spark, sf_dir: str) -> dict:
     }
 
 
-GROUPS = {"@ingest": ingest_frames, "@graph_read": graph_read_frames}
+def cypher_write_frames(spark, sf_dir: str) -> dict:
+    """perfbench ``ingest``'s Cypher writes, two cycles on one Engine."""
+    from nornicdb_spark.engine import Engine
+    from perfbench.ingest import CREATE, DELETE, READ_REL, READ_TAG, RELATE, SET
+
+    eng = Engine(spark, sf_dir)
+    base = dict(eng.store.tables)
+    frames = {}
+    for tag in range(2):
+        for name, q, p, read, rp in (
+            ("create", CREATE, {"id": tag, "name": f"tag-{tag}"}, READ_TAG, {"id": tag}),
+            ("relate", RELATE, {"k": 3 + tag, "id": tag}, READ_REL, {"k": 3 + tag}),
+            ("set", SET, {"id": tag, "name": f"tag-{tag}-set"}, READ_TAG, {"id": tag}),
+            ("delete", DELETE, {"id": tag}, READ_TAG, {"id": tag}),
+        ):
+            eng.cypher(q, p).collect()
+            at = f"cypher_writes_{tag}_{name}"
+            frames[f"{at}_readback"] = eng.cypher(read, rp)
+            frames[f"{at}_edges"] = eng.store.edges
+            for table, df in eng.store.tables.items():
+                if base.get(table) is not df:
+                    frames[f"{at}_{table.strip('_')}"] = df
+    return frames
+
+
+GROUPS = {"@ingest": ingest_frames, "@graph_read": graph_read_frames,
+          "@cypher_writes": cypher_write_frames}
 
 
 def main():

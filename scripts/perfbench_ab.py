@@ -7,7 +7,10 @@ ops and ``host.steal_pct`` go to ``out_json``. It then prints, per
 metric, both sides' medians, their quartile spreads (IQR/median), how
 many pairs the change won, the quartiles of the change/parent ratio
 within pairs, and the verdict against the bounds that the
-change checkout's ``BENCHMARK.json`` declares (read, never written):
+change checkout's ``BENCHMARK.json`` declares (read, never written).
+Per op type it prints both sides' median p50 and the quartiles of the
+within-pair p50 ratio, which place a gap in the op types it sits in.
+The verdicts:
 
 - *unresolved*: a side's quartile spread is wider than the bound, so
   the runs cannot tell a change inside the bound from noise (unless
@@ -73,6 +76,39 @@ def quartiles(xs: list) -> tuple:
     return q1, q2, q3
 
 
+def pair_ratios(runs: list, value) -> list:
+    """change/parent ratio of ``value(run)`` within each pair that has
+    both sides: host drift across the runs widens both sides' spreads
+    but cancels in these ratios."""
+    pairs = {}
+    for r in runs:
+        v = value(r)
+        if v is not None:
+            pairs.setdefault(r["pair"], {})[r["side"]] = v
+    return [v["change"] / v["parent"] for v in pairs.values() if len(v) == 2 and v["parent"]]
+
+
+def per_type_summary(runs: list) -> dict:
+    """Per op type: both sides' median p50 and the quartiles of the
+    change/parent p50 ratio within pairs — whether a gap sits in op
+    types the change touched or in ones it did not."""
+    types = sorted({t for r in runs for t in r.get("per_type_p50_s", {})})
+    out = {}
+    for t in types:
+        row = {}
+        for s in ("parent", "change"):
+            xs = [r["per_type_p50_s"][t] for r in runs
+                  if r["side"] == s and t in r.get("per_type_p50_s", {})]
+            if xs:
+                row[s] = statistics.median(xs)
+        ratios = pair_ratios(runs, lambda r: r.get("per_type_p50_s", {}).get(t))
+        if ratios:
+            row["pair_ratio_quartiles"] = quartiles(ratios)
+            row["pairs"] = len(ratios)
+        out[t] = row
+    return out
+
+
 def summarize(runs: list, metrics: list) -> dict:
     out = {}
     for m in metrics:
@@ -97,9 +133,7 @@ def summarize(runs: list, metrics: list) -> dict:
         row["change_wins"] = sum(1 for v in pairs.values()
                                  if len(v) == 2 and sign * (v["change"] - v["parent"]) < 0)
         row["pairs"] = len(pairs)
-        # change/parent within each pair: host drift across the runs
-        # widens both sides' spreads but cancels in these ratios
-        ratios = [v["change"] / v["parent"] for v in pairs.values() if len(v) == 2 and v["parent"]]
+        ratios = pair_ratios(runs, lambda r: r["metrics"].get(name))
         if ratios:
             row["pair_ratio_quartiles"] = quartiles(ratios)
         # every change run better than every parent run resolves a
@@ -171,6 +205,7 @@ def main(argv=None) -> int:
                        for s in ("parent", "change")},
         "runs_without_result": sum(1 for r in runs if not r["metrics"]),
         "summary": summary,
+        "per_type": per_type_summary(runs),
         "runs": runs,
     }
     with open(args.out_json, "w") as f:
@@ -183,6 +218,10 @@ def main(argv=None) -> int:
               f"  worse_by {row['worse_by']:+.3f}  wins {row['change_wins']}/{row['pairs']}"
               f"  pair ratio {'/'.join(f'{x:.3f}' for x in row.get('pair_ratio_quartiles', ()))}"
               f"  {row.get('verdict', '')}")
+    for t, row in result["per_type"].items():
+        print(f"  {t:32s} parent p50 {row.get('parent', float('nan')):.4g}"
+              f"  change p50 {row.get('change', float('nan')):.4g}"
+              f"  pair ratio {'/'.join(f'{x:.3f}' for x in row.get('pair_ratio_quartiles', ()))}")
     return 0
 
 

@@ -1037,6 +1037,35 @@ def test_rewrite_partitioned_recovers_interrupted_swap(spark, tmp_path):
     assert not os.path.exists(f"{path}.old")
 
 
+def test_read_or_empty_tests_the_path_before_reading(spark, tmp_path, monkeypatch):
+    # a missing table reads empty without a failed parquet read (a JVM
+    # exception per missing path, e.g. every tombstone read right after
+    # a compaction); a half-swapped one still refuses
+    import os
+
+    import pytest
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from nornicdb_spark.sources.layout import read_or_empty
+
+    read = DataFrameReader.parquet
+    reads = []
+
+    def counting(self, *paths, **kw):
+        reads.append(paths)
+        return read(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    path = str(tmp_path / "t")
+    empty = read_or_empty(spark, path, "v long, pk int")
+    assert reads == []
+    assert empty.columns == ["v", "pk"] and empty.count() == 0
+    os.makedirs(f"{path}.old")
+    with pytest.raises(RuntimeError, match="interrupted compaction"):
+        read_or_empty(spark, path, "v long, pk int")
+    assert reads == []
+
+
 def test_compact_recovers_interrupted_swap_with_default_args(
     spark, sf_dir, tmp_path
 ):
