@@ -22,9 +22,9 @@ plan, normalized so that two captures of the same plans diff empty:
 expression ids and ``plan_id=`` numbers are replaced, lambda variables
 are named by position (:func:`rename_lambda_vars`), and the
 data, checkout and temporary paths become ``<sf>``, ``<root>`` and
-``<tmp>``, and RDD ids (checkpointed frames) become ``N``. Registry rows are built but not collected, so a row that
-materializes state while building (the maintained indexes) still runs
-that part.
+``<tmp>``, and RDD ids (checkpointed frames) become ``N``. Registry
+rows are built but not collected, so a row that materializes state
+while building (the maintained indexes) still runs that part.
 """
 
 from __future__ import annotations

@@ -1043,7 +1043,6 @@ def test_read_or_empty_tests_the_path_before_reading(spark, tmp_path, monkeypatc
     # a compaction); a half-swapped one still refuses
     import os
 
-    import pytest
     from pyspark.sql.readwriter import DataFrameReader
 
     from nornicdb_spark.sources.layout import read_or_empty
