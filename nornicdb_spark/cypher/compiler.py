@@ -1498,12 +1498,15 @@ class Compiler:
     }
 
     def _index_source(self, label: str) -> tuple[DataFrame, str]:
+        """(frame, id column) a node index on ``label`` reads: the
+        fixture's index sources from the catalog; star-schema and created
+        labels from this Engine's store, at its current version."""
         if label in self.INDEX_SOURCES:
             table, key = self.INDEX_SOURCES[label]
             return self.cat.table(table), key
-        if label in LABEL_TABLES:
-            table, key = LABEL_TABLES[label]
-            return self.cat.table(table), key
+        if label in LABEL_TABLES or self.store.has_dynamic(label):
+            _table, key, df = self.store.table_for(label)
+            return df, key
         raise ValueError(f"cypher: no table for index label {label!r}")
 
     def _proc_vector_query(self, args, rels: bool = False) -> DataFrame:
@@ -1540,7 +1543,7 @@ class Compiler:
             # all nodes with embeddings when the index is unregistered)
             src, id_col, vec_col = self.cat.embeddings, "vec_id", "embedding"
         return cosine_topk(src, vec, k=k, id_col=id_col, vec_col=vec_col).select(
-            F.col(id_col).alias("node"), F.col("score")
+            F.col("vec_id").alias("node"), F.col("score")
         )
 
     def _proc_fulltext_query(self, args, rels: bool = False) -> DataFrame:
@@ -1548,9 +1551,9 @@ class Compiler:
         (index, query[, k]) (reference call_fulltext.go; BM25 scoring
         fulltext_index.go:123-199). The index name resolves through the
         IndexCatalog; the posting structure is built on first query and
-        memoized per index name. The relationship variant indexes the
-        named string property of the current edge table (edge_id as the
-        document key)."""
+        memoized per index name and source frame. The relationship
+        variant indexes the named string property of the current edge
+        table (edge_id as the document key)."""
         from nornicdb_spark.search.bm25 import BM25Index
 
         vals = [self._py_value(a) for a in args]
@@ -1568,11 +1571,20 @@ class Compiler:
             # unknown name → the default documents index (reference
             # leniency, call_fulltext.go)
             d, index = ic._defs["documents_fulltext"], "documents_fulltext"
-        idx = ic._impls.get(index)
-        if idx is None:
+        if rels:
+            base, id_col = self.store.graph.edges, "edge_id"
+        else:
+            base, id_col = self._index_source(d["label"])
+        # memoized per index name AND source frame: the catalog's index
+        # registry is shared by every Engine, and a write swaps in a new
+        # frame for the label it touches
+        memo = ic._impls.get(index)
+        if memo is not None and memo[0] is base:
+            idx = memo[1]
+        else:
             props = list(d["properties"])
 
-            def build(src, id_col):
+            def build(src):
                 # multi-property indexes score over the combined bag —
                 # exactly the reference's extractSearchableText concat
                 # (search.go:1820-1861); BM25F with unit weights ≡ BM25
@@ -1591,19 +1603,15 @@ class Compiler:
                 )
 
             if rels:
-                e = self.store.graph.edges
-                avail = [p for p in props if p in e.columns]
+                avail = [p for p in props if p in base.columns]
                 if not avail:
                     return literal_df(self.cat.spark, [], f"{out_col} string, score double")
                 props = avail
-                src = e.filter(F.col("type") == d["label"]) if d.get(
-                    "label"
-                ) else e
-                idx = build(src, "edge_id")
+                idx = build(base.filter(F.col("type") == d["label"])
+                            if d.get("label") else base)
             else:
-                src, id_col = self._index_source(d["label"])
-                idx = build(src, id_col)
-            ic._impls[index] = idx
+                idx = build(base)
+            ic._impls[index] = (base, idx)
         return idx.search(qtext, k=k).select(
             F.col("doc_id").alias(out_col), F.col("score")
         )

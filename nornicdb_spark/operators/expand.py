@@ -132,17 +132,20 @@ def optional_expand(
 ) -> DataFrame:
     """OPTIONAL MATCH ``(src)-[r]->(dst)`` — left outer join; unmatched
     rows keep the lhs with nulls for rel/dst columns (reference
-    clauses.go:873-936 null-filling)."""
+    clauses.go:873-936 null-filling).
+
+    The pattern expands from the distinct bound ids (the source's, and
+    the destination's when the frame binds it) and joins back on them
+    alone, so duplicate lhs rows keep their multiplicity and NULLs in
+    other lhs columns do not drop a match."""
+    keys = [c for c in (f"{src_var}_id", f"{src_var}_id_enc",
+                        f"{dst_var}_id", f"{dst_var}_id_enc") if c in frame.columns]
     matched = expand(
-        graph, frame, src_var, rel_var, dst_var, rel_types, direction, dst_label
+        graph, frame.select(*keys).distinct(), src_var, rel_var, dst_var,
+        rel_types, direction, dst_label,
     )
-    new_cols = [c for c in matched.columns if c not in frame.columns]
-    lhs_keys = [c for c in frame.columns]
-    return frame.join(
-        matched.select(*lhs_keys, *new_cols),
-        on=lhs_keys,
-        how="left_outer",
-    )
+    new_cols = [c for c in matched.columns if c not in keys]
+    return frame.join(matched.select(*keys, *new_cols), on=keys, how="left_outer")
 
 
 def exists_pattern(

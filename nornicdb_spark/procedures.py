@@ -111,11 +111,12 @@ class IndexCatalog:
     than ad-hoc calls (reference call_index_mgmt.go; hnsw_config.go for
     the vector options surface). Batch engine: an index *definition* is
     metadata; the physical structure (BM25 postings, HNSW shards) is
-    built lazily on first query and memoized per index name."""
+    built lazily on first query and memoized per index name, with the
+    source frame it was built from."""
 
     def __init__(self):
         self._defs: dict[str, dict] = {}
-        self._impls: dict[str, object] = {}  # memoized physical structures
+        self._impls: dict[str, tuple] = {}  # name -> (source frame, structure)
 
     def create(self, name: str, kind: str, label: str, properties, **options):
         if name in self._defs:

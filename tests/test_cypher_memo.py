@@ -12,11 +12,11 @@ from __future__ import annotations
 import re
 
 import pytest
-from py4j.clientserver import ClientServerConnection
 
 from nornicdb_spark.cypher import compiler as C
 from nornicdb_spark.engine import Engine, _cached_parse
 from nornicdb_spark.operators import scope
+from nornicdb_spark.trace import CommandCounter
 from perfbench.graph_read import AGG, HOP1, HOP2, POINT
 
 
@@ -157,23 +157,13 @@ def test_warm_build_py4j_round_trips(spark, sf_dir):
     for _ in range(2):
         for q in limits:
             eng.cypher(q, params(q)).collect()
-    sent = ClientServerConnection.send_command
-    counted = []
-
-    def counting(self, command):
-        if not command.startswith("m\n"):
-            counted.append(command)
-        return sent(self, command)
-
     got = {}
     try:
-        ClientServerConnection.send_command = counting
         for q in limits:
-            counted.clear()
-            eng.cypher(q, params(q))
-            got[q] = len(counted)
+            with CommandCounter() as sent:
+                eng.cypher(q, params(q))
+            got[q] = sent.n
     finally:
-        ClientServerConnection.send_command = sent
         eng.close()
     assert all(n > 0 for n in got.values()), got
     over = {q: (n, limits[q]) for q, n in got.items() if n > limits[q]}

@@ -6,11 +6,11 @@ session store, reads observing writes.
 from __future__ import annotations
 
 import pytest
-from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
 
 from nornicdb_spark.engine import Engine
 from nornicdb_spark.queries import ORACLES
+from nornicdb_spark.trace import CommandCounter
 from perfbench.ingest import CREATE, DELETE, RELATE, SET
 from tests.oracle_harness import compare
 
@@ -504,14 +504,6 @@ def test_ingest_writes_jobs_and_py4j_commands(spark, eng):
     hand-written rewrites took here at sf0.001; the mutation rewrites
     measured 0/22, 8/531, 2/320 and 8/329."""
     sc = spark.sparkContext
-    sent = ClientServerConnection.send_command
-    counted = []
-
-    def counting(self, command):
-        if not command.startswith("m\n"):
-            counted.append(command)
-        return sent(self, command)
-
     bounds = {"create": (0, 22), "relate": (8, 628), "set": (2, 350), "delete": (8, 412)}
     got = {}
     for name, q, p in (
@@ -521,17 +513,12 @@ def test_ingest_writes_jobs_and_py4j_commands(spark, eng):
         ("delete", DELETE, {"id": 0}),
     ):
         sc.setJobGroup(name, name)
-        counted.clear()
-        ClientServerConnection.send_command = counting
-        try:
+        with CommandCounter() as sent:
             df = eng.cypher(q, p)
-        finally:
-            ClientServerConnection.send_command = sent
-        n_cmd = len(counted)
         df.collect()
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        got[name] = (len(sc.statusTracker().getJobIdsForGroup(name)), n_cmd)
+        got[name] = (len(sc.statusTracker().getJobIdsForGroup(name)), sent.n)
     over = {n: (c, bounds[n]) for n, c in got.items()
             if c[0] > bounds[n][0] or c[1] > bounds[n][1]}
     assert not over, over

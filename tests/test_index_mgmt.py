@@ -185,3 +185,27 @@ def test_fulltext_weighted_index_boosts(eng):
     ).collect()
     eng.cypher("CALL db.index.fulltext.drop('docs_weighted')").collect()
     assert len(rows) > 0
+
+
+def test_vector_index_reads_the_engines_store(eng):
+    eng.cypher("""MATCH (r:Region) WHERE r.r_regionkey < 2
+                  CALL db.create.setNodeVectorProperty(r, 'emb', [1.0, 2.0, 3.0])""")
+    one(eng.cypher("CALL db.index.vector.createNodeIndex('reg_emb', 'Region', 'emb', 3)"))
+    hits = eng.cypher(
+        "CALL db.index.vector.queryNodes('reg_emb', 2, [1.0, 2.0, 3.0])"
+    ).collect()
+    assert sorted(h.node for h in hits) == [0, 1]
+    assert all(h.score == pytest.approx(1.0) for h in hits)
+
+
+def test_fulltext_index_on_a_created_label_follows_writes(eng, spark, sf_dir):
+    eng.cypher("CREATE (:Tag {name: 'spark shuffle'}), (:Tag {name: 'graph'})")
+    one(eng.cypher("CALL db.index.fulltext.createNodeIndex('tag_ft', ['Tag'], ['name'])"))
+    query = "CALL db.index.fulltext.queryNodes('tag_ft', 'spark', 5)"
+    assert len(eng.cypher(query).collect()) == 1
+    eng.cypher("CREATE (:Tag {name: 'spark sql'})")
+    assert len(eng.cypher(query).collect()) == 2
+    # the index definition is shared through the catalog; the built index
+    # is not: an Engine whose store has no Tag nodes cannot query it
+    with pytest.raises(ValueError, match="no table for index label 'Tag'"):
+        Engine(spark, sf_dir).cypher(query)

@@ -10,13 +10,13 @@ import shutil
 
 import numpy as np
 import pytest
-from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
 
 from nornicdb_spark.catalog import Catalog
 from nornicdb_spark.operators.localframe import literal_df
 from nornicdb_spark.streaming.fulltext import MaintainedBM25Index
 from nornicdb_spark.streaming.ivf import MaintainedIVFIndex
+from nornicdb_spark.trace import CommandCounter
 from perfbench.checks import same_topk
 from perfbench.graph_read import cosine_scores
 
@@ -81,29 +81,6 @@ def test_search_matches_exact_cosine_over_live_vectors(spark, emb, vectors, ivf)
         assert same_topk(got, ref, K), (got, ref)
 
 
-def _count_sent():
-    """(start, stop, counted): counts py4j commands sent between start()
-    and stop(), GC release (``m``) commands excepted — their number
-    follows garbage-collection timing."""
-    sent = ClientServerConnection.send_command
-    counted = []
-
-    def counting(self, command):
-        if not command.startswith("m\n"):
-            counted.append(command)
-        return sent(self, command)
-
-    def start():
-        counted.clear()
-        ClientServerConnection.send_command = counting
-
-    def stop():
-        ClientServerConnection.send_command = sent
-        return len(counted)
-
-    return start, stop
-
-
 def _jobs(spark, group: str, build) -> int:
     """Spark jobs that ``build()`` starts, counted by job group once the
     status listener has caught up."""
@@ -137,14 +114,11 @@ def test_warm_build_py4j_round_trips_and_jobs(spark, emb, vectors, ivf):
     for build, _limit in builds.values():
         build().collect()
         build()
-    start, stop = _count_sent()
     got = {}
     for name, (build, _limit) in builds.items():
-        start()
-        try:
+        with CommandCounter() as sent:
             build()
-        finally:
-            got[name] = stop()
+        got[name] = sent.n
     assert all(n > 0 for n in got.values()), got
     over = {n: (c, builds[n][1]) for n, c in got.items() if c > builds[n][1]}
     assert not over, over

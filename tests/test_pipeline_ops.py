@@ -491,3 +491,23 @@ def test_weighted_sample_per_group_quota_and_determinism(spark):
         docs, n_per_group=5, weight_col="w", group_col="src"
     ).collect()
     assert {(r.src, r.doc_id) for r in again} == {(r.src, r.doc_id) for r in out}
+
+
+def test_optional_expand_rejoins_on_the_bound_id(graph):
+    """OPTIONAL MATCH keeps each lhs row once per match: duplicate lhs
+    rows stay duplicates, and a NULL in another lhs column does not drop
+    the match. Nation 8 has one supplier at sf0.001."""
+    from nornicdb_spark.operators.expand import match_nodes, optional_expand
+
+    nation = match_nodes(graph, "n", "Nation").filter(F.col("n_key") == 8)
+
+    def suppliers(frame):
+        return [r.s_key for r in optional_expand(
+            graph, frame, "n", "e", "s", rel_types=("FROM",), direction="in",
+            dst_label="Supplier",
+        ).collect()]
+
+    (only,) = suppliers(nation)
+    assert only is not None
+    assert suppliers(nation.unionByName(nation)) == [only, only]
+    assert suppliers(nation.withColumn("n_note", F.lit(None).cast("string"))) == [only]
